@@ -548,25 +548,6 @@ def q_sinusoidal(spark, sf_dir):
     )
 
 
-def q_trajectory_bboxes(spark, sf_dir):
-    from cuspatial_spark.operators import trajectory_bounding_boxes
-
-    pts = _points(spark, sf_dir)
-    return trajectory_bounding_boxes(pts, object_id="user_id")
-
-
-def q_trajectory_speeds(spark, sf_dir):
-    from cuspatial_spark.operators import trajectory_distances_and_speeds
-
-    pts = _points(spark, sf_dir).withColumnRenamed("ts", "timestamp")
-    out = trajectory_distances_and_speeds(pts, object_id="user_id")
-    return out.select(
-        "user_id",
-        F.round("distance", 5).alias("distance"),
-        F.round("speed", 5).alias("speed"),
-    )
-
-
 def q_hausdorff(spark, sf_dir):
     from cuspatial_spark.operators import directed_hausdorff_distance
 

@@ -695,7 +695,7 @@ class GeoSeries:
         point) pairs, boundary points excluded — the distributed
         filter+refine spatial join (plans.point_in_polygon_join with
         edge_exact for the reference's deterministic edge exclusion)."""
-        from .operators.binpreds import contains_allpairs
+        from .plans import point_in_polygon_join
 
         # rows missing on either side (e.g. introduced by align) simply
         # produce no pairs; indices refer to row positions of the
@@ -746,7 +746,7 @@ class GeoSeries:
         x_hi = float(max(xs.max(), polys.x.max())) + pad
         y_lo = float(min(ys.min(), polys.y.min())) - pad
         y_hi = float(max(ys.max(), polys.y.max())) + pad
-        out = contains_allpairs(
+        out = point_in_polygon_join(
             pts, polys,
             x="x", y="y",
             x_min=x_lo, x_max=x_hi, y_min=y_lo, y_max=y_hi,

@@ -28,28 +28,6 @@ import numpy as np
 from .floating import float_equal
 
 
-def _ring_segments(ring_offsets: np.ndarray, px: np.ndarray, py: np.ndarray):
-    """Per-vertex segment endpoints (a=current vertex, b=previous-in-ring,
-    wrapping so the first vertex pairs with the last).  Returns
-    (ax, ay, bx, by, seg_ring) flat arrays, one entry per vertex.
-    """
-    ring_offsets = np.asarray(ring_offsets, dtype=np.int64)
-    n_rings = len(ring_offsets) - 1
-    n_vert = int(ring_offsets[-1])
-    ring_len = np.diff(ring_offsets)
-    seg_ring = np.repeat(np.arange(n_rings, dtype=np.int64), ring_len)
-    # index of the previous vertex within the same ring (wrap to last)
-    idx = np.arange(n_vert, dtype=np.int64)
-    ring_start = np.repeat(ring_offsets[:-1], ring_len)
-    ring_end = np.repeat(ring_offsets[1:], ring_len)
-    prev = idx - 1
-    wrap = prev < ring_start
-    prev = np.where(wrap, ring_end - 1, prev)
-    ax, ay = px[idx], py[idx]
-    bx, by = px[prev], py[prev]
-    return ax, ay, bx, by, seg_ring
-
-
 def _pip_one_polygon(
     tx: np.ndarray,
     ty: np.ndarray,

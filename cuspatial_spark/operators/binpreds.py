@@ -430,17 +430,6 @@ def polygon_contains_properly_count(
     return df.mapInPandas(run, schema=schema)
 
 
-def contains_allpairs(points_df: DataFrame, polygons: PolygonArrays, **kw) -> DataFrame:
-    """GeoSeries.contains(other, allpairs=True) (geoseries.py:1009):
-    the semi-join-shaped output — (point, polygon_id) index pairs of
-    contains_properly over ALL pairs.  This IS the filter+refine
-    spatial join; delegates to plans.point_in_polygon_join (broadcast
-    tile filter + JVM ray-cast refine — the 100-TB path)."""
-    from ..plans import point_in_polygon_join
-
-    return point_in_polygon_join(points_df, polygons, **kw)
-
-
 def multipoint_geom_equals(
     df: DataFrame, lhs_offsets, lhs_x, lhs_y, rhs_offsets, rhs_x, rhs_y,
     lhs_idx: str = "lhs_index", rhs_idx: str = "rhs_index",

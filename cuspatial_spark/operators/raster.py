@@ -70,7 +70,6 @@ def rasterize_polygons(
     cell_size: float,
     max_depth: int = 7,
     tile_level: int = 2,
-    refine: str = "auto",
 ) -> DataFrame:
     """(i, j, polygon_id) for every grid cell whose center is inside a
     polygon (center-sampling rasterization, the GDAL default).  The
@@ -90,7 +89,6 @@ def rasterize_polygons(
         max_depth=max_depth,
         tile_level=tile_level,
         keep_columns=["i", "j"],
-        refine=refine,
     ).select("i", "j", "polygon_id")
 
 

@@ -31,10 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from ..functions.expressions import tile_expr
 from ..kernels.pip import point_in_polygon_pairs
-from ..kernels.zorder import z_order
-from .tile_join import assign_tiles
+from .tile_join import assign_tiles, tiles_covering_bboxes
 
 
 def polygon_tiles_df(
@@ -44,16 +42,12 @@ def polygon_tiles_df(
     scale: float,
     max_depth: int,
     tile_level: int,
-    id_col: str = "polygon_id",
-    ring_offsets_col: str = "ring_offsets",
     xy_col: str = "xy",
 ) -> DataFrame:
-    """Explode each polygon row to the tiles its bbox covers.
+    """Explode each polygon row to the tiles its bbox covers (the same
+    cover as the broadcast plan, ``tiles_covering_bboxes``).
     Vectorized per Arrow batch; output carries the geometry inline so
     the refine needs no second join."""
-    tile_scale = scale * (1 << (max_depth - tile_level))
-    n_cells = 1 << tile_level
-
     out_schema = StructType(
         [StructField("tile", LongType(), False)] + polygons_df.schema.fields
     )
@@ -63,23 +57,13 @@ def polygon_tiles_df(
             if len(pdf) == 0:
                 continue
             xy = pdf[xy_col]
-            minx = np.array([np.min(v[::2]) for v in xy])
-            maxx = np.array([np.max(v[::2]) for v in xy])
-            miny = np.array([np.min(v[1::2]) for v in xy])
-            maxy = np.array([np.max(v[1::2]) for v in xy])
-            tx0 = np.clip(((minx - x_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            tx1 = np.clip(((maxx - x_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            ty0 = np.clip(((miny - y_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            ty1 = np.clip(((maxy - y_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-            counts = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
-            row_idx = np.repeat(np.arange(len(pdf), dtype=np.int64), counts)
-            flat = np.arange(int(counts.sum()), dtype=np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)))
-            local = flat - np.repeat(starts[:-1], counts)
-            w = np.repeat(tx1 - tx0 + 1, counts)
-            cx = np.repeat(tx0, counts) + local % w
-            cy = np.repeat(ty0, counts) + local // w
-            tiles = z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
+            row_idx, tiles = tiles_covering_bboxes(
+                np.array([np.min(v[::2]) for v in xy]),
+                np.array([np.min(v[1::2]) for v in xy]),
+                np.array([np.max(v[::2]) for v in xy]),
+                np.array([np.max(v[1::2]) for v in xy]),
+                x_min, y_min, scale, max_depth, tile_level,
+            )
             out = pdf.iloc[row_idx].reset_index(drop=True)
             out.insert(0, "tile", tiles)
             yield out
@@ -118,8 +102,7 @@ def point_in_polygon_join_shuffle(
     keep = keep_columns if keep_columns is not None else list(points.columns)
 
     ptiles = polygon_tiles_df(
-        polygons_df, x_min, y_min, scale, max_depth, tile_level,
-        id_col, ring_offsets_col, xy_col,
+        polygons_df, x_min, y_min, scale, max_depth, tile_level, xy_col
     )
     pts = assign_tiles(points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level)
     need = list(dict.fromkeys(keep + [x, y]))
@@ -148,8 +131,7 @@ def point_in_polygon_join_shuffle(
     cand = pts.join(ptiles, on=join_keys, how="inner")
 
     out_schema = StructType(
-        [f for f in points.schema.fields if f.name in keep]
-        + [StructField(id_col, LongType(), False)]
+        [points.schema[c] for c in keep] + [StructField(id_col, LongType(), False)]
     )
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -107,11 +107,12 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     """The polygon layer as a one-row-per-polygon broadcastable
     DataFrame ``(__poly_idx, polygon_id, __segs array<struct>)``.
 
-    Measured (tools/threshold_bench.py): embedding the layer as a
-    LITERAL Catalyst map costs super-linear driver plan-build time
-    (16 s at 1k segments, 117 s at 10k); as ordinary broadcast-join
-    DATA the plan is constant-size, and the refine expression runs
-    identically JVM-side over the joined array column.
+    Measured (BASELINE.md "Refine-path threshold validation"):
+    embedding the layer as a LITERAL Catalyst map costs super-linear
+    driver plan-build time (16 s at 1k segments, 117 s at 10k); as
+    ordinary broadcast-join DATA the plan is constant-size, and the
+    refine expression runs identically JVM-side over the joined array
+    column.
     """
     po = np.asarray(polygons.part_offsets)
     ro = np.asarray(polygons.ring_offsets)
@@ -123,7 +124,8 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     n = int(ro[-1]) if len(ro) else 0
     idx = np.arange(n, dtype=np.int64)
     prev = idx - 1
-    prev[ro[:-1]] = ro[1:] - 1
+    nonempty = ro[1:] > ro[:-1]  # an empty ring has no first vertex
+    prev[ro[:-1][nonempty]] = ro[1:][nonempty] - 1
     ax, ay, bx, by = px[idx], py[idx], px[prev], py[prev]
     keep = (ax != bx) | (ay != by)
     rows = []
@@ -152,7 +154,7 @@ def _pip_jvm_hit_expr(segs, x, y):
     Difference vs the kernel: no ULP on-edge exclusion — a point lying
     exactly ON a polygon edge gets parity-dependent membership instead
     of a guaranteed False.  Measure-zero for real data; use
-    refine='kernel' when exact edge semantics matter.
+    edge_exact=True when exact edge semantics matter.
     """
     crossings = F.aggregate(
         segs,
@@ -183,18 +185,11 @@ def point_in_polygon_join(
     max_depth: int = 15,
     tile_level: int = 8,
     keep_columns: list[str] | None = None,
-    refine: str = "auto",
     edge_exact: bool = False,
 ) -> DataFrame:
     """Distributed containment join: returns the selected point columns
-    plus ``polygon_id`` for every (point, polygon) containment pair.
-
-    edge_exact=True forces the Arrow kernel refine, which keeps the
-    reference's ULP on-edge exclusion exactly (a point ON a polygon
-    edge is deterministically excluded); the JVM fast path gives such
-    points parity-dependent membership instead.  Golden-parity claims
-    must set this (or refine='kernel') so results never silently
-    depend on the plan choice.
+    (in ``keep_columns`` order) plus ``polygon_id`` for every (point,
+    polygon) containment pair.
 
     The polygon layer is broadcast (the common web-scale shape: points
     >> polygons).  Equivalent to the reference pipeline
@@ -202,14 +197,20 @@ def point_in_polygon_join(
     quadtree_point_in_polygon, with the tile grid playing the role of
     the quadtree's leaf quadrants.
 
-    refine: 'jvm' evaluates the ray-cast as a JVM higher-order
-    expression over a broadcast-joined segment table (no Python — the
-    fast path; measured 2-20x over the Arrow kernel at equal layer
-    size, tools/threshold_bench.py); 'kernel' uses the Arrow-batched
-    NumPy kernel (exact reference ULP edge semantics); 'auto' picks
-    'jvm' for layers with <= 200k segments (a broadcast-size bound —
-    plan size is constant since the segments became broadcast DATA
-    rather than literal expressions).
+    The refine follows from the semantics asked for:
+
+    - edge_exact=False (default): the ray cast runs as a JVM
+      higher-order expression over a broadcast-joined segment table —
+      no Python, no Arrow crossing.  A point lying exactly ON a polygon
+      edge gets parity-dependent membership.
+    - edge_exact=True: the Arrow-batched NumPy kernel, which keeps the
+      reference's ULP on-edge exclusion (such a point is
+      deterministically excluded).  Golden-parity claims set this.
+
+    Layer size does not pick the refine: the JVM ray cast was faster
+    than the kernel at every measured size, up to 250k segments
+    (BASELINE.md "Refine-path threshold validation").  Layers too large
+    to broadcast use ``point_in_polygon_join_shuffle``.
     """
     from ..geometry import require_single_part
 
@@ -217,10 +218,6 @@ def point_in_polygon_join(
     if scale is None:
         scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
     keep = keep_columns if keep_columns is not None else [c for c in points.columns]
-    if edge_exact:
-        refine = "kernel"
-    elif refine == "auto":
-        refine = "jvm" if len(polygons.x) <= 200_000 else "kernel"
 
     spark = points.sparkSession
     minx, miny, maxx, maxy = polygons.bounding_boxes()
@@ -241,7 +238,7 @@ def point_in_polygon_join(
         *need, "__poly_idx"
     )
 
-    if refine == "jvm":
+    if not edge_exact:
         seg_df = _polygon_segments_df(spark, polygons)
         hit = _pip_jvm_hit_expr(F.col("__segs"), F.col(x), F.col(y))
         return (
@@ -250,9 +247,7 @@ def point_in_polygon_join(
             .select(*keep, "polygon_id")
         )
 
-    out_schema = StructType(
-        [f for f in points.schema.fields if f.name in keep] + PIP_JOIN_SCHEMA_SUFFIX
-    )
+    out_schema = StructType([points.schema[c] for c in keep] + PIP_JOIN_SCHEMA_SUFFIX)
     poly_offsets, ring_offsets = polygons.part_offsets, polygons.ring_offsets
     px, py, pids = polygons.x, polygons.y, polygons.ids
 

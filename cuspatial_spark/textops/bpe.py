@@ -80,11 +80,6 @@ def _split_state(state: Column) -> Column:
     return F.filter(F.split(state, SEP), lambda x: F.length(x) > 0)
 
 
-def bpe_state_expr(text: Column, merges: list[tuple[str, str]]) -> Column:
-    """Array of fully-merged BPE tokens for one pre-token string."""
-    return _split_state(_apply_merges(_char_split(text), merges))
-
-
 def bpe_tokenize(
     docs: DataFrame,
     merges: list[tuple[str, str]],

@@ -136,35 +136,6 @@ def sample_mixture(
     )
 
 
-def mixture_rates_oracle_suffix_sql(
-    docs_cte: str,
-    domain_col: str,
-    alpha: float = 0.5,
-    total_rows: int | None = None,
-    max_rate: float = 10.0,
-) -> str:
-    """ANSI-SQL replay of :func:`mixture_rates` (row-count mass) over
-    a CTE named ``docs_cte``; emits a CTE chain ending in
-    ``mix_rates(domain, c, rate)``.  The round(…, 9) matches the
-    Spark side, absorbing last-ulp pow()/sum-order differences."""
-    budget = (
-        f"CAST({total_rows} AS DOUBLE)" if total_rows is not None else "t.n"
-    )
-    return f"""
-        mix_c AS (
-          SELECT {domain_col} AS domain, CAST(count(*) AS DOUBLE) AS c
-          FROM {docs_cte} GROUP BY {domain_col}
-        ),
-        mix_t AS (SELECT sum(c) AS n, sum(pow(c, {alpha})) AS z FROM mix_c),
-        mix_rates AS (
-          SELECT domain, c,
-                 round(least({budget} * pow(c, {alpha}) / t.z / c,
-                             {float(max_rate)}), 9) AS rate
-          FROM mix_c, mix_t t
-        )
-    """
-
-
 def mixture_oracle_suffix_sql(
     docs_cte: str,
     rates_cte: str,

@@ -6,6 +6,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 
@@ -216,10 +217,120 @@ class TestMultimodal:
             _decode_stub(b"")
 
 
+def _pip_polygon_df(spark, polys):
+    """A PolygonArrays layer as the shuffle join's per-feature rows
+    (polygon_id, polygon-local ring_offsets, interleaved xy)."""
+    rows = []
+    for p in range(len(polys)):
+        ro = polys.ring_offsets[polys.part_offsets[p]:polys.part_offsets[p + 1] + 1]
+        xy = np.empty(2 * (ro[-1] - ro[0]))
+        xy[::2] = polys.x[ro[0]:ro[-1]]
+        xy[1::2] = polys.y[ro[0]:ro[-1]]
+        rows.append((int(polys.ids[p]), (ro - ro[0]).tolist(), xy.tolist()))
+    return spark.createDataFrame(
+        rows, "polygon_id long, ring_offsets array<long>, xy array<double>"
+    )
+
+
+def _pip_all_paths(spark, pts, polys, keep, **kw):
+    """Collected rows and column order of every point-in-polygon join
+    path: broadcast JVM refine, broadcast exact kernel, and the shuffle
+    join unsalted, fully salted and salted on hot tiles only."""
+    from cuspatial_spark.plans import (
+        point_in_polygon_join,
+        point_in_polygon_join_shuffle,
+        tiles_covering_bboxes,
+    )
+
+    poly_df = _pip_polygon_df(spark, polys)
+    scale = max(kw["x_max"] - kw["x_min"], kw["y_max"] - kw["y_min"]) / (
+        (1 << kw["max_depth"]) + 2
+    )
+    _, hot = tiles_covering_bboxes(
+        *(b[:1] for b in polys.bounding_boxes()),
+        kw["x_min"], kw["y_min"], scale, kw["max_depth"], kw["tile_level"],
+    )
+    variants = {
+        "broadcast": point_in_polygon_join(pts, polys, keep_columns=keep, **kw),
+        "broadcast edge_exact": point_in_polygon_join(
+            pts, polys, keep_columns=keep, edge_exact=True, **kw
+        ),
+        "shuffle": point_in_polygon_join_shuffle(pts, poly_df, keep_columns=keep, **kw),
+        "shuffle salt=4": point_in_polygon_join_shuffle(
+            pts, poly_df, keep_columns=keep, salt=4, **kw
+        ),
+        "shuffle salt=4 hot_tiles": point_in_polygon_join_shuffle(
+            pts, poly_df, keep_columns=keep, salt=4, hot_tiles=hot.tolist(), **kw
+        ),
+    }
+    return {
+        name: (df.columns, sorted(tuple(r) for r in df.collect()))
+        for name, df in variants.items()
+    }
+
+
+def _assert_paths_equal(results):
+    (ref_name, ref), *rest = results.items()
+    for name, got in rest:
+        assert got[0] == ref[0], f"{name} columns {got[0]} != {ref_name} {ref[0]}"
+        assert got[1] == ref[1], f"{name} rows differ from {ref_name}"
+
+
+@st.composite
+def _pip_case(draw):
+    """Polygons with vertices at sorted angles around a centre, some
+    with a hole, the last one ending in an empty ring; points with two payload columns, none within 1e-6 of
+    any polygon edge (on-edge membership is where the two refines are
+    allowed to differ)."""
+    from cuspatial_spark.geometry import PolygonArrays
+
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    n_polys = draw(st.integers(1, 5))
+    ring_offsets, part_offsets, xs, ys = [0], [0], [], []
+    for p in range(n_polys):
+        cx, cy = rng.uniform(1.5, 6.5, 2)
+        rings = [rng.uniform(1.0, 1.5, draw(st.integers(3, 7)))]
+        if draw(st.booleans()):
+            rings.append(rng.uniform(0.2, 0.8, draw(st.integers(3, 5))))
+        for radii in rings:
+            ang = np.sort(rng.uniform(0, 2 * np.pi, len(radii)))
+            rx, ry = cx + radii * np.cos(ang), cy + radii * np.sin(ang)
+            xs += [*rx, rx[0]]
+            ys += [*ry, ry[0]]
+            ring_offsets.append(len(xs))
+        if p == n_polys - 1:
+            ring_offsets.append(len(xs))  # trailing empty ring
+        part_offsets.append(len(ring_offsets) - 1)
+    polys = PolygonArrays(
+        part_offsets, ring_offsets, xs, ys, ids=rng.permutation(100)[:n_polys]
+    )
+
+    n = draw(st.integers(1, 300))
+    x, y = rng.uniform(0, 8, n), rng.uniform(0, 8, n)
+    ax, ay = polys.x, polys.y
+    bx, by = np.roll(ax, 1), np.roll(ay, 1)  # only same-ring segments matter
+    first = np.zeros(len(ax), dtype=bool)
+    first[polys.ring_offsets[:-1][np.diff(polys.ring_offsets) > 0]] = True
+    ab = np.stack([bx - ax, by - ay])
+    t = np.clip(
+        ((x[:, None] - ax) * ab[0] + (y[:, None] - ay) * ab[1])
+        / np.maximum((ab**2).sum(0), 1e-300), 0, 1,
+    )
+    d = np.hypot(x[:, None] - (ax + t * ab[0]), y[:, None] - (ay + t * ab[1]))
+    off_edge = (d[:, ~first] > 1e-6).all(axis=1)
+    pdf = pd.DataFrame(
+        {"a": np.arange(n, dtype=np.int64), "b": [f"p{i}" for i in range(n)],
+         "x": x, "y": y}
+    )[off_edge]
+    return polys, pdf
+
+
 class TestShuffleJoin:
     def test_matches_broadcast_path(self, spark):
-        from cuspatial_spark.plans import point_in_polygon_join
-        from cuspatial_spark.plans.shuffle_join import point_in_polygon_join_shuffle
+        """Differential test: every point-in-polygon join path returns
+        the same collected rows, in the same column order, on the golden
+        fixture and on random layers with holes, a trailing empty ring
+        and reordered keep_columns."""
         from tests import golden_fixtures as G
         from cuspatial_spark.geometry import PolygonArrays
 
@@ -227,7 +338,6 @@ class TestShuffleJoin:
         xy[::2] = G.SMALL_POLY_XS
         xy[1::2] = G.SMALL_POLY_YS
         polys = PolygonArrays.from_polygons_xy(xy, G.SMALL_RING_OFFSETS, G.SMALL_POLY_OFFSETS)
-
         pts = spark.createDataFrame(
             pd.DataFrame(
                 {
@@ -237,29 +347,19 @@ class TestShuffleJoin:
                 }
             )
         ).repartition(4)
-
-        # polygon layer as a DataFrame (per-feature rows)
-        rows = []
-        ro = np.asarray(G.SMALL_RING_OFFSETS)
-        for p in range(4):
-            s, e = ro[p], ro[p + 1]
-            seg_xy = np.empty(2 * (e - s))
-            seg_xy[::2] = np.asarray(G.SMALL_POLY_XS)[s:e]
-            seg_xy[1::2] = np.asarray(G.SMALL_POLY_YS)[s:e]
-            rows.append((p, [0, int(e - s)], seg_xy.tolist()))
-        poly_df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["polygon_id", "ring_offsets", "xy"])
-        )
-
         kw = dict(x_min=0, x_max=8, y_min=0, y_max=8, max_depth=8, tile_level=3)
-        bcast = point_in_polygon_join(pts, polys, keep_columns=["point_id"], **kw).toPandas()
-        for salt in (0, 4):
-            shuf = point_in_polygon_join_shuffle(
-                pts, poly_df, keep_columns=["point_id"], salt=salt, **kw
-            ).toPandas()
-            assert set(zip(shuf["polygon_id"], shuf["point_id"])) == set(
-                zip(bcast["polygon_id"], bcast["point_id"])
-            )
+        golden = _pip_all_paths(spark, pts, polys, ["point_id"], **kw)
+        _assert_paths_equal(golden)
+        assert len(golden["broadcast"][1]) > 0
+
+        @given(_pip_case())
+        @settings(max_examples=6, deadline=None)
+        def check(case):
+            polys, pdf = case
+            pts = spark.createDataFrame(pdf, "a long, b string, x double, y double")
+            _assert_paths_equal(_pip_all_paths(spark, pts.repartition(3), polys, ["b", "a"], **kw))
+
+        check()
 
 
 class TestStreaming:

@@ -56,7 +56,7 @@ class TestFlagshipJoinPlan:
 
         out = point_in_polygon_join(
             pts, polys, x_min=0, x_max=8, y_min=0, y_max=8,
-            max_depth=12, tile_level=4, refine="jvm",
+            max_depth=12, tile_level=4,
         )
         plan = _plan(out)
         assert "BroadcastHashJoin" in plan
@@ -70,7 +70,7 @@ class TestFlagshipJoinPlan:
 
         out = point_in_polygon_join(
             pts, polys, x_min=0, x_max=8, y_min=0, y_max=8,
-            max_depth=12, tile_level=4, refine="kernel",
+            max_depth=12, tile_level=4, edge_exact=True,
         )
         plan = _plan(out)
         assert plan.count("MapInPandas") == 1

@@ -239,7 +239,6 @@ class TestTileJoinPlanShape:
             spark.createDataFrame(pdf), small_polygons,
             x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0,
             max_depth=10, tile_level=4, keep_columns=["point_id"],
-            refine="jvm",
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("BroadcastHashJoin") == 2  # tile filter + segs
@@ -316,8 +315,7 @@ class TestDistributedTileJoin:
     def test_edge_exact_forces_kernel_semantics(self, spark):
         """edge_exact=True pins the Arrow-kernel refine: a point lying
         exactly ON a polygon edge is deterministically excluded (the
-        reference's ULP on-edge semantics), regardless of the
-        layer-size-based jvm/kernel auto choice."""
+        reference's ULP on-edge semantics)."""
         square = PolygonArrays([0, 1], [0, 5],
                                [0.0, 4.0, 4.0, 0.0, 0.0],
                                [0.0, 0.0, 4.0, 4.0, 0.0])
@@ -332,6 +330,22 @@ class TestDistributedTileJoin:
             max_depth=8, tile_level=2, edge_exact=True,
         ).toPandas()
         assert set(got["point_id"]) == {1}
+
+    def test_trailing_empty_ring(self, spark):
+        """A layer whose last ring is empty (no first vertex to pair
+        with the ring's last): both refines find the same pair."""
+        square = PolygonArrays([0, 2], [0, 5, 5],
+                               [0.0, 4.0, 4.0, 0.0, 0.0],
+                               [0.0, 0.0, 4.0, 4.0, 0.0])
+        pts = spark.createDataFrame(pd.DataFrame({
+            "point_id": [0, 1], "x": [2.0, 9.0], "y": [2.0, 9.0],
+        }))
+        for edge_exact in (False, True):
+            got = point_in_polygon_join(
+                pts, square, x_min=0, x_max=10, y_min=0, y_max=10,
+                max_depth=8, tile_level=2, edge_exact=edge_exact,
+            ).toPandas()
+            assert list(zip(got["point_id"], got["polygon_id"])) == [(0, 0)]
 
     @pytest.mark.parametrize("refine", ["jvm", "kernel"])
     def test_nearest_join_progressive_equals_single_shot(self, spark, refine):
