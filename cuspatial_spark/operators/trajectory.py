@@ -7,6 +7,8 @@ aggregation (map-side combine) comes free from Catalyst.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -39,16 +41,12 @@ def derive_trajectories(
         # the totals pass and the window pass
         .localCheckpoint(eager=False)
     )
-    totals = sorted(
-        (r["__pid"], r["t"])
-        for r in counts.groupBy("__pid").agg(F.sum("n").alias("t")).collect()
+    totals = counts.groupBy("__pid").agg(F.sum("n").alias("t")).toArrow().sort_by("__pid")
+    t = totals["t"].to_numpy()
+    base_df = df.sparkSession.createDataFrame(
+        pa.table({"__pid": totals["__pid"], "__base": np.cumsum(t) - t}),
+        schema="__pid: int, __base: long",
     )
-    bases, acc = [], 0
-    for pid, t in totals:
-        bases.append((pid, acc))
-        acc += int(t)
-    spark = df.sparkSession
-    base_df = spark.createDataFrame(bases, schema="__pid: int, __base: long")
     w = (
         Window.partitionBy("__pid")
         .orderBy(object_id)

@@ -29,6 +29,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -103,6 +104,26 @@ PIP_JOIN_SCHEMA_SUFFIX = [StructField("polygon_id", LongType(), False)]
 SEGS_SCHEMA = "array<struct<ax:double,ay:double,bx:double,by:double>>"
 
 
+def _segment_lists(offsets, ax, ay, bx, by) -> pa.ListArray:
+    """One ``__segs`` list per ``offsets`` range of the flat float64
+    segment arrays."""
+    segs = pa.StructArray.from_arrays(
+        [pa.array(c) for c in (ax, ay, bx, by)], names=["ax", "ay", "bx", "by"]
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), segs)
+
+
+def _segments_df(spark: SparkSession, idx_col: str, id_col: str, ids, segs) -> DataFrame:
+    """``(idx_col, id_col, __segs)``, one row per geometry, as an
+    Arrow-built local relation: building it runs no Spark job and no
+    per-row Python."""
+    return spark.createDataFrame(
+        pa.table([np.arange(len(ids), dtype=np.int64), ids, segs],
+                 names=[idx_col, id_col, "__segs"]),
+        schema=f"{idx_col} long, {id_col} long, __segs {SEGS_SCHEMA}",
+    )
+
+
 def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFrame:
     """The polygon layer as a one-row-per-polygon broadcastable
     DataFrame ``(__poly_idx, polygon_id, __segs array<struct>)``.
@@ -112,36 +133,24 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     driver plan-build time (16 s at 1k segments, 117 s at 10k); as
     ordinary broadcast-join DATA the plan is constant-size, and the
     refine expression runs identically JVM-side over the joined array
-    column.
+    column.  The table is an Arrow-built local relation
+    (``_segments_df``): no Spark job, no per-row Python.
     """
-    po = np.asarray(polygons.part_offsets)
-    ro = np.asarray(polygons.ring_offsets)
+    po, ro = polygons.part_offsets, polygons.ring_offsets
     px = np.asarray(polygons.x, dtype=np.float64)
     py = np.asarray(polygons.y, dtype=np.float64)
     # vectorized ring-closing predecessor: vertex i pairs with i-1,
     # except each ring's first vertex, which pairs with the ring's
     # last; degenerate (zero-length) segments are masked out
-    n = int(ro[-1]) if len(ro) else 0
-    idx = np.arange(n, dtype=np.int64)
+    idx = np.arange(int(ro[-1]), dtype=np.int64)
     prev = idx - 1
     nonempty = ro[1:] > ro[:-1]  # an empty ring has no first vertex
     prev[ro[:-1][nonempty]] = ro[1:][nonempty] - 1
     ax, ay, bx, by = px[idx], py[idx], px[prev], py[prev]
     keep = (ax != bx) | (ay != by)
-    rows = []
-    for p in range(len(polygons)):
-        s, e = int(ro[po[p]]), int(ro[po[p + 1]])
-        m = keep[s:e]
-        segs = list(
-            zip(
-                ax[s:e][m].tolist(), ay[s:e][m].tolist(),
-                bx[s:e][m].tolist(), by[s:e][m].tolist(),
-            )
-        )
-        rows.append((int(p), int(polygons.ids[p]), segs))
-    return spark.createDataFrame(
-        rows, schema=f"__poly_idx long, polygon_id long, __segs {SEGS_SCHEMA}"
-    )
+    kept_before = np.concatenate(([0], np.cumsum(keep)))
+    segs = _segment_lists(kept_before[ro[po]], ax[keep], ay[keep], bx[keep], by[keep])
+    return _segments_df(spark, "__poly_idx", "polygon_id", polygons.ids, segs)
 
 
 def _pip_jvm_hit_expr(segs, x, y):
@@ -220,14 +229,10 @@ def point_in_polygon_join(
     keep = keep_columns if keep_columns is not None else [c for c in points.columns]
 
     spark = points.sparkSession
-    minx, miny, maxx, maxy = polygons.bounding_boxes()
     bbox_idx, tiles = tiles_covering_bboxes(
-        minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
+        *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
     )
-    poly_tiles = spark.createDataFrame(
-        pd.DataFrame({"tile": tiles, "__poly_idx": bbox_idx}),
-        schema="tile: long, __poly_idx: long",
-    )
+    poly_tiles = spark.createDataFrame(pa.table({"tile": tiles, "__poly_idx": bbox_idx}))
 
     pts = assign_tiles(
         points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
@@ -267,27 +272,48 @@ def point_in_polygon_join(
     return candidates.mapInPandas(refine_fn, schema=out_schema)
 
 
-def _linestring_segments_df(
-    spark: SparkSession, linestrings: LinestringArrays
-) -> DataFrame:
-    """Consecutive-vertex segments per linestring as a broadcastable
-    DataFrame ``(__line_idx, linestring_id, __segs)`` — data, not
-    literal expressions (see _polygon_segments_df)."""
-    po = np.asarray(linestrings.part_offsets)
+def _linestring_segment_lists(linestrings: LinestringArrays) -> pa.ListArray:
+    """Consecutive-vertex segments, one ``__segs`` list per linestring
+    (empty for a linestring of fewer than two vertices)."""
+    po = linestrings.part_offsets
     lx = np.asarray(linestrings.x, dtype=np.float64)
     ly = np.asarray(linestrings.y, dtype=np.float64)
-    rows = []
-    for li in range(len(linestrings)):
-        s, e = int(po[li]), int(po[li + 1])
-        segs = list(
-            zip(
-                lx[s : e - 1].tolist(), ly[s : e - 1].tolist(),
-                lx[s + 1 : e].tolist(), ly[s + 1 : e].tolist(),
-            )
-        )
-        rows.append((int(li), int(linestrings.ids[li]), segs))
+    # vertex i pairs with i+1 unless i+1 starts the next linestring
+    starts = np.zeros(len(lx) + 1, dtype=bool)
+    starts[po] = True
+    a = np.flatnonzero(~starts[1:-1])
+    offsets = np.concatenate(([0], np.cumsum(np.maximum(np.diff(po) - 1, 0))))
+    return _segment_lists(offsets, lx[a], ly[a], lx[a + 1], ly[a + 1])
+
+
+def _linestring_segments_df(spark: SparkSession, linestrings: LinestringArrays) -> DataFrame:
+    """Consecutive-vertex segments per linestring as a broadcastable
+    DataFrame ``(__line_idx, linestring_id, __segs)`` — data, not
+    literal expressions, built as an Arrow local relation like
+    _polygon_segments_df."""
+    return _segments_df(
+        spark, "__line_idx", "linestring_id", linestrings.ids,
+        _linestring_segment_lists(linestrings),
+    )
+
+
+def _tile_lines_df(
+    spark: SparkSession, linestrings: LinestringArrays, bbox_idx, cover_tiles
+) -> DataFrame:
+    """``(tile, __lines)``, one row per covered tile: the
+    ``(linestring_id, __segs)`` of each linestring covering it, in
+    cover order — an Arrow-built local relation."""
+    order = np.argsort(cover_tiles, kind="stable")
+    tiles, starts = np.unique(cover_tiles[order], return_index=True)
+    line = bbox_idx[order]
+    segs = _linestring_segment_lists(linestrings).take(line)
+    lines = pa.StructArray.from_arrays(
+        [pa.array(linestrings.ids[line]), segs], names=["linestring_id", "__segs"]
+    )
+    offsets = pa.array(np.append(starts, len(line)), pa.int32())
     return spark.createDataFrame(
-        rows, schema=f"__line_idx long, linestring_id long, __segs {SEGS_SCHEMA}"
+        pa.table({"tile": tiles, "__lines": pa.ListArray.from_arrays(offsets, lines)}),
+        schema=f"tile long, __lines array<struct<linestring_id:bigint,__segs:{SEGS_SCHEMA}>>",
     )
 
 
@@ -371,17 +397,24 @@ def point_to_nearest_linestring_join(
     keep = keep_columns if keep_columns is not None else [c for c in points.columns]
     if refine == "auto":
         refine = "jvm" if len(linestrings.x) <= 200_000 else "kernel"
+    INF, DMAX = float("inf"), float(np.finfo(np.float64).max)
+    # a point with a null or non-finite coordinate has no nearest line
+    # (null would key into the grid's last column, NaN and inf give
+    # made-up distances); NaN sorts above inf, so one test per axis
+    points = points.where((F.abs(F.col(x)) < INF) & (F.abs(F.col(y)) < INF))
 
     spark = points.sparkSession
     need = list(dict.fromkeys(keep + [x, y]))
-    INF = float("inf")
+
+    def cover(radius):
+        """(line index, tile) per tile a bbox grown by radius covers."""
+        return tiles_covering_bboxes(
+            *linestrings.bounding_boxes(radius), x_min, y_min, scale, max_depth, tile_level
+        )
 
     tile_size = scale * (1 << (max_depth - tile_level))
     if progressive == "auto":
-        minx, miny, maxx, maxy = linestrings.bounding_boxes(expansion_radius)
-        _, full_tiles = tiles_covering_bboxes(
-            minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
-        )
+        _, full_tiles = cover(expansion_radius)
         lines_per_tile = len(full_tiles) / float(1 << (2 * tile_level))
         progressive = lines_per_tile > progressive_threshold
     if progressive and expansion_radius > tile_size:
@@ -394,7 +427,6 @@ def point_to_nearest_linestring_join(
     else:
         radii = [float(expansion_radius)]
 
-    seg_df = None
     part_offsets, lx, ly, lids = (
         linestrings.part_offsets, linestrings.x, linestrings.y, linestrings.ids,
     )
@@ -413,19 +445,14 @@ def point_to_nearest_linestring_join(
         # Bounded by the same 200k broadcast-segment limit as the
         # segment table; falls through to the join shape when the
         # per-tile duplication would exceed it.
-        po = np.asarray(part_offsets)
-        seg_counts = np.maximum(po[1:] - po[:-1] - 1, 0)
-        minx, miny, maxx, maxy = linestrings.bounding_boxes(radii[0])
-        bbox_idx, cover_tiles = tiles_covering_bboxes(
-            minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
-        )
+        seg_counts = np.maximum(np.diff(part_offsets) - 1, 0)
+        bbox_idx, cover_tiles = cover(radii[0])
         n_tiles = 1 << (2 * tile_level)
         full_cover = (
-            len(set(cover_tiles.tolist())) == n_tiles
+            len(np.unique(cover_tiles)) == n_tiles
             and len(cover_tiles) == n_tiles * len(linestrings)
         )
-        lids_arr = np.asarray(lids)
-        if full_cover and np.all(np.diff(lids_arr) > 0):
+        if full_cover and np.all(np.diff(lids) > 0):
             # r6 full-cover kernel path: when EVERY tile is covered by
             # EVERY line (small layer, radius >= AOI span) the tile
             # filter is vacuous — every point is reachable and its
@@ -442,9 +469,8 @@ def point_to_nearest_linestring_join(
             # interpreted per-element lambda evaluation and the
             # literal form exceeds JIT method limits.
             nl = len(linestrings)
-            po_k, lx_k, ly_k = np.asarray(part_offsets), np.asarray(lx), np.asarray(ly)
             out_schema = StructType(
-                [f for f in points.schema.fields if f.name in keep]
+                [points.schema[c] for c in keep]
                 + [
                     StructField("linestring_id", LongType(), False),
                     StructField("distance", DoubleType(), False),
@@ -460,53 +486,28 @@ def point_to_nearest_linestring_join(
                     idx = np.tile(np.arange(nl), n)
                     d = point_linestring_distance_pairs(
                         pdf[x].to_numpy()[row], pdf[y].to_numpy()[row],
-                        idx, po_k, lx_k, ly_k,
+                        idx, part_offsets, lx, ly,
                     ).reshape(n, nl)
                     am = np.argmin(d, axis=1)
                     out = pdf[keep].copy()
-                    out["linestring_id"] = lids_arr[am].astype(np.int64)
+                    out["linestring_id"] = lids[am]
                     out["distance"] = d[np.arange(n), am]
                     yield out
 
             return points.select(*need).mapInPandas(dense_fn, schema=out_schema)
         if seg_counts[bbox_idx].sum() <= 200_000:
-            lxa = np.asarray(lx, dtype=np.float64)
-            lya = np.asarray(ly, dtype=np.float64)
-            seg_lists = [
-                list(
-                    zip(
-                        lxa[int(po[li]) : int(po[li + 1]) - 1].tolist(),
-                        lya[int(po[li]) : int(po[li + 1]) - 1].tolist(),
-                        lxa[int(po[li]) + 1 : int(po[li + 1])].tolist(),
-                        lya[int(po[li]) + 1 : int(po[li + 1])].tolist(),
-                    )
-                )
-                for li in range(len(linestrings))
-            ]
-            by_tile: dict[int, list] = {}
-            for li, tl in zip(bbox_idx, cover_tiles):
-                by_tile.setdefault(int(tl), []).append(
-                    (int(lids[li]), seg_lists[li])
-                )
-            tile_lines = spark.createDataFrame(
-                [(t, ls) for t, ls in by_tile.items()],
-                schema=(
-                    "tile long, __lines array<struct<"
-                    f"linestring_id:bigint,__segs:{SEGS_SCHEMA}>>"
-                ),
-            )
+            tile_lines = _tile_lines_df(spark, linestrings, bbox_idx, cover_tiles)
             tiled = assign_tiles(
                 points, x, y, x_min, x_max, y_min, y_max, scale, max_depth,
                 tile_level,
             )
-            dmax = float(np.finfo(np.float64).max)
             scored = F.transform(
                 F.col("__lines"),
                 lambda l: F.struct(
                     F.sqrt(
                         F.aggregate(
                             l["__segs"],
-                            F.lit(dmax),
+                            F.lit(DMAX),
                             lambda acc, s: F.least(
                                 acc,
                                 _point_segment_d2_expr(F.col(x), F.col(y), s),
@@ -536,14 +537,8 @@ def point_to_nearest_linestring_join(
         can flow to the next round; the final/single round uses inner
         joins grouped on keep — the cheaper plan, identical to the
         single-shot join (measured ~40% faster than the carry shape)."""
-        minx, miny, maxx, maxy = linestrings.bounding_boxes(radius)
-        bbox_idx, tiles = tiles_covering_bboxes(
-            minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
-        )
-        line_tiles = spark.createDataFrame(
-            pd.DataFrame({"tile": tiles, "__line_idx": bbox_idx}),
-            schema="tile: long, __line_idx: long",
-        )
+        bbox_idx, tiles = cover(radius)
+        line_tiles = spark.createDataFrame(pa.table({"tile": tiles, "__line_idx": bbox_idx}))
         tiled = assign_tiles(
             pts_df, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
         )
@@ -554,10 +549,9 @@ def point_to_nearest_linestring_join(
         )
 
         if refine == "jvm":
-            dmax = float(np.finfo(np.float64).max)
             d2 = F.aggregate(
                 F.col("__segs"),
-                F.lit(dmax),
+                F.lit(DMAX),
                 lambda acc, s: F.least(acc, _point_segment_d2_expr(F.col(x), F.col(y), s)),
             )
             joined = candidates.join(F.broadcast(seg_df), on="__line_idx", how=how)

@@ -74,9 +74,7 @@ def mixture_rates(
     ).cast("double")
     counts = docs.groupBy(F.col(domain_col).alias("domain")).agg(mass.alias("c"))
     if materialize:
-        schema = counts.schema
-        rows = counts.collect()
-        counts = docs.sparkSession.createDataFrame(rows, schema=schema)
+        counts = docs.sparkSession.createDataFrame(counts.toArrow(), counts.schema)
     tot = counts.agg(
         F.sum("c").alias("n"), F.sum(F.pow("c", F.lit(alpha))).alias("z")
     ).collect()[0]

@@ -20,6 +20,8 @@ range shuffle plus a ~thousand-row driver combine.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -82,17 +84,13 @@ def pack_sequences(
         # window pass (same contract as derive_trajectories)
         .localCheckpoint(eager=False)
     )
-    totals = sorted(
-        (r["__pid"], r["t"] or 0)
-        for r in counts.groupBy("__pid").agg(F.sum("__w").alias("t")).collect()
+    totals = (
+        counts.groupBy("__pid").agg(F.sum("__w").alias("t")).toArrow().sort_by("__pid")
     )
-    bases, acc = [], 0
-    for pid, t in totals:
-        bases.append((pid, acc))
-        acc += int(t)
-    spark = docs.sparkSession
-    base_df = spark.createDataFrame(
-        bases or [(0, 0)], schema="__pid: int, __base: long"
+    t = totals["t"].to_numpy()
+    base_df = docs.sparkSession.createDataFrame(
+        pa.table({"__pid": totals["__pid"], "__base": np.cumsum(t) - t}),
+        schema="__pid: int, __base: long",
     )
     w = (
         Window.partitionBy("__pid")

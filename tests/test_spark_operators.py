@@ -347,6 +347,36 @@ class TestDistributedTileJoin:
             ).toPandas()
             assert list(zip(got["point_id"], got["polygon_id"])) == [(0, 0)]
 
+    def test_nearest_join_non_finite_point_every_form(self, spark):
+        """A point with a null coordinate (pandas NaN crosses Arrow as
+        null) or an infinite one has no nearest linestring: every form
+        of the join drops it and returns the same rows, with the columns
+        in ``keep_columns`` order."""
+        lines = LinestringArrays([0, 2, 4], [0.0, 8.0, 0.0, 8.0], [0.5, 0.5, 6.0, 6.0])
+        pts = spark.createDataFrame(pd.DataFrame({
+            "a": [0, 1, 2, 3], "b": [10, 11, 12, 13],
+            "x": [1.0, np.nan, 5.0, 7.0], "y": [1.0, 2.0, 3.0, np.inf],
+        }))
+        aoi = dict(x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0, max_depth=8, tile_level=1)
+        forms = {
+            "dense jvm": dict(expansion_radius=1.0),
+            "kernel refine": dict(expansion_radius=1.0, refine="kernel"),
+            "full cover": dict(expansion_radius=100.0),
+            "progressive": dict(expansion_radius=100.0, progressive=True),
+        }
+        for keep in (None, ["b", "a"]):
+            for name, form in forms.items():
+                got = point_to_nearest_linestring_join(
+                    pts, lines, keep_columns=keep, **aoi, **form
+                ).toPandas()
+                cols = keep or ["a", "b", "x", "y"]
+                assert list(got.columns) == [*cols, "linestring_id", "distance"], name
+                got = got.sort_values("a")
+                assert list(got["a"]) == [0, 2], name
+                assert list(got["b"]) == [10, 12], name
+                assert list(got["linestring_id"]) == [0, 0], name
+                assert list(got["distance"]) == [0.5, 2.5], name
+
     @pytest.mark.parametrize("refine", ["jvm", "kernel"])
     def test_nearest_join_progressive_equals_single_shot(self, spark, refine):
         # Dense layer (64 linestrings over a 8x8 AOI) with an AOI-sized
