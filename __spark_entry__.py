@@ -441,18 +441,19 @@ def q_nearest_linestring(spark, sf_dir):
 
 
 def q_nearest_progressive(spark, sf_dir):
-    """nearest_linestring with progressive radius widening FORCED
-    (plans/tile_join.py progressive rounds — the 100-TB candidate
-    bound).  Widening is semantics-preserving: a point resolves in
-    round r only when its round-minimum is provably global, so the
-    output must hash-match the single-shot plan's oracle exactly."""
+    """nearest_linestring under the radius widening the join always
+    runs (plans/tile_join.py: inside each Arrow batch, rounds at tile,
+    2*tile, ... up to the expansion radius over the still-unresolved
+    points — the 100-TB candidate bound).  Widening is
+    semantics-preserving: a point resolves in round r only when its
+    round minimum is provably global, so the output must hash-match
+    the single-shot oracle exactly."""
     from cuspatial_spark.plans import point_to_nearest_linestring_join
 
     pts = _points(spark, sf_dir).select("event_id", "x", "y")
     return point_to_nearest_linestring_join(
         pts, _linestrings(), expansion_radius=16.0, **AOI,
         max_depth=MAX_DEPTH, tile_level=3, keep_columns=["event_id"],
-        progressive=True,
     ).select("event_id", "linestring_id", "distance")
 
 

@@ -338,8 +338,9 @@ def geodesic_knn_join(
         raise ValueError(
             f"initial_radius_km must be a number or 'auto': {initial_radius_km!r}"
         )
-    n_data = None
-    if dense_threshold > 0:
+    # the dense/progressive choice needs only "more than the threshold
+    # or not": a limited count stops reading the data side there
+    if dense_threshold > 0 and data.limit(dense_threshold + 1).count() <= dense_threshold:
         # small data side -> dense path: ZERO shuffles, no rounds.  The
         # whole data layer collapses to one collect_list row that
         # broadcasts into a nested-loop join with exactly one build row,
@@ -349,17 +350,13 @@ def geodesic_knn_join(
         # round, a 27x fan-out broadcast, a full candidate-pair shuffle
         # through two window functions, a localCheckpoint and a
         # driver-synced count — all to produce the same exact kNN.
-        n_data = max(data.count(), 1)
-        if n_data <= dense_threshold:
-            if dense_backend == "arrow":
-                return _dense_knn_arrow(
-                    data, queries, k, lon, lat, id_col, query_id_col,
-                    earth_radius_km,
-                )
-            return _dense_knn(
-                data, queries, k, lon, lat, id_col, query_id_col,
-                earth_radius_km,
+        if dense_backend == "arrow":
+            return _dense_knn_arrow(
+                data, queries, k, lon, lat, id_col, query_id_col, earth_radius_km,
             )
+        return _dense_knn(
+            data, queries, k, lon, lat, id_col, query_id_col, earth_radius_km,
+        )
     if initial_radius_km == "auto":
         # density heuristic: n uniform points on the sphere -> the
         # expected kth-NN angular radius satisfies
@@ -367,17 +364,13 @@ def geodesic_knn_join(
         # ~1.5x past it so the typical query resolves in round ONE and
         # only sparse regions pay a second round; each extra round is a
         # full driver-synced join pass, so overshooting slightly is far
-        # cheaper than undershooting.  One count() job on the data side
-        # (at scale: table statistics give this for free).
-        if n_data is None:
-            n_data = max(data.count(), 1)
+        # cheaper than undershooting.  The one full count() job on the
+        # data side runs only here (at scale: table statistics give
+        # this for free).
+        n_data = max(data.count(), 1)
         frac = min(2.0 * k / n_data, 2.0)
         t = math.acos(max(1.0 - frac, -1.0))
         initial_radius_km = max(1.5 * t * earth_radius_km, 1.0)
-    elif isinstance(initial_radius_km, str):
-        raise ValueError(
-            f"initial_radius_km must be a number or 'auto': {initial_radius_km!r}"
-        )
     qcols = queries.select(
         F.col(query_id_col), F.col(lon).alias("__qlon"), F.col(lat).alias("__qlat")
     )

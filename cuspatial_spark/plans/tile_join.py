@@ -21,6 +21,11 @@ phase's job, done as an equi-join).
 At 100 TB the only wide operation is the optional shuffle join; the
 broadcast path is shuffle-free: scan -> codegen filter/keys ->
 broadcast join -> mapInPandas -> sink.
+
+The nearest-linestring join needs no equi-join at all: its tile covers
+ride in the closure of ONE Arrow crossing (scan -> AOI filter ->
+mapInPandas), whose kernel maps each point to its tile, looks up its
+candidate lines and widens the radius inside the batch.
 """
 
 from __future__ import annotations
@@ -101,29 +106,6 @@ def tiles_covering_bboxes(
 PIP_JOIN_SCHEMA_SUFFIX = [StructField("polygon_id", LongType(), False)]
 
 
-SEGS_SCHEMA = "array<struct<ax:double,ay:double,bx:double,by:double>>"
-
-
-def _segment_lists(offsets, ax, ay, bx, by) -> pa.ListArray:
-    """One ``__segs`` list per ``offsets`` range of the flat float64
-    segment arrays."""
-    segs = pa.StructArray.from_arrays(
-        [pa.array(c) for c in (ax, ay, bx, by)], names=["ax", "ay", "bx", "by"]
-    )
-    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), segs)
-
-
-def _segments_df(spark: SparkSession, idx_col: str, id_col: str, ids, segs) -> DataFrame:
-    """``(idx_col, id_col, __segs)``, one row per geometry, as an
-    Arrow-built local relation: building it runs no Spark job and no
-    per-row Python."""
-    return spark.createDataFrame(
-        pa.table([np.arange(len(ids), dtype=np.int64), ids, segs],
-                 names=[idx_col, id_col, "__segs"]),
-        schema=f"{idx_col} long, {id_col} long, __segs {SEGS_SCHEMA}",
-    )
-
-
 def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFrame:
     """The polygon layer as a one-row-per-polygon broadcastable
     DataFrame ``(__poly_idx, polygon_id, __segs array<struct>)``.
@@ -133,8 +115,8 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     driver plan-build time (16 s at 1k segments, 117 s at 10k); as
     ordinary broadcast-join DATA the plan is constant-size, and the
     refine expression runs identically JVM-side over the joined array
-    column.  The table is an Arrow-built local relation
-    (``_segments_df``): no Spark job, no per-row Python.
+    column.  The table is an Arrow-built local relation: building it
+    runs no Spark job and no per-row Python.
     """
     po, ro = polygons.part_offsets, polygons.ring_offsets
     px = np.asarray(polygons.x, dtype=np.float64)
@@ -149,8 +131,16 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     ax, ay, bx, by = px[idx], py[idx], px[prev], py[prev]
     keep = (ax != bx) | (ay != by)
     kept_before = np.concatenate(([0], np.cumsum(keep)))
-    segs = _segment_lists(kept_before[ro[po]], ax[keep], ay[keep], bx[keep], by[keep])
-    return _segments_df(spark, "__poly_idx", "polygon_id", polygons.ids, segs)
+    segs = pa.StructArray.from_arrays(
+        [pa.array(c[keep]) for c in (ax, ay, bx, by)], names=["ax", "ay", "bx", "by"]
+    )
+    seg_lists = pa.ListArray.from_arrays(pa.array(kept_before[ro[po]], pa.int32()), segs)
+    return spark.createDataFrame(
+        pa.table([np.arange(len(polygons.ids), dtype=np.int64), polygons.ids, seg_lists],
+                 names=["__poly_idx", "polygon_id", "__segs"]),
+        schema="__poly_idx long, polygon_id long, "
+        "__segs array<struct<ax:double,ay:double,bx:double,by:double>>",
+    )
 
 
 def _pip_jvm_hit_expr(segs, x, y):
@@ -272,68 +262,10 @@ def point_in_polygon_join(
     return candidates.mapInPandas(refine_fn, schema=out_schema)
 
 
-def _linestring_segment_lists(linestrings: LinestringArrays) -> pa.ListArray:
-    """Consecutive-vertex segments, one ``__segs`` list per linestring
-    (empty for a linestring of fewer than two vertices)."""
-    po = linestrings.part_offsets
-    lx = np.asarray(linestrings.x, dtype=np.float64)
-    ly = np.asarray(linestrings.y, dtype=np.float64)
-    # vertex i pairs with i+1 unless i+1 starts the next linestring
-    starts = np.zeros(len(lx) + 1, dtype=bool)
-    starts[po] = True
-    a = np.flatnonzero(~starts[1:-1])
-    offsets = np.concatenate(([0], np.cumsum(np.maximum(np.diff(po) - 1, 0))))
-    return _segment_lists(offsets, lx[a], ly[a], lx[a + 1], ly[a + 1])
-
-
-def _linestring_segments_df(spark: SparkSession, linestrings: LinestringArrays) -> DataFrame:
-    """Consecutive-vertex segments per linestring as a broadcastable
-    DataFrame ``(__line_idx, linestring_id, __segs)`` — data, not
-    literal expressions, built as an Arrow local relation like
-    _polygon_segments_df."""
-    return _segments_df(
-        spark, "__line_idx", "linestring_id", linestrings.ids,
-        _linestring_segment_lists(linestrings),
-    )
-
-
-def _tile_lines_df(
-    spark: SparkSession, linestrings: LinestringArrays, bbox_idx, cover_tiles
-) -> DataFrame:
-    """``(tile, __lines)``, one row per covered tile: the
-    ``(linestring_id, __segs)`` of each linestring covering it, in
-    cover order — an Arrow-built local relation."""
-    order = np.argsort(cover_tiles, kind="stable")
-    tiles, starts = np.unique(cover_tiles[order], return_index=True)
-    line = bbox_idx[order]
-    segs = _linestring_segment_lists(linestrings).take(line)
-    lines = pa.StructArray.from_arrays(
-        [pa.array(linestrings.ids[line]), segs], names=["linestring_id", "__segs"]
-    )
-    offsets = pa.array(np.append(starts, len(line)), pa.int32())
-    return spark.createDataFrame(
-        pa.table({"tile": tiles, "__lines": pa.ListArray.from_arrays(offsets, lines)}),
-        schema=f"tile long, __lines array<struct<linestring_id:bigint,__segs:{SEGS_SCHEMA}>>",
-    )
-
-
-def _point_segment_d2_expr(px, py, s):
-    """Clamped point-to-segment squared distance as a JVM expression —
-    same op order as kernels/segment.py."""
-    abx = s["bx"] - s["ax"]
-    aby = s["by"] - s["ay"]
-    l2 = abx * abx + aby * aby
-    r = (px - s["ax"]) * abx + (py - s["ay"]) * aby
-    dac = (px - s["ax"]) * (px - s["ax"]) + (py - s["ay"]) * (py - s["ay"])
-    dbc = (px - s["bx"]) * (px - s["bx"]) + (py - s["by"]) * (py - s["by"])
-    qx = s["ax"] + r / l2 * abx
-    qy = s["ay"] + r / l2 * aby
-    din = (px - qx) * (px - qx) + (py - qy) * (py - qy)
-    return (
-        F.when(l2 == 0, dac)
-        .when((r <= 0) | (r >= l2), F.least(dac, dbc))
-        .otherwise(din)
-    )
+NEAREST_JOIN_SCHEMA_SUFFIX = [
+    StructField("linestring_id", LongType(), False),
+    StructField("distance", DoubleType(), False),
+]
 
 
 def point_to_nearest_linestring_join(
@@ -350,282 +282,148 @@ def point_to_nearest_linestring_join(
     max_depth: int = 15,
     tile_level: int = 8,
     keep_columns: list[str] | None = None,
-    refine: str = "auto",
-    progressive: bool | str = "auto",
-    progressive_threshold: float = 16.0,
+    refine: str = "kernel",
 ) -> DataFrame:
-    """Distributed nearest-linestring: candidate linestrings per point
-    come from the expanded-bbox tile cover; per point the minimum
-    distance (and its linestring) is reduced per candidate batch plus a
-    final groupBy min for batch boundaries.
+    """Distributed nearest-linestring: the selected point columns (in
+    ``keep_columns`` order) plus ``linestring_id`` and ``distance`` of
+    each point's nearest candidate linestring (ties go to the lower id).
 
-    Points whose tile meets no bbox expanded by ``expansion_radius``
-    are dropped (same reachability contract as the reference's bbox
-    filter, core/spatial/join.py:317-320 semantics).
+    A linestring is a candidate for a point when its bbox grown by
+    ``expansion_radius`` covers the point's tile.  Points with no
+    candidate are dropped (the reachability contract of the
+    reference's bbox filter, core/spatial/join.py:317-320), and so are
+    points outside the AOI or with a null, NaN or infinite coordinate.
+    A one-vertex linestring is a zero-length segment; a linestring
+    with no vertex is never a candidate.
 
-    Progressive radius widening (the 100-TB candidate bound): a large
-    ``expansion_radius`` naively replicates every point to every
-    linestring whose expanded bbox covers its tile — with an AOI-sized
-    radius that is an undeclared cross join.  Instead the join runs in
-    rounds with radius tile, 2*tile, 4*tile, ..., expansion_radius.
-    A round's candidate set provably contains EVERY linestring whose
-    true distance <= that round's radius (a bbox expanded by r around a
-    line at distance <= r covers the point, hence the point's tile), so
-    any point whose round-minimum distance is < r is globally resolved
-    and leaves the join; only still-unresolved points (an exponentially
-    shrinking set) are re-joined at the doubled radius.  Total
-    candidate rows stay O(|points| * hit_density) instead of
-    O(|points| * |linestrings|).
+    The plan is one Arrow crossing, with no shuffle, join or round:
 
-    refine: 'jvm' computes min segment distance as a JVM higher-order
-    expression over a broadcast-joined segment table (no Python);
-    'kernel' uses the Arrow-batched NumPy kernel; 'auto' picks 'jvm'
-    for layers with <= 200k vertices (broadcast-size bound).
+        points.where(inside AOI).select(need).mapInPandas(kernel)
 
-    progressive: 'auto' engages radius widening only when the full-
-    radius tile cover averages more than ``progressive_threshold``
-    linestrings per tile — below that the single-shot join's candidate
-    set is already <= threshold * |points| and the extra rounds
-    (shuffle + checkpoint each) cost more than they save.  The cover
-    density is known driver-side for free from the bbox-tile table.
+    The driver builds, once, one tile -> linestring-index cover per
+    radius in tile, 2*tile, 4*tile, ..., expansion_radius (sorted
+    unique tiles plus offsets, so its size follows the cover entries,
+    not 4**tile_level).  Per Arrow batch the kernel maps each point to
+    its tile with the same clipped grid as the cover, then widens the
+    radius round by round over the still-unresolved points only,
+    scoring each round's (point, candidate) pairs with the NumPy
+    segment-distance kernel.  A round's candidates provably include
+    EVERY linestring at distance <= its radius r (a bbox grown by r
+    around a line within r of the point covers the point, hence its
+    tile), so a point whose round minimum is < r has its global
+    nearest and leaves; in the final round any candidate counts, which
+    is exactly the single-shot join at ``expansion_radius``.  Candidate
+    pairs stay O(|points| * hit density) even for an AOI-wide radius.
+
+    This one form replaced four (a full-cover kernel, a dense per-tile
+    JVM table, a segment-table JVM join with a groupBy min, and
+    checkpointed progressive rounds of either) and returned the same
+    rows on every in-AOI input whose lines have two or more vertices.
+    Seconds, same session, 4-core VM, local[4], noop sink, min of 5
+    runs (2 for the 2000-line layer), sf0.01 / sf0.1 events:
+
+        case                                old default form   this form
+        4 lines, r=16 (nearest_linestring)  0.38 / 0.39        0.40 / 0.38
+        same, forced progressive rounds     2.59 / 3.42        0.29 / 0.42
+        road layer, r=0.6, level 5          0.55 / 2.90        0.30 / 0.54
+        2000 random-walk lines, r=0.3       3.26 / 11.2        0.63 / 1.16
+        2000 random-walk lines, r=16        44.1 / 51.8        1.82 / 3.33
+
+    ``refine`` accepts only 'kernel', the one form there is.
     """
     from ..geometry import require_single_part
 
     require_single_part(linestrings, "point_to_nearest_linestring_join")
+    if refine != "kernel":
+        raise ValueError(f"refine must be 'kernel', got {refine!r}")
     if scale is None:
         scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
     keep = keep_columns if keep_columns is not None else [c for c in points.columns]
-    if refine == "auto":
-        refine = "jvm" if len(linestrings.x) <= 200_000 else "kernel"
-    INF, DMAX = float("inf"), float(np.finfo(np.float64).max)
-    # a point with a null or non-finite coordinate has no nearest line
-    # (null would key into the grid's last column, NaN and inf give
-    # made-up distances); NaN sorts above inf, so one test per axis
-    points = points.where((F.abs(F.col(x)) < INF) & (F.abs(F.col(y)) < INF))
-
-    spark = points.sparkSession
     need = list(dict.fromkeys(keep + [x, y]))
+    out_schema = StructType([points.schema[c] for c in keep] + NEAREST_JOIN_SCHEMA_SUFFIX)
 
-    def cover(radius):
-        """(line index, tile) per tile a bbox grown by radius covers."""
-        return tiles_covering_bboxes(
-            *linestrings.bounding_boxes(radius), x_min, y_min, scale, max_depth, tile_level
+    po = linestrings.part_offsets
+    counts = np.diff(po)
+    # kernel layout: a lone vertex is repeated into a zero-length segment
+    lone = counts == 1
+    vert = np.repeat(np.arange(po[-1]), 1 + np.repeat(lone, counts))
+    seg_offsets = np.concatenate(([0], np.cumsum(counts + lone)))
+    lx, ly, lids = linestrings.x[vert], linestrings.y[vert], linestrings.ids
+
+    # bboxes of the lines that have a vertex; the others get no cover
+    line = np.flatnonzero(counts > 0)
+    xs = np.asarray(linestrings.x[: po[-1]], dtype=np.float64)
+    ys = np.asarray(linestrings.y[: po[-1]], dtype=np.float64)
+    minx, maxx = np.minimum.reduceat(xs, po[line]), np.maximum.reduceat(xs, po[line])
+    miny, maxy = np.minimum.reduceat(ys, po[line]), np.maximum.reduceat(ys, po[line])
+
+    def cover(r):
+        """(tiles, offsets, line indices): the lines whose bbox grown by
+        r covers tiles[i] are lines[offsets[i]:offsets[i+1]].  A
+        never-matching sentinel tile ends ``tiles``."""
+        bbox, tiles = tiles_covering_bboxes(
+            minx - r, miny - r, maxx + r, maxy + r, x_min, y_min, scale, max_depth,
+            tile_level,
         )
-
-    tile_size = scale * (1 << (max_depth - tile_level))
-    if progressive == "auto":
-        _, full_tiles = cover(expansion_radius)
-        lines_per_tile = len(full_tiles) / float(1 << (2 * tile_level))
-        progressive = lines_per_tile > progressive_threshold
-    if progressive and expansion_radius > tile_size:
-        radii = []
-        r = tile_size
-        while r < expansion_radius:
-            radii.append(r)
-            r *= 2.0
-        radii.append(float(expansion_radius))
-    else:
-        radii = [float(expansion_radius)]
-
-    part_offsets, lx, ly, lids = (
-        linestrings.part_offsets, linestrings.x, linestrings.y, linestrings.ids,
-    )
-
-    if len(radii) == 1 and refine == "jvm":
-        # r6 dense single-round path (guide §2.4): instead of
-        # [points ⋈ exploded (tile, line) table] -> [⋈ segment table]
-        # -> [1-row-per-point groupBy min] — which materializes
-        # |points| x lines-per-tile candidate rows and shuffles one
-        # row per point for the min — broadcast ONE row per tile
-        # carrying the covering lines' segments, and take the min
-        # row-locally with array_min over (distance, id) structs (the
-        # exact ordering the groupBy's min(struct) used).  Same
-        # reachability (tiles with no line are absent -> inner join
-        # drops the point), same fold arithmetic, same tie-break.
-        # Bounded by the same 200k broadcast-segment limit as the
-        # segment table; falls through to the join shape when the
-        # per-tile duplication would exceed it.
-        seg_counts = np.maximum(np.diff(part_offsets) - 1, 0)
-        bbox_idx, cover_tiles = cover(radii[0])
-        n_tiles = 1 << (2 * tile_level)
-        full_cover = (
-            len(np.unique(cover_tiles)) == n_tiles
-            and len(cover_tiles) == n_tiles * len(linestrings)
-        )
-        if full_cover and np.all(np.diff(lids) > 0):
-            # r6 full-cover kernel path: when EVERY tile is covered by
-            # EVERY line (small layer, radius >= AOI span) the tile
-            # filter is vacuous — every point is reachable and its
-            # candidate set is the whole layer — so the per-point min
-            # runs as ONE slim Arrow crossing over the vectorized
-            # NumPy segment-distance kernel (the same kernel and op
-            # order as the SQL oracle and the JVM fold, so distances
-            # are bit-identical — A/B-verified over all 1M sf1.0
-            # rows).  argmin's first-index tie-break equals the
-            # (distance, id) struct min because ids ascend with index
-            # (guarded; otherwise fall through).  Both JVM expression
-            # forms of this reduction (higher-order fold, literal
-            # codegen) were measured ~2x slower: the fold pays
-            # interpreted per-element lambda evaluation and the
-            # literal form exceeds JIT method limits.
-            nl = len(linestrings)
-            out_schema = StructType(
-                [points.schema[c] for c in keep]
-                + [
-                    StructField("linestring_id", LongType(), False),
-                    StructField("distance", DoubleType(), False),
-                ]
-            )
-
-            def dense_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    n = len(pdf)
-                    if n == 0:
-                        continue
-                    row = np.repeat(np.arange(n), nl)
-                    idx = np.tile(np.arange(nl), n)
-                    d = point_linestring_distance_pairs(
-                        pdf[x].to_numpy()[row], pdf[y].to_numpy()[row],
-                        idx, part_offsets, lx, ly,
-                    ).reshape(n, nl)
-                    am = np.argmin(d, axis=1)
-                    out = pdf[keep].copy()
-                    out["linestring_id"] = lids[am]
-                    out["distance"] = d[np.arange(n), am]
-                    yield out
-
-            return points.select(*need).mapInPandas(dense_fn, schema=out_schema)
-        if seg_counts[bbox_idx].sum() <= 200_000:
-            tile_lines = _tile_lines_df(spark, linestrings, bbox_idx, cover_tiles)
-            tiled = assign_tiles(
-                points, x, y, x_min, x_max, y_min, y_max, scale, max_depth,
-                tile_level,
-            )
-            scored = F.transform(
-                F.col("__lines"),
-                lambda l: F.struct(
-                    F.sqrt(
-                        F.aggregate(
-                            l["__segs"],
-                            F.lit(DMAX),
-                            lambda acc, s: F.least(
-                                acc,
-                                _point_segment_d2_expr(F.col(x), F.col(y), s),
-                            ),
-                        )
-                    ).alias("distance"),
-                    l["linestring_id"].alias("linestring_id"),
-                ),
-            )
-            return (
-                tiled.join(F.broadcast(tile_lines), on="tile")
-                .withColumn("__m", F.array_min(scored))
-                .select(
-                    *keep,
-                    F.col("__m.linestring_id").alias("linestring_id"),
-                    F.col("__m.distance").alias("distance"),
-                )
-            )
-
-    if refine == "jvm":
-        seg_df = _linestring_segments_df(spark, linestrings)
-
-    def _score_round(pts_df: DataFrame, radius: float, carry_unmatched: bool) -> DataFrame:
-        """Per-point min (distance, linestring_id) over the candidates
-        of one radius round.  carry_unmatched keeps unmatched points
-        with distance=inf / id=-1 (left joins, grouped on need) so they
-        can flow to the next round; the final/single round uses inner
-        joins grouped on keep — the cheaper plan, identical to the
-        single-shot join (measured ~40% faster than the carry shape)."""
-        bbox_idx, tiles = cover(radius)
-        line_tiles = spark.createDataFrame(pa.table({"tile": tiles, "__line_idx": bbox_idx}))
-        tiled = assign_tiles(
-            pts_df, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
-        )
-        how = "left" if carry_unmatched else "inner"
-        group_cols = need if carry_unmatched else keep
-        candidates = tiled.join(F.broadcast(line_tiles), on="tile", how=how).select(
-            *need, "__line_idx"
-        )
-
-        if refine == "jvm":
-            d2 = F.aggregate(
-                F.col("__segs"),
-                F.lit(DMAX),
-                lambda acc, s: F.least(acc, _point_segment_d2_expr(F.col(x), F.col(y), s)),
-            )
-            joined = candidates.join(F.broadcast(seg_df), on="__line_idx", how=how)
-            if carry_unmatched:
-                scored = joined.select(
-                    *need,
-                    F.coalesce(F.col("linestring_id"), F.lit(-1)).alias("linestring_id"),
-                    F.coalesce(F.sqrt(d2), F.lit(INF)).alias("distance"),
-                )
-            else:
-                scored = joined.select(
-                    *group_cols, "linestring_id", F.sqrt(d2).alias("distance")
-                )
-        else:
-            mid_schema = StructType(
-                [pts_df.schema[c] for c in group_cols]
-                + [
-                    StructField("linestring_id", LongType(), False),
-                    StructField("distance", DoubleType(), False),
-                ]
-            )
-
-            def refine_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    idx = pdf["__line_idx"].fillna(-1).to_numpy(dtype=np.int64)
-                    valid = idx >= 0
-                    d = np.full(len(pdf), INF)
-                    if valid.any():
-                        d[valid] = point_linestring_distance_pairs(
-                            pdf[x].to_numpy()[valid], pdf[y].to_numpy()[valid],
-                            idx[valid], part_offsets, lx, ly,
-                        )
-                    out = pdf[group_cols].copy()
-                    out["linestring_id"] = np.where(valid, lids[np.where(valid, idx, 0)], -1)
-                    out["distance"] = d
-                    yield out
-
-            scored = candidates.mapInPandas(refine_fn, schema=mid_schema)
-
-        # per-point min reduction (map-side partial agg; ties -> min id);
-        # keep_columns must uniquely identify a point (e.g. include its id)
+        order = np.argsort(tiles, kind="stable")
+        keys, first = np.unique(tiles[order], return_index=True)
         return (
-            scored.groupBy(*group_cols)
-            .agg(F.min(F.struct("distance", "linestring_id")).alias("__m"))
-            .select(*group_cols, F.col("__m.linestring_id").alias("linestring_id"),
-                    F.col("__m.distance").alias("distance"))
+            np.append(keys, np.iinfo(np.int64).max),
+            np.append(first, [len(order), len(order)]),
+            line[bbox[order]],
         )
 
-    out_cols = [*keep, "linestring_id", "distance"]
-    results: list[DataFrame] = []
-    carry = points
-    for k, radius in enumerate(radii):
-        final = k == len(radii) - 1
-        scored = _score_round(carry, radius, carry_unmatched=not final)
-        if len(radii) > 1:
-            # each non-final round's result is consumed twice (accepted
-            # rows -> output union, unresolved rows -> next round's
-            # input); checkpointing flattens the lineage so round k's
-            # join is evaluated once, not once per downstream round
-            scored = scored.localCheckpoint(eager=False)
-        if final:
-            # final round: reference reachability — any candidate match
-            # counts (inner join already dropped unreachable points)
-            results.append(scored.select(*out_cols))
-        else:
-            # strictly-less: a line at distance exactly r could fall on
-            # a tile-cover boundary and be missed, so only d < r is
-            # provably the global minimum
-            results.append(scored.where(F.col("distance") < radius).select(*out_cols))
-            carry = scored.where(F.col("distance") >= radius).select(*need)
+    radii = []
+    r = scale * (1 << (max_depth - tile_level))
+    while r < expansion_radius:
+        radii.append(r)
+        r *= 2.0
+    radii.append(float(expansion_radius))
+    covers = [(r, *cover(r)) for r in radii]
 
-    out = results[0]
-    for part in results[1:]:
-        out = out.unionByName(part)
-    return out
+    def nearest_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            px, py = pdf[x].to_numpy(), pdf[y].to_numpy()
+            # a point is a zero-size bbox: its one tile, clipped as the cover
+            _, tiles = tiles_covering_bboxes(
+                px, py, px, py, x_min, y_min, scale, max_depth, tile_level
+            )
+            done = np.zeros(len(pdf), dtype=bool)
+            best = np.zeros(len(pdf), dtype=np.int64)
+            dist = np.zeros(len(pdf))
+            todo = np.arange(len(pdf))
+            for k, (r, keys, offs, cand) in enumerate(covers):
+                t = tiles[todo]
+                pos = np.searchsorted(keys, t)
+                cnt = np.where(keys[pos] == t, offs[pos + 1] - offs[pos], 0)
+                pt = np.repeat(todo, cnt)  # pairs come grouped by point
+                entry = np.arange(len(pt)) + np.repeat(offs[pos] - np.cumsum(cnt) + cnt, cnt)
+                li = cand[entry]
+                d = point_linestring_distance_pairs(px[pt], py[pt], li, seg_offsets, lx, ly)
+                # per point, the min distance, then the min id at it
+                head = np.ones(len(pt), dtype=bool)
+                head[1:] = pt[1:] != pt[:-1]
+                start = np.flatnonzero(head)
+                dmin = np.minimum.reduceat(d, start)
+                at_min = d == np.repeat(dmin, np.diff(np.append(start, len(pt))))
+                ids = np.minimum.reduceat(
+                    np.where(at_min, lids[li], np.iinfo(np.int64).max), start
+                )
+                rows = pt[start]
+                if k < len(covers) - 1:
+                    # strictly less: a line at distance exactly r may sit
+                    # on a cover boundary and be missed
+                    ok = dmin < r
+                    rows, dmin, ids = rows[ok], dmin[ok], ids[ok]
+                done[rows], best[rows], dist[rows] = True, ids, dmin
+                todo = todo[~done[todo]]
+            hit = np.flatnonzero(done)
+            yield pdf[keep].iloc[hit].assign(linestring_id=best[hit], distance=dist[hit])
+
+    # the AOI test (inclusive, like morton_key_expr) also drops null,
+    # NaN and infinite coordinates: Spark orders NaN above +inf
+    inside = (
+        (F.col(x) >= x_min) & (F.col(x) <= x_max)
+        & (F.col(y) >= y_min) & (F.col(y) <= y_max)
+    )
+    return points.where(inside).select(*need).mapInPandas(nearest_fn, schema=out_schema)

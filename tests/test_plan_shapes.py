@@ -67,59 +67,43 @@ class TestFlagshipJoinPlan:
         assert "MapInPandas" not in plan and "Python" not in plan
         assert "ExistingRDD" not in plan
 
-    def test_nearest_linestring_jvm_forms_no_python(self, spark, pts):
-        """Both JVM forms of the nearest-linestring join — the dense
-        per-tile table and, when that table would pass 200k broadcast
-        segments, the segment-table join — broadcast local relations
-        and run no Python stage."""
+    def test_nearest_linestring_single_arrow_crossing(self, spark):
+        """The nearest-linestring join is scan -> Filter -> exactly one
+        MapInPandas, whatever the radius: no Exchange, no Window, no
+        join, no scan of a Python RDD."""
         from cuspatial_spark.plans import point_to_nearest_linestring_join
 
-        kw = dict(expansion_radius=0.5, x_min=0, x_max=8, y_min=0, y_max=8,
-                  max_depth=12, tile_level=1, keep_columns=["page_id"])
-        small = LinestringArrays([0, 2, 4], [1.0, 2.0, 5.0, 6.0], [1.0, 2.0, 5.0, 6.0])
-        # one 70k-segment zigzag over all four tiles: 280k per-tile segments
-        n = 70_001
-        zigzag = LinestringArrays(
-            [0, n, n + 2],
-            np.r_[np.linspace(0.0, 8.0, n), 1.0, 2.0],
-            np.r_[np.where(np.arange(n) % 2 == 0, 1.0, 7.0), 1.0, 2.0],
+        # a generated scan: the AOI filter is not folded into local data
+        pts = spark.range(20000).select(
+            F.col("id").alias("page_id"), (F.rand(1) * 8).alias("x"), (F.rand(2) * 8).alias("y")
         )
-        for lines, grouped in ((small, False), (zigzag, True)):
-            plan = _plan(point_to_nearest_linestring_join(pts, lines, **kw))
-            # only the segment-table join groups (and so shuffles) per point
-            assert ("Exchange hashpartitioning" in plan) == grouped
-            assert "BroadcastHashJoin" in plan
-            assert "MapInPandas" not in plan and "Python" not in plan
-            assert "ExistingRDD" not in plan
+        lines = LinestringArrays([0, 2, 4], [1.0, 2.0, 5.0, 6.0], [1.0, 2.0, 5.0, 6.0])
+        for radius in (0.1, 100.0):  # below one tile / AOI-wide
+            plan = _plan(point_to_nearest_linestring_join(
+                pts, lines, radius, x_min=0, x_max=8, y_min=0, y_max=8,
+                max_depth=12, tile_level=4, keep_columns=["page_id"],
+            ))
+            assert plan.count("MapInPandas") == 1, plan
+            assert "Filter" in plan
+            for op in ("Exchange", "Window", "Join", "ExistingRDD", "Union"):
+                assert op not in plan, (op, plan)
 
     def test_broadcast_tables_are_local_relations_without_arrow_conf(
         self, spark, pts, polys
     ):
         """The broadcast tables are built from Arrow whatever the
-        session's Arrow setting: each plans as a LocalRelation, and the
-        join scans no Python RDD."""
+        session's Arrow setting: the segment table plans as a
+        LocalRelation, and the join scans no Python RDD."""
         from cuspatial_spark.plans import point_in_polygon_join
-        from cuspatial_spark.plans.tile_join import (
-            _linestring_segments_df,
-            _polygon_segments_df,
-            _tile_lines_df,
-        )
+        from cuspatial_spark.plans.tile_join import _polygon_segments_df
 
         key = "spark.sql.execution.arrow.pyspark.enabled"
         before = spark.conf.get(key)
         spark.conf.set(key, "false")
         try:
-            lines = LinestringArrays([0, 2, 4], [1.0, 2.0, 5.0, 6.0], [1.0, 2.0, 5.0, 6.0])
-            empty = np.zeros(0, dtype=np.int64)
-            tables = [
-                _polygon_segments_df(spark, polys),
-                _linestring_segments_df(spark, lines),
-                _tile_lines_df(spark, lines, np.array([0, 0, 1]), np.array([0, 3, 3])),
-                _tile_lines_df(spark, lines, empty, empty),
-            ]
-            for df in tables:
-                optimized = df._jdf.queryExecution().optimizedPlan().toString()
-                assert optimized.startswith("LocalRelation"), optimized
+            segs = _polygon_segments_df(spark, polys)
+            optimized = segs._jdf.queryExecution().optimizedPlan().toString()
+            assert optimized.startswith("LocalRelation"), optimized
             plan = _plan(point_in_polygon_join(
                 pts, polys, x_min=0, x_max=8, y_min=0, y_max=8,
                 max_depth=12, tile_level=4,
@@ -278,41 +262,6 @@ def _polygon_segments_loop(polys):
     return rows
 
 
-def _linestring_segments_loop(lines):
-    """The per-vertex Python loop the linestring segment table replaced."""
-    po, lx, ly = lines.part_offsets, lines.x, lines.y
-    return [
-        (li, int(lines.ids[li]), [
-            (float(lx[i]), float(ly[i]), float(lx[i + 1]), float(ly[i + 1]))
-            for i in range(int(po[li]), int(po[li + 1]) - 1)
-        ])
-        for li in range(len(lines))
-    ]
-
-
-def _tile_lines_loop(lines, bbox_idx, cover_tiles):
-    """The per-cover-entry Python loop that built the dense
-    nearest-linestring table: {tile: [(linestring_id, segs), ...]}."""
-    po, lids = lines.part_offsets, lines.ids
-    lxa = np.asarray(lines.x, dtype=np.float64)
-    lya = np.asarray(lines.y, dtype=np.float64)
-    seg_lists = [
-        list(
-            zip(
-                lxa[int(po[li]) : int(po[li + 1]) - 1].tolist(),
-                lya[int(po[li]) : int(po[li + 1]) - 1].tolist(),
-                lxa[int(po[li]) + 1 : int(po[li + 1])].tolist(),
-                lya[int(po[li]) + 1 : int(po[li + 1])].tolist(),
-            )
-        )
-        for li in range(len(lines))
-    ]
-    by_tile = {}
-    for li, tl in zip(bbox_idx, cover_tiles):
-        by_tile.setdefault(int(tl), []).append((int(lids[li]), seg_lists[li]))
-    return by_tile
-
-
 def _segment_rows(df, idx_col, id_col):
     return [
         (r[idx_col], r[id_col], [tuple(s) for s in r["__segs"]])
@@ -321,9 +270,9 @@ def _segment_rows(df, idx_col, id_col):
 
 
 class TestSegmentTableVectorization:
-    """The NumPy/Arrow-built broadcast segment tables must emit exactly
-    the rows the original per-vertex Python loops produced (VERDICT r5
-    item 7)."""
+    """The NumPy/Arrow-built broadcast polygon segment table must emit
+    exactly the rows the original per-vertex Python loop produced
+    (VERDICT r5 item 7)."""
 
     def test_polygon_segments_match_loop(self, spark):
         from cuspatial_spark.geometry import PolygonArrays
@@ -357,53 +306,3 @@ class TestSegmentTableVectorization:
 
         got = _segment_rows(_polygon_segments_df(spark, polys), "__poly_idx", "polygon_id")
         assert got == _polygon_segments_loop(polys)
-
-    def test_linestring_segments_match_loop(self, spark):
-        from cuspatial_spark.geometry import LinestringArrays
-        from cuspatial_spark.plans.tile_join import _linestring_segments_df
-
-        lines = LinestringArrays(
-            [0, 3, 7],
-            [0.0, 1.0, 2.0, 4.0, 4.5, 5.0, 6.0],
-            [0.0, 1.5, 0.5, 4.0, 4.25, 5.0, 4.0],
-        )
-        got = _segment_rows(
-            _linestring_segments_df(spark, lines), "__line_idx", "linestring_id"
-        )
-        assert got == _linestring_segments_loop(lines)
-
-    @pytest.mark.parametrize("lines", [
-        pytest.param(LinestringArrays([0, 2, 3, 5], [0.0, 1.0, 2.0, 3.0, 4.0],
-                                      [0.0, 1.0, 2.0, 3.0, 5.0], ids=[4, 9, 2]),
-                     id="one-vertex-linestring"),
-        pytest.param(LinestringArrays([0], [], []), id="empty-layer"),
-    ])
-    def test_degenerate_linestring_segments_match_loop(self, spark, lines):
-        from cuspatial_spark.plans.tile_join import _linestring_segments_df
-
-        got = _segment_rows(
-            _linestring_segments_df(spark, lines), "__line_idx", "linestring_id"
-        )
-        assert got == _linestring_segments_loop(lines)
-
-    def test_tile_lines_match_loop(self, spark):
-        """The dense nearest-linestring table: one row per covered tile
-        holding each covering line's (id, segments) in cover order."""
-        from cuspatial_spark.plans.tile_join import _tile_lines_df, tiles_covering_bboxes
-
-        rng = np.random.default_rng(5)
-        # 12 lines of 1-4 vertices (one-vertex lines included), ids unsorted
-        offsets = np.r_[0, np.cumsum(rng.integers(1, 5, 12))]
-        lines = LinestringArrays(
-            offsets, rng.uniform(0, 8, offsets[-1]), rng.uniform(0, 8, offsets[-1]),
-            ids=rng.permutation(100)[:12],
-        )
-        bbox_idx, cover_tiles = tiles_covering_bboxes(
-            *lines.bounding_boxes(0.5), 0.0, 0.0, 8 / (1 << 12), 12, 2
-        )
-        got = {
-            r["tile"]: [(l["linestring_id"], [tuple(s) for s in l["__segs"]])
-                        for l in r["__lines"]]
-            for r in _tile_lines_df(spark, lines, bbox_idx, cover_tiles).collect()
-        }
-        assert got == _tile_lines_loop(lines, bbox_idx, cover_tiles)

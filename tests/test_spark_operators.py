@@ -4,6 +4,7 @@ run single-partition, plus distributed tile-join equivalence."""
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cuspatial_spark import LinestringArrays, PolygonArrays, operators as ops
@@ -349,70 +350,157 @@ class TestDistributedTileJoin:
 
     def test_nearest_join_non_finite_point_every_form(self, spark):
         """A point with a null coordinate (pandas NaN crosses Arrow as
-        null) or an infinite one has no nearest linestring: every form
-        of the join drops it and returns the same rows, with the columns
-        in ``keep_columns`` order."""
+        null) or an infinite one has no nearest linestring: the join
+        drops it at a radius below one tile and at an AOI-wide one,
+        with the columns in ``keep_columns`` order."""
         lines = LinestringArrays([0, 2, 4], [0.0, 8.0, 0.0, 8.0], [0.5, 0.5, 6.0, 6.0])
         pts = spark.createDataFrame(pd.DataFrame({
             "a": [0, 1, 2, 3], "b": [10, 11, 12, 13],
             "x": [1.0, np.nan, 5.0, 7.0], "y": [1.0, 2.0, 3.0, np.inf],
         }))
         aoi = dict(x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0, max_depth=8, tile_level=1)
-        forms = {
-            "dense jvm": dict(expansion_radius=1.0),
-            "kernel refine": dict(expansion_radius=1.0, refine="kernel"),
-            "full cover": dict(expansion_radius=100.0),
-            "progressive": dict(expansion_radius=100.0, progressive=True),
-        }
         for keep in (None, ["b", "a"]):
-            for name, form in forms.items():
+            for radius in (1.0, 100.0):
                 got = point_to_nearest_linestring_join(
-                    pts, lines, keep_columns=keep, **aoi, **form
+                    pts, lines, radius, keep_columns=keep, **aoi
                 ).toPandas()
                 cols = keep or ["a", "b", "x", "y"]
-                assert list(got.columns) == [*cols, "linestring_id", "distance"], name
+                assert list(got.columns) == [*cols, "linestring_id", "distance"], radius
                 got = got.sort_values("a")
-                assert list(got["a"]) == [0, 2], name
-                assert list(got["b"]) == [10, 12], name
-                assert list(got["linestring_id"]) == [0, 0], name
-                assert list(got["distance"]) == [0.5, 2.5], name
+                assert list(got["a"]) == [0, 2], radius
+                assert list(got["b"]) == [10, 12], radius
+                assert list(got["linestring_id"]) == [0, 0], radius
+                assert list(got["distance"]) == [0.5, 2.5], radius
 
-    @pytest.mark.parametrize("refine", ["jvm", "kernel"])
-    def test_nearest_join_progressive_equals_single_shot(self, spark, refine):
-        # Dense layer (64 linestrings over a 8x8 AOI) with an AOI-sized
-        # expansion radius: progressive radius widening must return the
-        # identical (point -> nearest line, distance) assignment as the
-        # single-shot join, for both refine paths.
-        rng = np.random.default_rng(33)
-        n_lines, pts_per = 64, 4
-        offs = np.arange(n_lines + 1, dtype=np.int64) * pts_per
-        base = rng.uniform(0, 8, size=(n_lines, 2))
-        walk = base[:, None, :] + rng.uniform(-0.5, 0.5, size=(n_lines, pts_per, 2)).cumsum(axis=1)
-        lines = LinestringArrays(offs, walk[:, :, 0].ravel().copy(), walk[:, :, 1].ravel().copy())
-        npts = 500
-        pdf = pd.DataFrame(
-            {
-                "point_id": np.arange(npts, dtype=np.int64),
-                "x": rng.uniform(0, 8, npts),
-                "y": rng.uniform(0, 8, npts),
-            }
-        )
-        pts = spark.createDataFrame(pdf).repartition(8)
-        kw = dict(
-            expansion_radius=16.0, x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0,
-            max_depth=8, tile_level=3, keep_columns=["point_id"], refine=refine,
-        )
-        single = (
-            point_to_nearest_linestring_join(pts, lines, progressive=False, **kw)
-            .orderBy("point_id").toPandas()
-        )
-        prog = (
-            point_to_nearest_linestring_join(pts, lines, progressive=True, **kw)
-            .orderBy("point_id").toPandas()
-        )
-        assert len(single) == len(prog) == npts
-        assert list(single["linestring_id"]) == list(prog["linestring_id"])
-        np.testing.assert_allclose(single["distance"], prog["distance"], rtol=0, atol=0)
+    def test_nearest_join_short_linestrings(self, spark):
+        """A one-vertex linestring is a zero-length segment, scored at
+        the distance to its vertex; a linestring with no vertex is never
+        a candidate."""
+        pts = spark.createDataFrame(pd.DataFrame({"a": [0], "x": [1.0], "y": [1.0]}))
+        aoi = dict(x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0, max_depth=8, tile_level=2)
+        one_vertex = LinestringArrays([0, 1, 3], [1.5, 6.0, 7.0], [1.0, 7.0, 7.0])
+        no_vertex = LinestringArrays([0, 0, 2], [6.0, 7.0], [7.0, 7.0])
+        for radius in (1.0, 100.0):
+            got = point_to_nearest_linestring_join(pts, one_vertex, radius, **aoi).collect()
+            assert [(r.linestring_id, r.distance) for r in got] == [(0, 0.5)], radius
+        got = point_to_nearest_linestring_join(pts, no_vertex, 100.0, **aoi).collect()
+        assert [(r.linestring_id, r.distance) for r in got] == [(1, float(np.sqrt(61.0)))]
+
+    def test_nearest_join_drops_out_of_aoi_points(self, spark):
+        """A point outside the AOI has no tile: it is dropped, not
+        scored against the lines covering the grid's top-right tile."""
+        pts = spark.createDataFrame(pd.DataFrame({"a": [0, 1], "x": [-1.0, 1.0], "y": [-1.0, 1.0]}))
+        lines = LinestringArrays([0, 2, 4], [7.0, 7.5, 0.5, 1.5], [7.5, 7.5, 0.5, 0.5])
+        got = point_to_nearest_linestring_join(
+            pts, lines, 1.0, x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0,
+            max_depth=8, tile_level=2,
+        ).collect()
+        assert [(r.a, r.linestring_id, r.distance) for r in got] == [(1, 1, 0.5)]
+
+    def test_nearest_join_matches_bruteforce_oracle(self, spark):
+        """Differential test against a plain-NumPy oracle: candidates
+        are the lines whose bbox grown by the radius covers the point's
+        clipped grid tile; the answer is the min (distance, id) over
+        them, or no row.  Radii below one tile, of several tiles and
+        AOI-wide; ties from snapped coordinates and duplicated lines;
+        unsorted ids; reordered keep_columns; non-finite and out-of-AOI
+        points; lines of zero and one vertex."""
+        aoi = dict(x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0, max_depth=8)
+
+        @given(_nearest_case())
+        @settings(max_examples=25, deadline=None)
+        def check(case):
+            lines, pdf, radius, tile_level, keep = case
+            pts = spark.createDataFrame(pdf, "a long, b string, x double, y double")
+            got = point_to_nearest_linestring_join(
+                pts.repartition(2), lines, radius, keep_columns=keep,
+                tile_level=tile_level, **aoi,
+            )
+            cols = keep or ["a", "b", "x", "y"]
+            assert got.columns == [*cols, "linestring_id", "distance"]
+            want = _nearest_oracle(pdf, lines, radius, tile_level, **aoi)
+            rows = [
+                (*(getattr(r, c) for c in cols), r.linestring_id, r.distance)
+                for r in want.itertuples()
+            ]
+            assert sorted(map(tuple, got.collect())) == sorted(rows)
+
+        check()
+
+
+def _nearest_oracle(pdf, lines, radius, tile_level, x_min, x_max, y_min, y_max, max_depth):
+    """Brute-force nearest linestring per point, one point at a time."""
+    scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
+    tile = scale * (1 << (max_depth - tile_level))
+    n_cells = 1 << tile_level
+
+    def cell(v, lo):
+        return np.clip(np.floor((v - lo) / tile), 0, n_cells - 1)
+
+    rows = []
+    for p in pdf.itertuples():
+        if not (x_min <= p.x <= x_max and y_min <= p.y <= y_max):
+            continue  # also drops NaN and inf
+        best = None
+        for li in range(len(lines)):
+            s, e = lines.part_offsets[li], lines.part_offsets[li + 1]
+            if e == s:
+                continue
+            lx, ly = lines.x[s:e], lines.y[s:e]
+            cx, cy = cell(p.x, x_min), cell(p.y, y_min)
+            if not (cell(lx.min() - radius, x_min) <= cx <= cell(lx.max() + radius, x_min)
+                    and cell(ly.min() - radius, y_min) <= cy <= cell(ly.max() + radius, y_min)):
+                continue
+            if e - s == 1:  # a lone vertex is a zero-length segment
+                lx, ly = np.repeat(lx, 2), np.repeat(ly, 2)
+            ax, ay, bx, by = lx[:-1], ly[:-1], lx[1:], ly[1:]
+            abx, aby = bx - ax, by - ay
+            l2 = abx * abx + aby * aby
+            r = (p.x - ax) * abx + (p.y - ay) * aby
+            dac = (p.x - ax) ** 2 + (p.y - ay) ** 2
+            dbc = (p.x - bx) ** 2 + (p.y - by) ** 2
+            t = r / np.where(l2 == 0, 1.0, l2)
+            qx, qy = p.x - (ax + t * abx), p.y - (ay + t * aby)
+            d2 = np.where(l2 == 0, dac, np.where((r <= 0) | (r >= l2),
+                                                 np.minimum(dac, dbc), qx * qx + qy * qy))
+            cand = (float(np.sqrt(d2.min())), int(lines.ids[li]))
+            best = cand if best is None else min(best, cand)
+        if best is not None:
+            rows.append({**p._asdict(), "distance": best[0], "linestring_id": best[1]})
+    return pd.DataFrame(rows, columns=[*pdf.columns, "linestring_id", "distance"])
+
+
+@st.composite
+def _nearest_case(draw):
+    """A random layer of 1-6 lines of 0-5 vertices (unsorted ids, one
+    line maybe duplicated under a second id, coordinates maybe snapped
+    to a half-unit grid so distances tie and points sit on tile edges),
+    points partly outside the AOI or non-finite, a radius and a tile
+    level."""
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    snap = draw(st.booleans())
+
+    def coords(n):
+        v = rng.uniform(-1.0, 9.0, n)
+        return np.round(v * 2) / 2 if snap else v
+
+    counts = [draw(st.integers(0, 5)) for _ in range(draw(st.integers(1, 6)))]
+    xs, ys = coords(sum(counts)), coords(sum(counts))
+    if draw(st.booleans()) and counts[0]:
+        counts.append(counts[0])
+        xs, ys = np.r_[xs, xs[: counts[0]]], np.r_[ys, ys[: counts[0]]]
+    lines = LinestringArrays(
+        np.r_[0, np.cumsum(counts)], xs, ys, ids=rng.permutation(100)[: len(counts)]
+    )
+    n = draw(st.integers(1, 60))
+    x, y = coords(n), coords(n)
+    bad = rng.random(n) < 0.1
+    x[bad] = rng.choice([np.nan, np.inf, -np.inf], int(bad.sum()))
+    pdf = pd.DataFrame(
+        {"a": np.arange(n, dtype=np.int64), "b": [f"p{i}" for i in range(n)], "x": x, "y": y}
+    )
+    radius = draw(st.sampled_from([0.1, 2.5, 20.0]))
+    return lines, pdf, radius, draw(st.integers(1, 3)), draw(st.sampled_from([None, ["b", "a"]]))
 
 
 class TestExpressions:

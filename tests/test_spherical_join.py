@@ -150,6 +150,32 @@ class TestGeodesicKnn:
         assert len(got) == 6
         assert got.groupby("query_id")["rank"].max().tolist() == [3, 3]
 
+    def test_numeric_radius_runs_only_limited_counts(self, spark, monkeypatch):
+        """With a numeric initial radius and a data side larger than
+        dense_threshold, choosing dense vs progressive counts at most
+        dense_threshold + 1 rows: every count() job is over a Limit, so
+        none reads the whole data side."""
+        from cuspatial_spark.plans import geodesic_knn_join
+
+        data = _frame(spark, np.arange(20) + 500, np.linspace(-170, 170, 20),
+                      np.linspace(-80, 80, 20), "poi_id")
+        queries = _frame(spark, [0, 1], [0.0, 90.0], [0.0, 45.0], "query_id")
+        counted = []
+        real_count = type(data).count
+
+        def count(df):
+            counted.append(df._jdf.queryExecution().logical().toString())
+            return real_count(df)
+
+        monkeypatch.setattr(type(data), "count", count)
+        geodesic_knn_join(
+            data, queries, k=2, id_col="poi_id", query_id_col="query_id",
+            initial_radius_km=500.0, dense_threshold=4,
+        )
+        assert counted
+        for plan in counted:
+            assert "Limit" in plan.splitlines()[0], plan
+
     def test_dense_path_equals_progressive(self, spark):
         """The small-data dense path (broadcast POI array + row-local
         top-k) must produce byte-identical rows to the progressive
