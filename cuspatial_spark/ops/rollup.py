@@ -118,13 +118,14 @@ class ContinuousAggregate:
         return out
 
     def _delta_frames(self, spark: SparkSession, lo: int, hi: int):
-        """Append snapshots with lo < version <= hi, or None when the
-        log can't serve the delta (an expired snapshot in range —
-        compaction folded it in; caller falls back to full recompute)."""
+        """Append snapshots with lo < version <= hi that hold rows, or
+        None when the log can't serve the delta (an expired snapshot in
+        range — compaction folded it in; caller falls back to full
+        recompute)."""
         frames = []
         for m in self.base.history()[:hi]:
             v = m["version"]
-            if v <= lo or m.get("compacted_through") is not None:
+            if v <= lo or m.get("compacted_through") is not None or m["rows"] == 0:
                 continue
             if m.get("expired"):
                 return None
@@ -147,8 +148,9 @@ class ContinuousAggregate:
             return {"processed_through": lo, "refreshed": False, "mode": "noop"}
         frames = self._delta_frames(spark, lo, hi)
         if frames is not None and not frames:
-            # only compaction snapshots in range: no new rows — advance
-            # the watermark so later deltas stay minimal, keep the data
+            # only compaction or empty snapshots in range: no new
+            # rows — advance the watermark so later deltas stay
+            # minimal, keep the data
             if ptr["data"] is not None:
                 self._publish(ptr["data"], hi)
                 return {"processed_through": hi, "refreshed": False,

@@ -196,7 +196,10 @@ def semantic_dedup(
 
     def sweep(key, pdf: pd.DataFrame) -> pd.DataFrame:
         b = int(key[1])
-        pdf = pdf.sort_values(id_col, kind="stable")
+        # the member order that assigned the blocks: re-sorting by id
+        # could order duplicate ids differently in each block and emit
+        # one row twice and another never
+        pdf = pdf.sort_values("__pos")
         E = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         out_start = min(b * s, len(pdf))
         nn, kept = _sweep_group(

@@ -15,7 +15,9 @@ to the table level):
 - **Time travel** — ``read(spark, version=k)`` is the union of
   snapshots 1..k; default is the latest.
 - **Stats pruning** — each manifest records per-tile row counts and
-  the snapshot's x/y bounds; ``read(window=...)`` skips whole
+  the snapshot's x/y bounds, read off the written files' parquet
+  footers on the driver (a commit runs no Spark job besides the
+  write itself); ``read(window=...)`` skips whole
   snapshots whose bounds miss the query window, then Spark's
   directory-partition pruning on ``tile`` and parquet min/max skip the
   rest.  At 10^12 documents this is the difference between listing
@@ -32,6 +34,11 @@ to the table level):
   below the compaction keeps working until ``expire_snapshots()``
   reclaims them (tombstone marker + data delete) — the Iceberg
   rewrite-data-files / expire-snapshots maintenance pair.
+
+The table root is a directory on the driver's local filesystem (or a
+mount every executor shares): versions are listed with ``os.listdir``,
+manifests published with ``os.link``/``os.replace``, and the footers
+behind each manifest read with ``pyarrow.parquet``.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ import json
 import os
 import uuid
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from .writer import write_tiled
@@ -149,40 +157,64 @@ class TiledTable:
             "aoi": [x_min, x_max, y_min, y_max],
             "x_col": x, "y_col": y,
         }
-        manifest = self._build_manifest(
-            df.sparkSession, version, snap_dir, x, y, layout, source
-        )
+        manifest = self._build_manifest(version, snap_dir, x, y, layout, source)
         return self._publish(manifest, version)
 
     def _build_manifest(
-        self, spark, version, snap_dir, x, y, layout, source, **extra
+        self, version, snap_dir, x, y, layout, source, **extra
     ) -> dict:
-        from pyspark.sql import functions as F
+        """Per-tile row counts and x/y bounds of a written snapshot,
+        read off its parquet footers on the driver, with no Spark job:
+        the tile is the ``tile=K`` directory, rows are the row-group
+        row counts, bounds the min/max of the x and y column
+        statistics.  A non-empty row group without min/max for x or y
+        makes ``bounds`` None, which read() treats as "never prune"."""
+        import pyarrow.parquet as pq
 
-        written = spark.read.parquet(snap_dir)
-        stats = (
-            written.groupBy("tile")
-            .agg(
-                F.count("*").alias("rows"),
-                F.min(x).alias("x_lo"), F.max(x).alias("x_hi"),
-                F.min(y).alias("y_lo"), F.max(y).alias("y_hi"),
-            )
-            .collect()
-        )
+        tiles: dict[str, int] = {}
+        lo, hi = ([], []), ([], [])
+        bounded = True
+        for part in sorted(os.listdir(snap_dir)):
+            if not part.startswith("tile="):
+                continue
+            tile = part[len("tile="):]
+            for name in sorted(os.listdir(os.path.join(snap_dir, part))):
+                if not name.endswith(".parquet"):
+                    continue
+                meta = pq.read_metadata(os.path.join(snap_dir, part, name))
+                cols = [meta.schema.column(j).path for j in range(meta.num_columns)]
+                xy = (cols.index(x), cols.index(y))
+                for i in range(meta.num_row_groups):
+                    group = meta.row_group(i)
+                    if group.num_rows == 0:
+                        continue
+                    tiles[tile] = tiles.get(tile, 0) + group.num_rows
+                    for k, j in enumerate(xy):
+                        stats = group.column(j).statistics
+                        if stats is None or not stats.has_min_max:
+                            bounded = False
+                        else:
+                            lo[k].append(stats.min)
+                            hi[k].append(stats.max)
+        bounds = None
+        if tiles and bounded:
+            # parquet orders NaN above every double, as Spark's min/max
+            # do: a NaN max wins, a NaN min only when every min is NaN
+            bounds = {
+                "x_lo": float(np.fmin.reduce(lo[0])),
+                "x_hi": float(np.maximum.reduce(hi[0])),
+                "y_lo": float(np.fmin.reduce(lo[1])),
+                "y_hi": float(np.maximum.reduce(hi[1])),
+            }
         return {
             "version": version,
             "parent": version - 1 if version > 1 else None,
             # table-root-relative (like Iceberg's manifests): the table
             # directory can be moved/cloned and manifests stay valid
             "snapshot_dir": os.path.relpath(snap_dir, self.path),
-            "rows": int(sum(r["rows"] for r in stats)),
-            "bounds": {
-                "x_lo": float(min(r["x_lo"] for r in stats)),
-                "x_hi": float(max(r["x_hi"] for r in stats)),
-                "y_lo": float(min(r["y_lo"] for r in stats)),
-                "y_hi": float(max(r["y_hi"] for r in stats)),
-            } if stats else None,
-            "tiles": {str(r["tile"]): int(r["rows"]) for r in stats},
+            "rows": sum(tiles.values()),
+            "bounds": bounds,
+            "tiles": tiles,
             "layout": layout,
             "source": source,
             **extra,
@@ -320,7 +352,7 @@ class TiledTable:
             cluster=layout["cluster"],
         )
         manifest = self._build_manifest(
-            spark, v + 1, snap_dir, x, y, layout, source, compacted_through=v
+            v + 1, snap_dir, x, y, layout, source, compacted_through=v
         )
         return self._publish(manifest, v + 1)
 
@@ -378,7 +410,9 @@ class TiledTable:
         With ``window=(x0, x1, y0, y1)``, snapshots whose recorded
         bounds miss the window are skipped entirely (manifest-level
         pruning); the returned frame is NOT window-filtered — compose
-        with points_in_spatial_window for the row-level cut."""
+        with points_in_spatial_window for the row-level cut.  Empty
+        snapshots (a commit of zero rows) hold no files and are always
+        skipped; a view with no rows at all raises ValueError."""
         version = version or self.current_version()
         if version < 1:
             raise ValueError(f"table {self.path} has no committed snapshots")
@@ -402,6 +436,8 @@ class TiledTable:
                     "expire_snapshots(); time travel below the newest "
                     "compaction is no longer available"
                 )
+            if m["rows"] == 0:
+                continue
             if window is not None and m["bounds"] is not None:
                 x0, x1, y0, y1 = window
                 b = m["bounds"]
@@ -419,7 +455,11 @@ class TiledTable:
             )
         if out is None:
             # every snapshot pruned: empty frame with the right schema
-            m = next((m for m in parts if not m.get("expired")), parts[0])
+            m = next((m for m in parts if m["rows"] > 0), None)
+            if m is None:
+                raise ValueError(
+                    f"table {self.path} has no rows at version {version}"
+                )
             base_df = spark.read.option("basePath", m["snapshot_dir"]).parquet(
                 m["snapshot_dir"]
             )

@@ -1,15 +1,23 @@
 """Tiled / z-ordered table writer.
 
-Writes a points table spatially clustered: rows range-partitioned by
-their full-depth Morton key (so files are z-order-contiguous, the
-batch analogue of the reference's Morton sort,
-detail/index/construction/phase_1.cuh) and directory-partitioned by
-the coarse tile id.  Readers then get:
+Writes a points table spatially clustered: rows hash-distributed by
+their coarse tile id (Spark's REBALANCE hint, which under AQE also
+coalesces small tiles and splits skewed ones), directory-partitioned
+by that tile, and sorted inside each task by ``(tile, key)`` where the
+key is the full-depth curve key (the batch analogue of the reference's
+Morton sort, detail/index/construction/phase_1.cuh).  A tile is an
+aligned quadrant, which is one contiguous range of either curve, so
+every written file holds one tile's rows in curve order.  Readers then
+get:
 
 - partition pruning for `points_in_spatial_window` and tile joins
   (the tile is a directory key);
 - intra-file locality for any per-tile refine (rows of one quadrant
-  are adjacent).
+  are adjacent, ordered along the curve).
+
+The distribution samples nothing: the write is one shuffle and one
+write stage, with no range-bounds job re-running the caller's plan
+(the ``hash`` write distribution Iceberg uses for partitioned tables).
 """
 
 from __future__ import annotations
@@ -35,13 +43,18 @@ def write_tiled(
     mode: str = "overwrite",
     cluster: str = "morton",
 ) -> None:
-    """cluster='morton' (default) range-partitions files by the
-    quadtree key — file key-ranges ARE quadrants, aligning exactly
-    with the tile join.  cluster='hilbert' range-partitions by the
-    S2-style Hilbert key instead: every file covers a spatially
-    connected, low-perimeter region (no Z-order diagonal jumps), which
-    minimizes files touched per window/kNN scan; the directory `tile`
-    key stays Morton-derived so partition pruning is unchanged."""
+    """cluster='morton' (default) sorts each file by the quadtree key,
+    so a file's key range is its quadrant and aligns exactly with the
+    tile join.  cluster='hilbert' sorts by the S2-style Hilbert key
+    instead: consecutive rows stay spatially connected (no Z-order
+    diagonal jumps), so parquet row-group min/max stats stay tight for
+    window/kNN scans.  Either way the directory `tile` key is
+    Morton-derived, so partition pruning is unchanged.
+
+    The sort is on ``(tile, key)``: the partitioned writer needs its
+    input ordered by ``tile``, and with ``tile`` as the leading sort
+    key Spark keeps this sort instead of replacing it with its own
+    ``tile``-only one."""
     if scale is None:
         scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
     key = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
@@ -76,8 +89,8 @@ def write_tiled(
     else:
         raise ValueError(f"unknown cluster curve: {cluster!r}")
     (
-        out.repartitionByRange(sort_key)
-        .sortWithinPartitions(sort_key)
+        out.hint("rebalance", "tile")
+        .sortWithinPartitions("tile", sort_key)
         .write.mode(mode)
         .partitionBy("tile")
         .parquet(path)

@@ -546,6 +546,62 @@ class TestTiledWriter:
         got = read_tiled(spark, path).where(F.col("tile") == 0).toPandas()
         assert (got["x"] < 4.0).all() and (got["y"] < 4.0).all()
 
+    @pytest.mark.parametrize("cluster", ["morton", "hilbert"])
+    def test_files_sorted_by_curve_key(self, spark, tmp_path, cluster):
+        """Every written file holds its rows in curve-key order, and the
+        write plan is one hash exchange on tile (no range-bounds
+        sampling) and one sort on (tile, key): the writer's own
+        tile-only sort must not replace the curve sort."""
+        import glob
+        import os
+        import re
+
+        import pyarrow.parquet as pq
+        from cuspatial_spark.sources.writer import write_tiled
+
+        rng = np.random.default_rng(12)
+        pdf = pd.DataFrame(
+            {"point_id": np.arange(3000), "x": rng.uniform(0, 8, 3000), "y": rng.uniform(0, 8, 3000)}
+        )
+        path = str(tmp_path / f"tiled_{cluster}")
+        write_tiled(
+            spark.createDataFrame(pdf), path, "x", "y", 0, 8, 0, 8,
+            max_depth=10, tile_level=2, cluster=cluster,
+        )
+        key = f"{cluster}_key"
+        files = glob.glob(os.path.join(path, "tile=*", "*.parquet"))
+        assert len(files) >= 16
+        for f in files:
+            k = pq.read_table(f, columns=[key]).column(key).to_numpy()
+            assert (np.diff(k) >= 0).all(), f
+
+        plan = _last_plan_writing(spark, path)
+        assert "rangepartitioning" not in plan
+        executed = plan.split("== Initial Plan ==")[0]
+        nodes = re.findall(r"(\w+) \((\d+)\)", executed)
+        names = [n for n, _ in nodes]
+        assert names.count("Exchange") == 1 and names.count("Sort") == 1, executed
+        exchange_id = nodes[names.index("Exchange")][1]
+        exchange = re.search(rf"^\({exchange_id}\) Exchange\n.*?^Arguments: (.*?)$",
+                             plan, re.M | re.S).group(1)
+        assert re.match(r"hashpartitioning\(tile#\d+L?, \d+\)", exchange), exchange
+        sort_id = nodes[names.index("Sort")][1]
+        order = re.search(rf"^\({sort_id}\) Sort.*?^Arguments: \[(.*?)\]",
+                          plan, re.M | re.S).group(1)
+        assert re.findall(r"(\w+)#\d+L? ASC", order) == ["tile", key]
+
+
+def _last_plan_writing(spark, path: str) -> str:
+    """Formatted physical plan of the session's last SQL execution that
+    names ``path`` (a write's plan names its output directory)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        plan = execs.apply(i).physicalPlanDescription()
+        if path in plan:
+            return plan
+    raise AssertionError(f"no SQL execution names {path}")
+
 
 class TestIvfTrainer:
     def test_train_and_search(self, spark):
@@ -626,6 +682,64 @@ class TestTiledTable:
         assert h[1]["parent"] == 1 and h[0]["source"] == "batch-1"
         assert h[0]["rows"] == 500 and h[1]["rows"] == 400
         assert h[0]["bounds"]["x_hi"] <= 4.0
+
+    def test_commit_runs_two_jobs(self, spark, tmp_path):
+        """A commit is one shuffle-map job plus one write job: no
+        range-bounds sampling job and no read-back of the written
+        files for the manifest."""
+        import uuid
+
+        from cuspatial_spark.sources.table import TiledTable
+
+        t = TiledTable(str(tmp_path / "table_jobs"))
+        rng = np.random.default_rng(22)
+        df = spark.createDataFrame(pd.DataFrame({
+            "point_id": np.arange(2000),
+            "x": rng.uniform(0, 8, 2000), "y": rng.uniform(0, 8, 2000)}))
+        sc = spark.sparkContext
+        group = f"tiled-commit-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "one TiledTable commit")
+        try:
+            t.commit(df, "x", "y", 0, 8, 0, 8)
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert 1 <= len(jobs) <= 2, jobs
+        assert t.history()[0]["rows"] == 2000
+
+    def test_empty_commit(self, spark, tmp_path):
+        """A commit of zero rows publishes an empty snapshot that every
+        read skips; a view with no rows at all raises, naming the
+        table."""
+        from cuspatial_spark.sources.table import TiledTable
+
+        def batch(lo, n):
+            rng = np.random.default_rng(lo)
+            return spark.createDataFrame(pd.DataFrame({
+                "point_id": np.arange(lo, lo + n),
+                "x": rng.uniform(0, 8, n), "y": rng.uniform(0, 8, n)}))
+
+        t = TiledTable(str(tmp_path / "table_empty"))
+        assert t.commit(batch(0, 300), "x", "y", 0, 8, 0, 8) == 1
+        assert t.commit(batch(0, 300).limit(0), "x", "y", 0, 8, 0, 8) == 2
+        assert t.commit(batch(300, 200), "x", "y", 0, 8, 0, 8) == 3
+        empty = t.history()[1]
+        assert (empty["rows"], empty["bounds"], empty["tiles"]) == (0, None, {})
+
+        def ids(version=None, window=None):
+            df = t.read(spark, version=version, window=window)
+            return sorted(r.point_id for r in df.select("point_id").collect())
+
+        assert ids(1) == ids(2) == list(range(300))
+        assert ids(3) == ids() == list(range(500))
+        assert ids(2, window=(100.0, 101.0, 100.0, 101.0)) == []
+        assert t.compact(spark) == 4
+        assert ids() == list(range(500))
+
+        bare = TiledTable(str(tmp_path / "table_bare"))
+        bare.commit(batch(0, 10).limit(0), "x", "y", 0, 8, 0, 8)
+        with pytest.raises(ValueError, match="table_bare"):
+            bare.read(spark)
 
     def test_crash_safe_publish(self, spark, tmp_path):
         """An orphan data directory without a manifest is invisible."""

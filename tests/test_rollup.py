@@ -132,6 +132,20 @@ class TestContinuousAggregate:
         t.commit(_batch(spark, 300, 150, seed=9, day=2), "x", "y", 0, 8, 0, 8)
         assert ca.refresh(spark)["mode"] == "delta"
 
+    def test_empty_commit_is_noop_advance(self, spark, tmp_path):
+        t = TiledTable(str(tmp_path / "base"))
+        ca = ContinuousAggregate(
+            t, str(tmp_path / "rollup"), time_col="ts", keys=["kind"],
+            aggs={"value": ["count", "sum"]},
+        )
+        t.commit(_batch(spark, 0, 150, seed=7, day=0), "x", "y", 0, 8, 0, 8)
+        ca.refresh(spark)
+        before = _norm_small(ca.read(spark))
+        t.commit(_batch(spark, 150, 150, seed=8, day=1).limit(0), "x", "y", 0, 8, 0, 8)
+        r = ca.refresh(spark)
+        assert not r["refreshed"] and r["processed_through"] == 2
+        pd.testing.assert_frame_equal(_norm_small(ca.read(spark)), before)
+
 
 def _norm_small(df):
     pdf = df.toPandas().sort_values(["bucket", "kind"]).reset_index(drop=True)

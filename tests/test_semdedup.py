@@ -6,7 +6,10 @@ pin: the pair stage must be a cluster equi-join with the cosine as a
 JVM fold (no Python stage besides the single centroid-assignment
 pandas_udf)."""
 
+import os
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from cuspatial_spark.similarity import semantic_dedup
@@ -137,3 +140,80 @@ def test_block_parallel_sweep_equals_single_task(spark, emb_df):
             .orderBy("vec_id").toPandas()
         )
         pd.testing.assert_frame_equal(got, base)
+
+
+
+def test_block_sweep_with_duplicate_ids():
+    """Duplicate ids inside one cluster: every block must sweep its
+    rows in the order the blocks were assigned, so the output is the
+    sweep of ONE member order (equal ids in any order) and every input
+    row comes out exactly once, for every block size.
+
+    Spark's sorts keep equal keys in arrival order until they spill,
+    which hides a block that re-sorts by id; the check runs in a child
+    session that forces a sort spill every few rows (a static conf,
+    hence its own process)."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [root, os.environ.get("PYTHONPATH", "")]))
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "import tests.test_semdedup as t; t._check_duplicate_id_sweep()"],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-4000:]
+
+
+def _check_duplicate_id_sweep():
+    from itertools import permutations, product
+
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[2]")
+        .config("spark.sql.shuffle.partitions", "2")
+        .config("spark.shuffle.spill.numElementsForceSpillThreshold", "3")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    try:
+        rng = np.random.default_rng(17)
+        ids = [0, 1, 2, 2, 2, 3, 4, 4, 4, 4, 5, 6, 6, 6, 7]
+        E = rng.normal(size=(len(ids), DIM))
+        df = spark.createDataFrame(
+            [(i, [float(v) for v in e]) for i, e in zip(ids, E)],
+            "vec_id long, embedding array<double>",
+        ).repartition(4)
+        En = E / np.linalg.norm(E, axis=1, keepdims=True)
+        S = En @ En.T
+
+        def swept(order):
+            """(id, nn) of each member, sorted, when the cluster is
+            swept in ``order`` (row indices)."""
+            return sorted((ids[r], S[r, order[:j]].max() if j else -np.inf)
+                          for j, r in enumerate(order))
+
+        groups = [[r for r, i in enumerate(ids) if i == v] for v in sorted(set(ids))]
+        valid = [
+            swept([r for g in choice for r in g])
+            for choice in product(*(permutations(g) for g in groups))
+        ]
+        for s in (1, 2, 3, 5, 8):
+            out = semantic_dedup(
+                df, centroids=np.zeros((1, DIM)), threshold=THRESH,
+                sweep_block_rows=s,
+            ).toPandas()
+            got = sorted(
+                (int(r.vec_id), -np.inf if pd.isna(r.nn_smaller_sim) else r.nn_smaller_sim)
+                for r in out.itertuples()
+            )
+            assert [i for i, _ in got] == sorted(ids), s
+            assert any(
+                np.allclose([v for _, v in got], [v for _, v in want], rtol=0, atol=1e-9)
+                for want in valid
+            ), f"sweep_block_rows={s}: no single member order gives this output"
+    finally:
+        spark.stop()

@@ -153,3 +153,96 @@ class TestExpire:
         assert t.read(spark).count() == 1000
         # idempotent
         assert t.expire_snapshots() == []
+
+
+def _spark_manifest_stats(spark, m):
+    """Oracle for a manifest's rows/bounds/tiles: a Spark groupBy("tile")
+    count/min/max over the snapshot's files, the tiles folded with
+    Spark's min/max (NaN above every double).  A tile whose x or y has
+    no non-null value has no bounds, and then neither has the
+    snapshot."""
+    from pyspark.sql import functions as F
+
+    x, y = m["layout"]["x_col"], m["layout"]["y_col"]
+    stats = spark.read.parquet(m["snapshot_dir"]).groupBy("tile").agg(
+        F.count("*").alias("rows"),
+        F.min(x).alias("x_lo"), F.max(x).alias("x_hi"),
+        F.min(y).alias("y_lo"), F.max(y).alias("y_hi"),
+    )
+    per_tile = stats.collect()
+    whole = stats.agg(
+        F.min("x_lo"), F.max("x_hi"), F.min("y_lo"), F.max("y_hi")
+    ).first()
+    keys = ("x_lo", "x_hi", "y_lo", "y_hi")
+    unbounded = any(r[k] is None for r in per_tile for k in keys)
+    return {
+        "rows": sum(r["rows"] for r in per_tile),
+        "bounds": None if unbounded else dict(zip(keys, whole)),
+        "tiles": {str(r["tile"]): r["rows"] for r in per_tile},
+    }
+
+
+def _comparable(stats):
+    """NaN != NaN, so compare NaN bounds by name."""
+    b = stats["bounds"]
+    if b is not None:
+        b = {k: "NaN" if v != v else v for k, v in b.items()}
+    return dict(stats, bounds=b)
+
+
+class TestManifestStats:
+    """Manifests are read off the written parquet footers; they must
+    equal the Spark aggregate over the same files."""
+
+    def _check(self, spark, t):
+        for m in t.history():
+            got = {k: m[k] for k in ("rows", "bounds", "tiles")}
+            assert _comparable(got) == _comparable(_spark_manifest_stats(spark, m)), m["version"]
+
+    def test_footer_stats_equal_spark_aggregate(self, spark, tmp_path):
+        nan, inf = float("nan"), float("inf")
+        rng = np.random.default_rng(31)
+        schema = "point_id long, x double, y double"
+        finite = [(i, float(a), float(b))
+                  for i, (a, b) in enumerate(rng.uniform(0, 8, (200, 2)))]
+        # NaN, +-inf and null coordinates, each sharing a tile with
+        # finite points (a null coordinate clamps to the last cell)
+        odd = [(1000, nan, 2.0), (1001, inf, 3.0), (1002, -inf, 4.0),
+               (1003, None, 5.0), (1004, 7.9, 5.0), (1005, 1.0, None),
+               (1006, 1.0, 7.9), (1007, 2.0, nan), (1008, 3.0, -inf)]
+        outside = [(2000 + i, float(a), float(b))
+                   for i, (a, b) in enumerate(rng.uniform(-3, 11, (200, 2)))]
+        all_nan_x = [(3000 + i, nan, float(b))
+                     for i, b in enumerate(rng.uniform(0, 8, 50))]
+        all_null_x = [(4000 + i, None, float(b))
+                      for i, b in enumerate(rng.uniform(0, 8, 50))]
+
+        t = TiledTable(str(tmp_path / "stats"))
+        for rows in (finite + odd, outside, all_nan_x, all_null_x):
+            t.commit(spark.createDataFrame(rows, schema), "x", "y", 0, 8, 0, 8)
+        t.compact(spark)
+        h = t.history()
+        assert h[0]["bounds"]["x_lo"] == -inf and h[0]["bounds"]["x_hi"] != h[0]["bounds"]["x_hi"]
+        assert h[1]["bounds"]["x_lo"] < 0 and h[1]["bounds"]["x_hi"] > 8
+        assert h[3]["bounds"] is None and h[3]["rows"] == 50
+        assert h[4]["rows"] == len(finite + odd + outside + all_nan_x + all_null_x)
+        self._check(spark, t)
+
+    def test_multiple_row_groups_per_file(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        conf = spark.sparkContext._jsc.hadoopConfiguration()
+        old = conf.get("parquet.block.size")
+        conf.set("parquet.block.size", "4096")
+        try:
+            t = TiledTable(str(tmp_path / "groups"))
+            t.commit(_batch(spark, 0, 4000, seed=32), "x", "y", 0, 8, 0, 8, tile_level=1)
+        finally:
+            if old is None:
+                conf.unset("parquet.block.size")
+            else:
+                conf.set("parquet.block.size", old)
+        groups = [pq.read_metadata(f).num_row_groups
+                  for f in _files(t.history()[0]["snapshot_dir"])]
+        assert max(groups) > 1, groups
+        self._check(spark, t)
