@@ -375,29 +375,12 @@ def q_pip_shuffle(spark, sf_dir):
     """The SALTED SHUFFLE scale path of the flagship join (the plan
     for non-broadcastable polygon layers, plans/shuffle_join.py):
     polygon features travel as DataFrame rows exploded to covered
-    tiles, the join shuffles on (tile, salt), and the refine rebuilds
-    per-batch polygon tables vectorized.  Must produce the identical
-    pair set as the broadcast pip_join — same oracle."""
-    import numpy as np
-
-    import pandas as pd
-
+    tiles with their segment lists, the join shuffles on (tile, salt),
+    and the refine is the broadcast plan's JVM ray cast.  Must produce
+    the identical pair set as the broadcast pip_join — same oracle."""
     from cuspatial_spark.plans.shuffle_join import point_in_polygon_join_shuffle
 
-    po = np.asarray(POLY_OFFSETS)
-    ro = np.asarray(RING_OFFSETS)
-    xs, ys = np.asarray(POLY_X), np.asarray(POLY_Y)
-    rows = []
-    for p in range(len(po) - 1):
-        vs, ve = ro[po[p]], ro[po[p + 1]]
-        seg_xy = np.empty(2 * (ve - vs))
-        seg_xy[::2] = xs[vs:ve]
-        seg_xy[1::2] = ys[vs:ve]
-        offs = [int(r - vs) for r in ro[po[p]:po[p + 1] + 1]]
-        rows.append((p, offs, seg_xy.tolist()))
-    poly_df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["polygon_id", "ring_offsets", "xy"])
-    )
+    poly_df = spark.createDataFrame(_polygons().to_arrow())
     pts = _points(spark, sf_dir).select("event_id", "x", "y")
     return point_in_polygon_join_shuffle(
         pts, poly_df, **AOI, max_depth=MAX_DEPTH, tile_level=TILE_LEVEL,

@@ -21,6 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 
 
 def _as_f(a) -> np.ndarray:
@@ -28,6 +29,32 @@ def _as_f(a) -> np.ndarray:
     if a.dtype not in (np.float32, np.float64):
         a = a.astype(np.float64)
     return a
+
+
+def _bounds(x, y, offsets, r):
+    """(minx, miny, maxx, maxy) grown by r, one row per feature, where
+    feature i spans vertices offsets[i] .. offsets[i+1]-1 (ranges are
+    contiguous, so one ``reduceat`` per bound covers the layer).  A
+    feature with no vertex gets NaN, as GeoPandas' bounds of an empty
+    geometry."""
+    out = np.full((4, len(offsets) - 1), np.nan)
+    has = np.flatnonzero(offsets[1:] > offsets[:-1])
+    if len(has):
+        xs, ys, s = x[: offsets[-1]], y[: offsets[-1]], offsets[has]
+        out[:, has] = [
+            np.minimum.reduceat(xs, s), np.minimum.reduceat(ys, s),
+            np.maximum.reduceat(xs, s), np.maximum.reduceat(ys, s),
+        ]
+    return out[0] - r, out[1] - r, out[2] + r, out[3] + r
+
+
+def _list_buffers(table, name):
+    """A list column's offsets (rebased to 0) and flat values."""
+    col = table.column(name)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    offs = col.offsets.to_numpy().astype(np.int64)
+    return offs - offs[0], col.values.to_numpy(zero_copy_only=False)[offs[0]:offs[-1]]
 
 
 def require_single_part(layer, op_name: str):
@@ -72,6 +99,48 @@ class PolygonArrays:
         xy = _as_f(xy)
         return cls(part_offsets, ring_offsets, xy[::2].copy(), xy[1::2].copy(), ids)
 
+    def to_arrow(self) -> pa.Table:
+        """The layer as one row per polygon, ``(polygon_id long,
+        ring_offsets array<int>, xy array<double>)``: the polygon's ring
+        offsets counted from its first vertex (its ring count plus one
+        entries) and its vertices interleaved x, y.  The inverse of
+        ``from_arrow``."""
+        po, ro = self.part_offsets, self.ring_offsets
+        entries = np.diff(po) + 1
+        list_offs = np.concatenate(([0], np.cumsum(entries)))
+        ring = np.arange(list_offs[-1]) - np.repeat(list_offs[:-1] - po[:-1], entries)
+        local = ro[ring] - np.repeat(ro[po[:-1]], entries)
+        v0, v1 = ro[po[0]], ro[po[-1]]
+        xy = np.empty(2 * (v1 - v0))
+        xy[0::2], xy[1::2] = self.x[v0:v1], self.y[v0:v1]
+        return pa.table({
+            "polygon_id": self.ids,
+            "ring_offsets": pa.ListArray.from_arrays(
+                pa.array(list_offs, pa.int32()), pa.array(local, pa.int32())
+            ),
+            "xy": pa.ListArray.from_arrays(pa.array(2 * (ro[po] - v0), pa.int32()), xy),
+        })
+
+    @classmethod
+    def from_arrow(cls, table, id_col="polygon_id", ring_offsets_col="ring_offsets",
+                   xy_col="xy"):
+        """The layer held in the ``to_arrow`` row format of a pyarrow
+        Table or RecordBatch (any integer type for the ring offsets).
+        A polygon whose list has k ring offsets has k - 1 rings; its
+        last offset is taken to be its vertex count."""
+        ro_offs, local = _list_buffers(table, ring_offsets_col)
+        xy_offs, xy = _list_buffers(table, xy_col)
+        rings = np.maximum(np.diff(ro_offs) - 1, 0)
+        # a polygon's ring starts are all its offsets but the last,
+        # moved to where its vertices start in the layer
+        start = np.ones(len(local), dtype=bool)
+        start[ro_offs[1:][ro_offs[1:] > ro_offs[:-1]] - 1] = False
+        vbase = xy_offs // 2
+        ring_offsets = np.append(local[start] + np.repeat(vbase[:-1], rings), vbase[-1])
+        ids = table.column(id_col).to_numpy()
+        return cls(np.concatenate(([0], np.cumsum(rings))), ring_offsets,
+                   xy[0::2], xy[1::2], ids)
+
     def __len__(self):
         return len(self.part_offsets) - 1
 
@@ -82,19 +151,8 @@ class PolygonArrays:
     def bounding_boxes(self, expansion_radius: float = 0.0):
         """(minx, miny, maxx, maxy) arrays, one row per polygon
         (reference core/spatial/bounding.py:19-80)."""
-        s, e = self.vertex_ranges()
-        n = len(self)
-        minx = np.empty(n)
-        miny = np.empty(n)
-        maxx = np.empty(n)
-        maxy = np.empty(n)
-        for i in range(n):  # driver-side over broadcastable layer; n is small
-            minx[i] = self.x[s[i]:e[i]].min()
-            maxx[i] = self.x[s[i]:e[i]].max()
-            miny[i] = self.y[s[i]:e[i]].min()
-            maxy[i] = self.y[s[i]:e[i]].max()
-        r = expansion_radius
-        return minx - r, miny - r, maxx + r, maxy + r
+        offsets = self.ring_offsets[self.part_offsets]
+        return _bounds(self.x, self.y, offsets, expansion_radius)
 
 
 @dataclass
@@ -128,19 +186,7 @@ class MultipointArrays:
         return len(self.part_offsets) - 1
 
     def bounding_boxes(self, expansion_radius: float = 0.0):
-        o = self.part_offsets
-        n = len(self)
-        minx = np.empty(n)
-        miny = np.empty(n)
-        maxx = np.empty(n)
-        maxy = np.empty(n)
-        for i in range(n):
-            minx[i] = self.x[o[i]:o[i + 1]].min()
-            maxx[i] = self.x[o[i]:o[i + 1]].max()
-            miny[i] = self.y[o[i]:o[i + 1]].min()
-            maxy[i] = self.y[o[i]:o[i + 1]].max()
-        r = expansion_radius
-        return minx - r, miny - r, maxx + r, maxy + r
+        return _bounds(self.x, self.y, self.part_offsets, expansion_radius)
 
 
 @dataclass
@@ -188,19 +234,8 @@ class MultiLinestringArrays:
         """One bbox per GEOMETRY, parts flattened (reference
         core/spatial/bounding.py:83-130 linestring_bounding_boxes
         accepts multilinestrings the same way)."""
-        s, e = self.vertex_ranges()
-        n = len(self)
-        minx = np.empty(n)
-        miny = np.empty(n)
-        maxx = np.empty(n)
-        maxy = np.empty(n)
-        for i in range(n):
-            minx[i] = self.parts.x[s[i]:e[i]].min()
-            maxx[i] = self.parts.x[s[i]:e[i]].max()
-            miny[i] = self.parts.y[s[i]:e[i]].min()
-            maxy[i] = self.parts.y[s[i]:e[i]].max()
-        r = expansion_radius
-        return minx - r, miny - r, maxx + r, maxy + r
+        offsets = self.parts.part_offsets[self.geometry_offsets]
+        return _bounds(self.parts.x, self.parts.y, offsets, expansion_radius)
 
 
 @dataclass
@@ -245,19 +280,8 @@ class MultiPolygonArrays:
     def bounding_boxes(self, expansion_radius: float = 0.0):
         """One bbox per GEOMETRY, parts flattened (reference
         core/spatial/bounding.py:19-80 flattens multipolygon parts)."""
-        s, e = self.vertex_ranges()
-        n = len(self)
-        minx = np.empty(n)
-        miny = np.empty(n)
-        maxx = np.empty(n)
-        maxy = np.empty(n)
-        for i in range(n):
-            minx[i] = self.parts.x[s[i]:e[i]].min()
-            maxx[i] = self.parts.x[s[i]:e[i]].max()
-            miny[i] = self.parts.y[s[i]:e[i]].min()
-            maxy[i] = self.parts.y[s[i]:e[i]].max()
-        r = expansion_radius
-        return minx - r, miny - r, maxx + r, maxy + r
+        offsets = self.parts.ring_offsets[self.parts.part_offsets[self.geometry_offsets]]
+        return _bounds(self.parts.x, self.parts.y, offsets, expansion_radius)
 
 
 @dataclass
@@ -288,16 +312,4 @@ class LinestringArrays:
         return len(self.part_offsets) - 1
 
     def bounding_boxes(self, expansion_radius: float = 0.0):
-        o = self.part_offsets
-        n = len(self)
-        minx = np.empty(n)
-        miny = np.empty(n)
-        maxx = np.empty(n)
-        maxy = np.empty(n)
-        for i in range(n):
-            minx[i] = self.x[o[i]:o[i + 1]].min()
-            maxx[i] = self.x[o[i]:o[i + 1]].max()
-            miny[i] = self.y[o[i]:o[i + 1]].min()
-            maxy[i] = self.y[o[i]:o[i + 1]].max()
-        r = expansion_radius
-        return minx - r, miny - r, maxx + r, maxy + r
+        return _bounds(self.x, self.y, self.part_offsets, expansion_radius)

@@ -5,5 +5,5 @@ from .tile_join import (  # noqa: F401
     tiles_covering_bboxes,
 )
 from .knn_join import knn_join  # noqa: F401
-from .shuffle_join import point_in_polygon_join_shuffle, polygon_tiles_df  # noqa: F401
+from .shuffle_join import point_in_polygon_join_shuffle  # noqa: F401
 from .spherical_join import geodesic_knn_join, haversine_radius_join  # noqa: F401

@@ -82,15 +82,19 @@ def tiles_covering_bboxes(
     covers.  Returns (bbox_index, tile) flat arrays.  Vectorized per
     bbox over the covered cell grid; cells are clipped to the AOI grid
     range so out-of-AOI bbox area is ignored (out-of-AOI points carry
-    the sentinel key and can never match)."""
+    the sentinel key and can never match).  A bbox with a non-finite
+    bound (an empty feature's NaN bbox) covers no tile."""
     tile_scale = scale * (1 << (max_depth - tile_level))
     n_cells = 1 << tile_level
-    tx0 = np.clip(np.floor((minx - x_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-    tx1 = np.clip(np.floor((maxx - x_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-    ty0 = np.clip(np.floor((miny - y_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
-    ty1 = np.clip(np.floor((maxy - y_min) / tile_scale).astype(np.int64), 0, n_cells - 1)
+    finite = np.isfinite(minx) & np.isfinite(miny) & np.isfinite(maxx) & np.isfinite(maxy)
 
-    counts = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
+    def cell(v, origin):  # clipped before the cast, so no int overflow
+        c = np.floor((np.where(finite, v, origin) - origin) / tile_scale)
+        return np.clip(c, 0, n_cells - 1).astype(np.int64)
+
+    tx0, tx1 = cell(minx, x_min), cell(maxx, x_min)
+    ty0, ty1 = cell(miny, y_min), cell(maxy, y_min)
+    counts = np.where(finite, (tx1 - tx0 + 1) * (ty1 - ty0 + 1), 0)
     bbox_idx = np.repeat(np.arange(len(minx), dtype=np.int64), counts)
     # per-bbox local grid enumeration
     flat = np.arange(int(counts.sum()), dtype=np.int64)
@@ -104,20 +108,15 @@ def tiles_covering_bboxes(
 
 
 PIP_JOIN_SCHEMA_SUFFIX = [StructField("polygon_id", LongType(), False)]
+SEGS_TYPE = "array<struct<ax:double,ay:double,bx:double,by:double>>"
 
 
-def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFrame:
-    """The polygon layer as a one-row-per-polygon broadcastable
-    DataFrame ``(__poly_idx, polygon_id, __segs array<struct>)``.
-
-    Measured (BASELINE.md "Refine-path threshold validation"):
-    embedding the layer as a LITERAL Catalyst map costs super-linear
-    driver plan-build time (16 s at 1k segments, 117 s at 10k); as
-    ordinary broadcast-join DATA the plan is constant-size, and the
-    refine expression runs identically JVM-side over the joined array
-    column.  The table is an Arrow-built local relation: building it
-    runs no Spark job and no per-row Python.
-    """
+def _polygon_segments(polygons: PolygonArrays) -> pa.ListArray:
+    """One list of ring segments ``(ax, ay, bx, by)`` per polygon, the
+    ``SEGS_TYPE`` column that ``_pip_jvm_hit_expr`` reads: each ring
+    closed (its first vertex pairs with its last), zero-length segments
+    dropped.  Vectorized over the layer, with no loop over polygons,
+    rings or vertices."""
     po, ro = polygons.part_offsets, polygons.ring_offsets
     px = np.asarray(polygons.x, dtype=np.float64)
     py = np.asarray(polygons.y, dtype=np.float64)
@@ -134,12 +133,28 @@ def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFr
     segs = pa.StructArray.from_arrays(
         [pa.array(c[keep]) for c in (ax, ay, bx, by)], names=["ax", "ay", "bx", "by"]
     )
-    seg_lists = pa.ListArray.from_arrays(pa.array(kept_before[ro[po]], pa.int32()), segs)
+    return pa.ListArray.from_arrays(pa.array(kept_before[ro[po]], pa.int32()), segs)
+
+
+def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFrame:
+    """The polygon layer as a one-row-per-polygon broadcastable
+    DataFrame ``(__poly_idx, polygon_id, __segs)``.
+
+    Measured (BASELINE.md "Refine-path threshold validation"):
+    embedding the layer as a LITERAL Catalyst map costs super-linear
+    driver plan-build time (16 s at 1k segments, 117 s at 10k); as
+    ordinary broadcast-join DATA the plan is constant-size, and the
+    refine expression runs identically JVM-side over the joined array
+    column.  The table is an Arrow-built local relation: building it
+    runs no Spark job and no per-row Python.
+    """
     return spark.createDataFrame(
-        pa.table([np.arange(len(polygons.ids), dtype=np.int64), polygons.ids, seg_lists],
-                 names=["__poly_idx", "polygon_id", "__segs"]),
-        schema="__poly_idx long, polygon_id long, "
-        "__segs array<struct<ax:double,ay:double,bx:double,by:double>>",
+        pa.table(
+            [np.arange(len(polygons.ids), dtype=np.int64), polygons.ids,
+             _polygon_segments(polygons)],
+            names=["__poly_idx", "polygon_id", "__segs"],
+        ),
+        schema=f"__poly_idx long, polygon_id long, __segs {SEGS_TYPE}",
     )
 
 
@@ -350,12 +365,8 @@ def point_to_nearest_linestring_join(
     seg_offsets = np.concatenate(([0], np.cumsum(counts + lone)))
     lx, ly, lids = linestrings.x[vert], linestrings.y[vert], linestrings.ids
 
-    # bboxes of the lines that have a vertex; the others get no cover
-    line = np.flatnonzero(counts > 0)
-    xs = np.asarray(linestrings.x[: po[-1]], dtype=np.float64)
-    ys = np.asarray(linestrings.y[: po[-1]], dtype=np.float64)
-    minx, maxx = np.minimum.reduceat(xs, po[line]), np.maximum.reduceat(xs, po[line])
-    miny, maxy = np.minimum.reduceat(ys, po[line]), np.maximum.reduceat(ys, po[line])
+    # a line with no vertex has a NaN bbox, so no cover
+    minx, miny, maxx, maxy = linestrings.bounding_boxes()
 
     def cover(r):
         """(tiles, offsets, line indices): the lines whose bbox grown by
@@ -370,7 +381,7 @@ def point_to_nearest_linestring_join(
         return (
             np.append(keys, np.iinfo(np.int64).max),
             np.append(first, [len(order), len(order)]),
-            line[bbox[order]],
+            bbox[order],
         )
 
     radii = []

@@ -220,16 +220,7 @@ class TestMultimodal:
 def _pip_polygon_df(spark, polys):
     """A PolygonArrays layer as the shuffle join's per-feature rows
     (polygon_id, polygon-local ring_offsets, interleaved xy)."""
-    rows = []
-    for p in range(len(polys)):
-        ro = polys.ring_offsets[polys.part_offsets[p]:polys.part_offsets[p + 1] + 1]
-        xy = np.empty(2 * (ro[-1] - ro[0]))
-        xy[::2] = polys.x[ro[0]:ro[-1]]
-        xy[1::2] = polys.y[ro[0]:ro[-1]]
-        rows.append((int(polys.ids[p]), (ro - ro[0]).tolist(), xy.tolist()))
-    return spark.createDataFrame(
-        rows, "polygon_id long, ring_offsets array<long>, xy array<double>"
-    )
+    return spark.createDataFrame(polys.to_arrow())
 
 
 def _pip_all_paths(spark, pts, polys, keep, **kw):
@@ -360,6 +351,78 @@ class TestShuffleJoin:
             _assert_paths_equal(_pip_all_paths(spark, pts.repartition(3), polys, ["b", "a"], **kw))
 
         check()
+
+    def test_on_edge_points_match_broadcast_default(self, spark):
+        """Points exactly on vertices and edges of integer-grid
+        polygons (closed and unclosed rings, a hole): every shuffle
+        variant returns the broadcast default's (edge_exact=False)
+        rows, where on-edge membership follows the crossing parity."""
+        from cuspatial_spark.geometry import PolygonArrays
+
+        rings = [
+            [(1, 1), (4, 1), (4, 4), (1, 4), (1, 1)],  # closed, with a hole
+            [(2, 2), (3, 2), (3, 3), (2, 3), (2, 2)],
+            [(5, 1), (7, 1), (5, 3)],  # unclosed triangle
+            [(1, 5), (4, 5), (4, 6), (2, 6), (2, 7), (1, 7)],  # unclosed L
+            [(6, 4), (7, 5), (6, 6), (5, 5), (6, 4)],  # closed diamond
+        ]
+        xy = np.array([v for r in rings for v in r], dtype=np.float64)
+        polys = PolygonArrays(
+            [0, 2, 3, 4, 5], np.cumsum([0] + [len(r) for r in rings]), xy[:, 0], xy[:, 1]
+        )
+        gx, gy = np.meshgrid(np.arange(17) / 2, np.arange(17) / 2)
+        pts = spark.createDataFrame(pd.DataFrame(
+            {"point_id": np.arange(gx.size), "x": gx.ravel(), "y": gy.ravel()}
+        )).repartition(3)
+        kw = dict(x_min=0, x_max=8, y_min=0, y_max=8, max_depth=8, tile_level=3)
+        got = _pip_all_paths(spark, pts, polys, ["point_id"], **kw)
+        # the layer has on-edge points whose memberships differ by rule
+        assert got["broadcast edge_exact"] != got["broadcast"]
+        _assert_paths_equal({k: v for k, v in got.items() if k != "broadcast edge_exact"})
+
+    @pytest.mark.parametrize("part_offsets,ring_offsets", [
+        ([0, 1, 1, 2], [0, 5, 10]),  # the empty polygon has no ring
+        ([0, 1, 2, 3], [0, 5, 5, 10]),  # ... or one empty ring
+    ], ids=["no-ring", "empty-ring"])
+    def test_zero_vertex_polygon(self, spark, part_offsets, ring_offsets):
+        """A layer [square, zero-vertex polygon, square]: every path
+        returns the two squares' rows, and none raises."""
+        from cuspatial_spark.geometry import PolygonArrays
+
+        sx, sy = np.array([0.0, 2, 2, 0, 0]), np.array([0.0, 0, 2, 2, 0])
+        polys = PolygonArrays(part_offsets, ring_offsets,
+                              np.r_[sx + 1, sx + 5], np.r_[sy + 1, sy + 5])
+        pts = spark.createDataFrame(pd.DataFrame(
+            {"point_id": [0, 1, 2], "x": [2.0, 6.0, 4.0], "y": [2.0, 6.0, 4.0]}
+        ))
+        kw = dict(x_min=0, x_max=8, y_min=0, y_max=8, max_depth=8, tile_level=3)
+        got = _pip_all_paths(spark, pts, polys, ["point_id"], **kw)
+        _assert_paths_equal(got)
+        assert got["broadcast"][1] == [(0, 0), (1, 2)]
+
+    def test_arrow_rows_round_trip(self):
+        """PolygonArrays -> shuffle-join rows -> PolygonArrays is the
+        identity, with holes, a trailing empty ring, a polygon with no
+        ring and one whose only ring is empty; a sliced batch reads
+        back its own polygons."""
+        from cuspatial_spark.geometry import PolygonArrays
+
+        polys = PolygonArrays(
+            [0, 2, 4, 4, 5, 6], [0, 4, 7, 11, 11, 14, 14],
+            np.arange(14.0), -np.arange(14.0), ids=[5, 6, 7, 8, 9],
+        )
+        table = polys.to_arrow()
+        assert table.column("ring_offsets").to_pylist() == [
+            [0, 4, 7], [0, 4, 4], [0], [0, 3], [0, 0]
+        ]
+        back = PolygonArrays.from_arrow(table)
+        for f in ("part_offsets", "ring_offsets", "x", "y", "ids"):
+            np.testing.assert_array_equal(getattr(back, f), getattr(polys, f), err_msg=f)
+        part = PolygonArrays.from_arrow(table.to_batches()[0].slice(1, 3))
+        np.testing.assert_array_equal(part.ids, [6, 7, 8])
+        np.testing.assert_array_equal(part.part_offsets, [0, 2, 2, 3])
+        np.testing.assert_array_equal(part.ring_offsets, [0, 4, 4, 7])
+        np.testing.assert_array_equal(part.x, np.arange(7.0, 14.0))
 
 
 class TestStreaming:

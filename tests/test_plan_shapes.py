@@ -19,6 +19,29 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _tree(node):
+    """A physical plan node as ``(name, output column names, children)``,
+    with the adaptive wrapper replaced by the plan it holds."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    out, kids = node.output(), node.children()
+    return (
+        node.nodeName(),
+        [out.apply(i).name() for i in range(out.size())],
+        [_tree(kids.apply(i)) for i in range(kids.size())],
+    )
+
+
+def _nodes(tree):
+    yield tree
+    for child in tree[2]:
+        yield from _nodes(child)
+
+
+def _is_python(name: str) -> bool:
+    return "Python" in name or "InPandas" in name or "InArrow" in name
+
+
 @pytest.fixture()
 def pts(spark):
     rng = np.random.default_rng(7)
@@ -111,6 +134,29 @@ class TestFlagshipJoinPlan:
             assert "ExistingRDD" not in plan and "LocalTableScan" in plan
         finally:
             spark.conf.set(key, before)
+
+    @pytest.mark.parametrize("salt", [0, 4])
+    def test_shuffle_join_python_only_over_polygon_rows(self, spark, pts, polys, salt):
+        """The shuffle join's one Python node is the MapInArrow that
+        turns the polygon rows into (tile, polygon_id, __segs); the
+        point side and everything above the join (the JVM ray cast)
+        stay in the JVM.  The exchange type is not pinned: on inputs
+        this small Catalyst and AQE may broadcast either side."""
+        from cuspatial_spark.plans import point_in_polygon_join_shuffle
+
+        poly_df = spark.createDataFrame(polys.to_arrow())
+        out = point_in_polygon_join_shuffle(
+            pts, poly_df, x_min=0, x_max=8, y_min=0, y_max=8,
+            max_depth=12, tile_level=4, salt=salt,
+        )
+        tree = _tree(out._jdf.queryExecution().executedPlan())
+        python = [n for n in _nodes(tree) if _is_python(n[0])]
+        assert [n[0] for n in python] == ["MapInArrow"], python
+        joins = [n for n in _nodes(tree) if "Join" in n[0]]
+        assert len(joins) == 1 and any(n is python[0] for n in _nodes(joins[0]))
+        below = list(_nodes(python[0]))[1:]
+        assert not any("Join" in n[0] for n in below)
+        assert [n[1] for n in below if not n[2]] == [poly_df.columns]
 
     def test_kernel_refine_single_arrow_stage(self, spark, pts, polys):
         """The exact-edge kernel path: same broadcast filter, exactly

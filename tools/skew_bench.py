@@ -5,7 +5,9 @@ tile.  The shuffle join keys on tile, so that tile's candidates all
 hit a single reducer — the straggler the north_rule's "salting for hot
 H3 cells" exists to fix.  This tool measures the same job unsalted vs
 salted (AQE disabled so Spark's own skew mitigation doesn't mask the
-mechanism; on a real cluster you'd run salting AND AQE).
+mechanism; on a real cluster you'd run salting AND AQE).  It runs the
+shuffle join's own candidate stage (``_shuffle_candidates``), so the
+salting it measures is the join's.
 
 Prints one JSON line with both times and the speedup.
 """
@@ -25,16 +27,16 @@ HOT_FRACTION = 0.85
 
 def main() -> None:
     import numpy as np
-    import pandas as pd
     from pyspark.sql import SparkSession, functions as F
 
-    from cuspatial_spark.plans.shuffle_join import point_in_polygon_join_shuffle
-    from cuspatial_spark.plans.tile_join import tiles_covering_bboxes
+    from cuspatial_spark.geometry import PolygonArrays
+    from cuspatial_spark.plans.shuffle_join import _shuffle_candidates
 
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.sql.adaptive.enabled", "false")  # isolate the salting effect
+        .config("spark.sql.autoBroadcastJoinThreshold", "-1")  # shuffle the join
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "250000")
         .config("spark.driver.memory", "24g")
         .config("spark.ui.enabled", "false")
@@ -60,63 +62,38 @@ def main() -> None:
 
     # polygon layer as a DataFrame (shuffle path): 64 squares tiling the
     # city cell plus a few spread over the rest of the AOI
-    rows = []
-    pid = 0
-    for gi in range(8):
-        for gj in range(8):
-            x0, y0 = gi / 8.0, gj / 8.0
-            s = 1 / 8.0
-            rows.append((pid, [0, 5],
-                         [x0, y0, x0 + s, y0, x0 + s, y0 + s, x0, y0 + s, x0, y0]))
-            pid += 1
-    for gi in range(4):
-        x0, y0 = 2.0 + gi * 1.5, 4.0
-        rows.append((pid, [0, 5],
-                     [x0, y0, x0 + 1, y0, x0 + 1, y0 + 1, x0, y0 + 1, x0, y0]))
-        pid += 1
-    poly_df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["polygon_id", "ring_offsets", "xy"])
-    ).cache()
+    sx, sy = np.array([0.0, 1, 1, 0, 0]), np.array([0.0, 0, 1, 1, 0])
+    x0 = np.r_[np.repeat(np.arange(8) / 8.0, 8), 2.0 + 1.5 * np.arange(4)]
+    y0 = np.r_[np.tile(np.arange(8) / 8.0, 8), np.full(4, 4.0)]
+    size = np.r_[np.full(64, 1 / 8.0), np.ones(4)]
+    polys = PolygonArrays(
+        np.arange(69), 5 * np.arange(69),
+        (x0[:, None] + size[:, None] * sx).ravel(),
+        (y0[:, None] + size[:, None] * sy).ravel(),
+    )
+    poly_df = spark.createDataFrame(polys.to_arrow()).cache()
     poly_df.count()
 
-    kw = dict(x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0, max_depth=12,
-              tile_level=3)
     # hot tiles at level 3: the city cell [0,1)^2 = tile (0,0) -> morton 0
     #
-    # NOTE on methodology: the polygon-tile side must be forced to a
-    # shuffle join (hint) — Catalyst would broadcast a layer this small
-    # and there'd be no shuffle to skew.  In this sandbox the
-    # Arrow/Python refine is bound by a serial ~4-5M rows/s ceiling
-    # (see BASELINE.md), so salting can't improve WALL time here; the
-    # demonstrable effect is reducer balance — max-candidates-per-
-    # reducer drops by the salt factor, which on a real multi-executor
-    # cluster is exactly the straggler salting removes.
-    from cuspatial_spark.plans.shuffle_join import polygon_tiles_df
-    from cuspatial_spark.plans.tile_join import assign_tiles
-
+    # NOTE on methodology: the polygon-tile side must be shuffled
+    # (broadcast joins are off in this session) — Catalyst would
+    # broadcast a layer this small and there'd be no shuffle to skew.
+    # The tool counts the join's candidates per reducer, before the
+    # refine: the demonstrable effect of salting is reducer balance —
+    # max-candidates-per-reducer drops by the salt factor, which on a
+    # real multi-executor cluster is exactly the straggler salting
+    # removes.
     results = {}
     scale = 8.0 / ((1 << 12) + 2)
     for label, salt, hot_tiles in (
         ("unsalted", 0, None),
         ("salted", 16, [0]),
     ):
-        ptiles = polygon_tiles_df(poly_df, 0.0, 0.0, scale, 12, 3)
-        p = assign_tiles(pts, "x", "y", 0.0, 8.0, 0.0, 8.0, scale, 12, 3)
-        keys = ["tile"]
-        if salt:
-            salts = F.array(*[F.lit(s_) for s_ in range(salt)])
-            hot = F.col("tile").isin(hot_tiles)
-            ptiles = ptiles.withColumn(
-                "salt", F.explode(F.when(hot, salts).otherwise(F.array(F.lit(-1))))
-            )
-            p = p.withColumn(
-                "salt",
-                F.when(F.col("tile").isin(hot_tiles),
-                       F.pmod(F.hash(F.col("x"), F.col("y")), F.lit(salt))
-                ).otherwise(F.lit(-1)),
-            )
-            keys.append("salt")
-        cand = p.join(ptiles.hint("shuffle_hash"), on=keys).select("point_id")
+        cand = _shuffle_candidates(
+            pts, poly_df, "x", "y", 0.0, 8.0, 0.0, 8.0, scale, 12, 3,
+            ["point_id", "x", "y"], salt, hot_tiles, "polygon_id", "ring_offsets", "xy",
+        ).select("point_id")
         sizes = (
             cand.groupBy(F.spark_partition_id().alias("pid"))
             .count()
