@@ -1,5 +1,12 @@
+"""Pure Catalyst column expressions (see ``expressions``).
+
+``morton_key_expr`` and ``inside_aoi`` take the x and y column NAMES,
+not Columns: each is built as one SQL text over them.  The other
+expressions take Columns."""
+
 from .expressions import (  # noqa: F401
     haversine_expr,
+    inside_aoi,
     morton_key_expr,
     s2_cell_expr,
     sinusoidal_x_expr,

@@ -70,36 +70,76 @@ def _dilate2_expr(c: Column) -> Column:
     return x
 
 
+def sql_name(name: str) -> str:
+    """A column name as SQL text that resolves like ``F.col(name)``:
+    each dot-separated part backquoted, so a dot still reaches a
+    nested field."""
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def _sql_double(v: float) -> str:
+    """A double literal as SQL text that parses to exactly ``v``."""
+    return f"{float(v)!r}D"
+
+
+def _inside_aoi_sql(x: str, y: str, x_min, x_max, y_min, y_max) -> str:
+    return (
+        f"{x} >= {_sql_double(x_min)} AND {x} <= {_sql_double(x_max)} "
+        f"AND {y} >= {_sql_double(y_min)} AND {y} <= {_sql_double(y_max)}"
+    )
+
+
+def inside_aoi(x: str, y: str, x_min, x_max, y_min, y_max) -> Column:
+    """The inclusive AOI test of the columns named ``x`` and ``y``: the
+    points ``morton_key_expr`` keys without the sentinel.  It is false
+    for null, NaN and infinite coordinates (Spark orders NaN above
+    +inf).  The tile joins filter points with it before keying them, so
+    no point reaches a join with the sentinel key."""
+    return F.expr(_inside_aoi_sql(sql_name(x), sql_name(y), x_min, x_max, y_min, y_max))
+
+
+def _dilate2_sql(c: str) -> str:
+    """SQL text of ``_dilate2_expr``: bit i of the 16-bit value ``c``
+    moves to bit 2i."""
+    c = f"CAST({c} AS BIGINT)"
+    for shift, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555)):
+        c = f"(({c} | shiftleft({c}, {shift})) & {mask})"
+    return c
+
+
 def morton_key_expr(
-    x, y, x_min: float, x_max: float, y_min: float, y_max: float,
+    x: str, y: str, x_min: float, x_max: float, y_min: float, y_max: float,
     scale: float, max_depth: int,
 ) -> Column:
-    """Full-depth Morton key per point (bigint column); out-of-AOI
-    points get the sentinel max key, matching
-    detail/index/construction/phase_1.cuh:60-95.
+    """Full-depth Morton key (bigint column) of the point in columns
+    named ``x`` and ``y``; out-of-AOI points get the sentinel max key,
+    matching detail/index/construction/phase_1.cuh:60-95.
 
     Unlike the reference kernel, in-AOI cell coordinates are clamped to
     the 2^max_depth grid: the reference's minimum-scale rule
     (range/((1<<depth)+2)) lets boundary cells overflow the grid, which
     is harmless for its BFS but would strand boundary points in tiles
     no bbox cover enumerates.  The clamp keeps every in-AOI point in a
-    coverable tile."""
-    cmax = F.lit((1 << max_depth) - 1)
-    ux = F.least(
-        F.floor((x - F.lit(float(x_min))) / F.lit(float(scale))).cast("bigint"), cmax
+    coverable tile.
+
+    The key is built as ONE SQL text, parsed by the JVM in one call;
+    the same tree assembled from Column calls paid a Py4J round trip
+    per node (about 0.1 s per key against under 1 ms, 4-core VM)."""
+    if not (isinstance(x, str) and isinstance(y, str)):
+        raise TypeError("morton_key_expr takes the x and y column NAMES")
+    x, y = sql_name(x), sql_name(y)
+
+    def cell(v: str, origin: float) -> str:
+        return (
+            f"least(CAST(FLOOR(({v} - {_sql_double(origin)}) / {_sql_double(scale)}) "
+            f"AS BIGINT), {(1 << max_depth) - 1})"
+        )
+
+    inside = _inside_aoi_sql(x, y, x_min, x_max, y_min, y_max)
+    return F.expr(
+        f"CASE WHEN NOT ({inside}) THEN {(1 << (2 * max_depth)) - 1} ELSE "
+        f"(shiftleft({_dilate2_sql(cell(y, y_min))}, 1) | {_dilate2_sql(cell(x, x_min))}) END"
     )
-    uy = F.least(
-        F.floor((y - F.lit(float(y_min))) / F.lit(float(scale))).cast("bigint"), cmax
-    )
-    key = F.shiftleft(_dilate2_expr(uy), 1).bitwiseOR(_dilate2_expr(ux))
-    sentinel = F.lit((1 << (2 * max_depth)) - 1)
-    outside = (
-        (x < F.lit(float(x_min)))
-        | (x > F.lit(float(x_max)))
-        | (y < F.lit(float(y_min)))
-        | (y > F.lit(float(y_max)))
-    )
-    return F.when(outside, sentinel).otherwise(key)
 
 
 def tile_expr(morton_key: Column, max_depth: int, tile_level: int) -> Column:

@@ -139,7 +139,7 @@ def quadtree_on_points_global(
     x_min, x_max, y_min, y_max, scale = clamp_scale(
         x_min, x_max, y_min, y_max, scale, max_depth
     )
-    key = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
+    key = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     cells_df = points.select(key.alias("cell")).groupBy("cell").count()
     depth = max_depth
     try:

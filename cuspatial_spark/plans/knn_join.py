@@ -93,13 +93,13 @@ def knn_join(
     # tile size >= radius so the 3x3 neighborhood covers the disk
     tile_level = max(0, min(max_depth, int(np.floor(np.log2(span / radius)))))
 
-    key_d = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
+    key_d = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     d = data.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(x).alias("__dx"), F.col(y).alias("__dy"),
         tile_expr(key_d, max_depth, tile_level).alias("tile"),
     )
-    key_q = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
+    key_q = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     # materialize the tile as a named column BEFORE building the 9-way
     # neighborhood — inlining would duplicate the whole Morton chain
     # into every branch and blow the expression tree up exponentially

@@ -13,15 +13,16 @@ The plan is the broadcast join's, with a shuffle in place of the
 broadcast:
   1. one mapInArrow over the polygon rows: each Arrow batch becomes a
      ``PolygonArrays`` (offset arithmetic on the list buffers) and
-     leaves as ``(tile, polygon_id, __segs)`` rows, built by the
-     broadcast join's own cover (``tiles_covering_bboxes`` of the
-     bboxes) and segment lists (``_polygon_segments``);
+     leaves as the broadcast join's own table, ``_polygon_tiles``:
+     ``(tile, polygon_id, __segs)``, one row per covered tile holding
+     the polygon's edges that meet the tile row's y-band;
   2. optional SALTING of hot tiles: every point gets
      salt = pmod(hash(x, y), n_salt); hot-tile polygon rows are
      replicated n_salt times so the shuffle key (tile, salt) splits a
      skewed tile across n_salt reducers (web geotags cluster in
      cities — this is the expected case, AQE skew-join is the backstop)
-  3. join points x polygon-tiles on (tile[, salt]);
+  3. join the points inside the AOI (the broadcast join's filter)
+     with the polygon-tiles on (tile[, salt]);
   4. the broadcast default's refine: the JVM ray cast over ``__segs``.
 
 Points never cross into Python, and the rows are the broadcast
@@ -40,13 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geometry import PolygonArrays
-from .tile_join import (
-    SEGS_TYPE,
-    _pip_jvm_hit_expr,
-    _polygon_segments,
-    assign_tiles,
-    tiles_covering_bboxes,
-)
+from ..functions.expressions import inside_aoi
+from .tile_join import SEGS_TYPE, _pip_jvm_hit_expr, _polygon_tiles, assign_tiles
 
 
 def _shuffle_candidates(
@@ -75,20 +71,17 @@ def _shuffle_candidates(
     def polygon_tiles(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             polygons = PolygonArrays.from_arrow(batch, id_col, ring_offsets_col, xy_col)
-            idx, tiles = tiles_covering_bboxes(
-                *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(tiles), pa.array(polygons.ids[idx]),
-                 _polygon_segments(polygons).take(pa.array(idx))],
-                names=["tile", id_col, "__segs"],
-            )
+            yield from _polygon_tiles(
+                polygons, x_min, y_min, scale, max_depth, tile_level, id_col
+            ).to_batches()
 
     ptiles = polygons_df.mapInArrow(
         polygon_tiles, f"tile long, {id_col} long, __segs {SEGS_TYPE}"
     )
-    pts = assign_tiles(points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level)
-    pts = pts.select(*need, "tile")
+    pts = assign_tiles(
+        points.where(inside_aoi(x, y, x_min, x_max, y_min, y_max)).select(*need),
+        x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level,
+    )
 
     join_keys = ["tile"]
     if salt > 0:
@@ -146,6 +139,4 @@ def point_in_polygon_join_shuffle(
         tile_level, list(dict.fromkeys(keep + [x, y])), salt, hot_tiles, id_col,
         ring_offsets_col, xy_col,
     )
-    return cand.where(_pip_jvm_hit_expr(F.col("__segs"), F.col(x), F.col(y))).select(
-        *keep, id_col
-    )
+    return cand.where(_pip_jvm_hit_expr("__segs", x, y)).select(*keep, id_col)

@@ -1,26 +1,32 @@
-"""Distributed spatial join: tile equi-join filter + vectorized refine.
+"""Distributed spatial join: tile equi-join filter + JVM ray-cast refine.
 
 This is the scale path that replaces the reference's single-GPU BFS
 (detail/join/quadtree_bbox_filtering.cuh) with a plan Catalyst can
 optimize end-to-end:
 
-  points:   morton tile key (pure-JVM bit expr, codegen)  ->  tile col
-  polygons: bbox -> set of covered tiles (driver-side NumPy, tiny)
-  filter:   points ⋈ exploded polygon-tile table
+  points:   inclusive AOI filter, then the morton tile key (one SQL
+            text, pure-JVM bit expressions, codegen)  ->  tile col
+  polygons: bbox -> covered tiles -> per (tile, polygon) the polygon's
+            edges whose y-range meets the tile row's y-band
+            (driver-side NumPy, built as one Arrow table)
+  filter:   points ⋈ that (tile, polygon_id, __segs) table
             - polygon side small  -> broadcast hash join (NO shuffle)
             - polygon side large  -> shuffle hash join on tile, with
-              optional salting for hot tiles
-  refine:   vectorized ray-cast PIP over each Arrow batch of candidate
-            pairs (kernels.pip.point_in_polygon_pairs)
+              optional salting for hot tiles (shuffle_join.py)
+  refine:   the ray-cast crossing parity over the joined edge list, one
+            JVM higher-order expression (one SQL text); edge_exact=True
+            instead runs the NumPy kernel over Arrow batches of
+            (point, polygon) candidate pairs
 
 Each point carries exactly one tile, so a (point, polygon) pair is
 produced at most once — no post-join dedup is needed.  A polygon is
 replicated only to the tiles its bbox covers (the quadtree filter
-phase's job, done as an equi-join).
+phase's job, done as an equi-join), and each copy carries only the
+edges that can change the crossing parity of a point in that tile.
 
 At 100 TB the only wide operation is the optional shuffle join; the
-broadcast path is shuffle-free: scan -> codegen filter/keys ->
-broadcast join -> mapInPandas -> sink.
+broadcast path is shuffle-free and Python-free:
+scan -> codegen filter/keys -> broadcast join -> ray-cast Filter -> sink.
 
 The nearest-linestring join needs no equi-join at all: its tile covers
 ride in the closure of ONE Arrow crossing (scan -> AOI filter ->
@@ -35,11 +41,11 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from ..functions.expressions import morton_key_expr, tile_expr
+from ..functions.expressions import inside_aoi, morton_key_expr, sql_name, tile_expr
 from ..geometry import LinestringArrays, PolygonArrays
 from ..kernels.pip import point_in_polygon_pairs
 from ..kernels.segment import point_linestring_distance_pairs
@@ -62,9 +68,36 @@ def assign_tiles(
 ) -> DataFrame:
     """Adds the full-depth Morton key and the coarse tile id (top
     2*tile_level bits) as JVM-side columns."""
-    key = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
+    key = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     df = points.withColumn(key_col, key)
     return df.withColumn(tile_col, tile_expr(F.col(key_col), max_depth, tile_level))
+
+
+def _cover_cells(minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level):
+    """``(bbox_index, cx, cy)``: the tile-level grid cells each bbox
+    covers, enumerated per bbox row by row (cx fastest).  See
+    ``tiles_covering_bboxes``."""
+    tile_scale = scale * (1 << (max_depth - tile_level))
+    n_cells = 1 << tile_level
+    finite = np.isfinite(minx) & np.isfinite(miny) & np.isfinite(maxx) & np.isfinite(maxy)
+
+    def cell(v, origin):  # clipped before the cast, so no int overflow
+        c = np.floor((np.where(finite, v, origin) - origin) / tile_scale)
+        return np.clip(c, 0, n_cells - 1).astype(np.int64)
+
+    tx0, tx1 = cell(minx, x_min), cell(maxx, x_min)
+    ty0, ty1 = cell(miny, y_min), cell(maxy, y_min)
+    counts = np.where(finite, (tx1 - tx0 + 1) * (ty1 - ty0 + 1), 0)
+    bbox_idx = np.repeat(np.arange(len(minx), dtype=np.int64), counts)
+    local = _ragged_arange(counts)
+    w = np.repeat(tx1 - tx0 + 1, counts)
+    return bbox_idx, np.repeat(tx0, counts) + local % w, np.repeat(ty0, counts) + local // w
+
+
+def _ragged_arange(counts: np.ndarray) -> np.ndarray:
+    """0..counts[i]-1 for each i, concatenated."""
+    total = int(counts.sum())
+    return np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(counts) - counts, counts)
 
 
 def tiles_covering_bboxes(
@@ -81,42 +114,25 @@ def tiles_covering_bboxes(
     """For each bbox, the Morton tile ids (at tile_level) its rectangle
     covers.  Returns (bbox_index, tile) flat arrays.  Vectorized per
     bbox over the covered cell grid; cells are clipped to the AOI grid
-    range so out-of-AOI bbox area is ignored (out-of-AOI points carry
-    the sentinel key and can never match).  A bbox with a non-finite
+    range so out-of-AOI bbox area is ignored (the joins drop
+    out-of-AOI points before keying them).  A bbox with a non-finite
     bound (an empty feature's NaN bbox) covers no tile."""
-    tile_scale = scale * (1 << (max_depth - tile_level))
-    n_cells = 1 << tile_level
-    finite = np.isfinite(minx) & np.isfinite(miny) & np.isfinite(maxx) & np.isfinite(maxy)
-
-    def cell(v, origin):  # clipped before the cast, so no int overflow
-        c = np.floor((np.where(finite, v, origin) - origin) / tile_scale)
-        return np.clip(c, 0, n_cells - 1).astype(np.int64)
-
-    tx0, tx1 = cell(minx, x_min), cell(maxx, x_min)
-    ty0, ty1 = cell(miny, y_min), cell(maxy, y_min)
-    counts = np.where(finite, (tx1 - tx0 + 1) * (ty1 - ty0 + 1), 0)
-    bbox_idx = np.repeat(np.arange(len(minx), dtype=np.int64), counts)
-    # per-bbox local grid enumeration
-    flat = np.arange(int(counts.sum()), dtype=np.int64)
-    starts = np.concatenate(([0], np.cumsum(counts)))
-    local = flat - np.repeat(starts[:-1], counts)
-    w = np.repeat(tx1 - tx0 + 1, counts)
-    cx = np.repeat(tx0, counts) + local % w
-    cy = np.repeat(ty0, counts) + local // w
-    tiles = z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
-    return bbox_idx, tiles
+    bbox_idx, cx, cy = _cover_cells(
+        minx, miny, maxx, maxy, x_min, y_min, scale, max_depth, tile_level
+    )
+    return bbox_idx, z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
 
 
 PIP_JOIN_SCHEMA_SUFFIX = [StructField("polygon_id", LongType(), False)]
 SEGS_TYPE = "array<struct<ax:double,ay:double,bx:double,by:double>>"
 
 
-def _polygon_segments(polygons: PolygonArrays) -> pa.ListArray:
-    """One list of ring segments ``(ax, ay, bx, by)`` per polygon, the
-    ``SEGS_TYPE`` column that ``_pip_jvm_hit_expr`` reads: each ring
-    closed (its first vertex pairs with its last), zero-length segments
-    dropped.  Vectorized over the layer, with no loop over polygons,
-    rings or vertices."""
+def _polygon_segments(polygons: PolygonArrays):
+    """``(offsets, ax, ay, bx, by)``: polygon i's ring segments are
+    entries offsets[i]:offsets[i+1] of the four coordinate arrays, each
+    ring closed (its first vertex pairs with its last) and zero-length
+    segments dropped.  Vectorized over the layer, with no loop over
+    polygons, rings or vertices."""
     po, ro = polygons.part_offsets, polygons.ring_offsets
     px = np.asarray(polygons.x, dtype=np.float64)
     py = np.asarray(polygons.y, dtype=np.float64)
@@ -130,38 +146,117 @@ def _polygon_segments(polygons: PolygonArrays) -> pa.ListArray:
     ax, ay, bx, by = px[idx], py[idx], px[prev], py[prev]
     keep = (ax != bx) | (ay != by)
     kept_before = np.concatenate(([0], np.cumsum(keep)))
+    return kept_before[ro[po]], ax[keep], ay[keep], bx[keep], by[keep]
+
+
+def _band_edges(
+    segments, poly: np.ndarray, row: np.ndarray,
+    y_min: float, scale: float, max_depth: int, tile_level: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(offsets, edge)``: for cover entry i, polygon ``poly[i]`` in
+    tile row ``row[i]``, the indices into ``segments`` (a layer's
+    ``_polygon_segments``) of the polygon's edges that can change the
+    crossing parity of a point keyed into that row,
+    ``edge[offsets[i]:offsets[i+1]]``, in ring order.
+
+    An edge (ay, by) flips the parity at height y only when
+    ``(ay > y) != (by > y)``, i.e. for y in [min(ay, by), max(ay, by)).
+    A point in tile row r has y in the row's band: the row's grid cells
+    widened by one cell each way, which absorbs the float rounding of
+    the key, and open below row 0 and above the top row, where
+    ``morton_key_expr`` clamps.  An edge whose y-range misses the band
+    changes no point's parity there, so dropping it changes no row;
+    horizontal edges never flip and are dropped everywhere.  The test
+    uses Spark's ordering, in which NaN is above +inf.
+
+    Output-sensitive: each edge is expanded over the rows its band
+    test passes within its polygon's covered rows, with no loop over
+    entries, polygons or edges."""
+    offs, _, ay, _, by = segments
+    n, m = 1 << tile_level, 1 << (max_depth - tile_level)
+    rows = np.arange(n, dtype=np.int64)
+    lo = y_min + (rows * m - 1) * scale
+    hi = y_min + ((rows + 1) * m + 1) * scale
+    lo[0], hi[-1] = -np.inf, np.inf
+    ya, yb = np.where(np.isnan(ay), np.inf, ay), np.where(np.isnan(by), np.inf, by)
+    e_lo, e_hi = np.minimum(ya, yb), np.maximum(ya, yb)
+    # each edge's rows: band meets [e_lo, e_hi), within its polygon's rows
+    seg_poly = np.repeat(np.arange(len(offs) - 1, dtype=np.int64), np.diff(offs))
+    rmin, rmax = np.full(len(offs) - 1, n), np.full(len(offs) - 1, -1)
+    np.minimum.at(rmin, poly, row)
+    np.maximum.at(rmax, poly, row)
+    first = np.maximum(np.searchsorted(hi, e_lo), rmin[seg_poly])
+    last = np.minimum(np.searchsorted(lo, e_hi) - 1, rmax[seg_poly])
+    counts = np.where(e_lo < e_hi, np.maximum(last - first + 1, 0), 0)
+    edges = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    keys = seg_poly[edges] * n + np.repeat(first, counts) + _ragged_arange(counts)
+    order = np.argsort(keys, kind="stable")  # by (polygon, row), ring order within
+    keys, edges = keys[order], edges[order]
+    # each cover entry takes its (polygon, row) run of the sorted keys
+    want = poly * n + row
+    start = np.searchsorted(keys, want)
+    lens = np.searchsorted(keys, want, side="right") - start
+    out = np.concatenate(([0], np.cumsum(lens)))
+    return out, edges[np.repeat(start, lens) + _ragged_arange(lens)]
+
+
+def _polygon_tiles(
+    polygons: PolygonArrays, x_min: float, y_min: float, scale: float,
+    max_depth: int, tile_level: int, id_col: str = "polygon_id",
+) -> pa.Table:
+    """The tile joins' polygon side: ``(tile, id_col, __segs)``, one row
+    per tile a polygon's bbox covers, holding the polygon's edges
+    ``(ax, ay, bx, by)`` that meet the tile row's y-band
+    (``_band_edges``), the ``SEGS_TYPE`` list the JVM ray cast reads.
+    A row whose list is empty can hold no point and is left out.
+
+    Size: each edge is copied once per covered tile whose band it
+    meets, i.e. into (tile columns of its polygon's bbox) x (tile rows
+    its y-range spans, plus at most one row each side), never more
+    than the unclipped table's copy per covered tile.
+
+    Built from Arrow with no Spark job and no per-row Python.  As
+    broadcast-join DATA the plan stays constant-size; a layer embedded
+    as a literal Catalyst map cost super-linear driver plan-build time
+    (BASELINE.md "Refine-path threshold validation")."""
+    poly, cx, cy = _cover_cells(
+        *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
+    )
+    segments = _polygon_segments(polygons)
+    offsets, edge = _band_edges(segments, poly, cy, y_min, scale, max_depth, tile_level)
+    keep = np.flatnonzero(offsets[1:] > offsets[:-1])
+    offsets = np.concatenate(([0], np.cumsum(np.diff(offsets)[keep])))
+    _, ax, ay, bx, by = segments
     segs = pa.StructArray.from_arrays(
-        [pa.array(c[keep]) for c in (ax, ay, bx, by)], names=["ax", "ay", "bx", "by"]
+        [pa.array(c[edge]) for c in (ax, ay, bx, by)], names=["ax", "ay", "bx", "by"]
     )
-    return pa.ListArray.from_arrays(pa.array(kept_before[ro[po]], pa.int32()), segs)
-
-
-def _polygon_segments_df(spark: SparkSession, polygons: PolygonArrays) -> DataFrame:
-    """The polygon layer as a one-row-per-polygon broadcastable
-    DataFrame ``(__poly_idx, polygon_id, __segs)``.
-
-    Measured (BASELINE.md "Refine-path threshold validation"):
-    embedding the layer as a LITERAL Catalyst map costs super-linear
-    driver plan-build time (16 s at 1k segments, 117 s at 10k); as
-    ordinary broadcast-join DATA the plan is constant-size, and the
-    refine expression runs identically JVM-side over the joined array
-    column.  The table is an Arrow-built local relation: building it
-    runs no Spark job and no per-row Python.
-    """
-    return spark.createDataFrame(
-        pa.table(
-            [np.arange(len(polygons.ids), dtype=np.int64), polygons.ids,
-             _polygon_segments(polygons)],
-            names=["__poly_idx", "polygon_id", "__segs"],
-        ),
-        schema=f"__poly_idx long, polygon_id long, __segs {SEGS_TYPE}",
+    tiles = z_order(cx[keep].astype(np.uint16), cy[keep].astype(np.uint16))
+    return pa.table(
+        [pa.array(tiles.astype(np.int64)),
+         pa.array(np.asarray(polygons.ids, dtype=np.int64)[poly[keep]]),
+         pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), segs)],
+        names=["tile", id_col, "__segs"],
     )
 
 
-def _pip_jvm_hit_expr(segs, x, y):
-    """Ray-cast crossings parity as a pure JVM expression over an
-    ``array<struct<ax,ay,bx,by>>`` column (same formula/order as
-    kernels/pip.py and the SQL oracle).  Runs inside the JVM with zero
+# The zero names x and y outside the lambda.  With the point columns
+# only inside it, Catalyst pushed the filter below a join onto the
+# polygon side in the first query of a session (the shuffle join at
+# sf0.01: INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND for y); a null coordinate
+# gives a null zero, hence no row, as before.
+_PIP_HIT_SQL = (
+    "aggregate({segs}, IF({x} IS NULL OR {y} IS NULL, NULL, 0), "
+    "(__n, __e) -> __n + CASE WHEN ((__e.ay > {y}) != (__e.by > {y})) AND "
+    "((({x} - __e.ax) * (__e.by - __e.ay) < (__e.bx - __e.ax) * ({y} - __e.ay)) "
+    "!= (__e.ay > {y})) THEN 1 ELSE 0 END) % 2 = 1"
+)
+
+
+def _pip_jvm_hit_expr(segs: str, x: str, y: str) -> Column:
+    """Ray-cast crossings parity over the ``SEGS_TYPE`` column named
+    ``segs`` for the point in columns ``x``, ``y`` (same formula and
+    order as kernels/pip.py and the SQL oracle), as one SQL text, so
+    building it is one Py4J call.  Runs inside the JVM with zero
     Python — the fast path that sidesteps the serialized Arrow/Python
     boundary.
 
@@ -170,20 +265,7 @@ def _pip_jvm_hit_expr(segs, x, y):
     of a guaranteed False.  Measure-zero for real data; use
     edge_exact=True when exact edge semantics matter.
     """
-    crossings = F.aggregate(
-        segs,
-        F.lit(0),
-        lambda acc, s: acc
-        + F.when(
-            ((s["ay"] > y) != (s["by"] > y))
-            & (
-                ((x - s["ax"]) * (s["by"] - s["ay"]) < (s["bx"] - s["ax"]) * (y - s["ay"]))
-                != (s["ay"] > y)
-            ),
-            1,
-        ).otherwise(0),
-    )
-    return crossings % 2 == 1
+    return F.expr(_PIP_HIT_SQL.format(segs=sql_name(segs), x=sql_name(x), y=sql_name(y)))
 
 
 def point_in_polygon_join(
@@ -211,13 +293,23 @@ def point_in_polygon_join(
     quadtree_point_in_polygon, with the tile grid playing the role of
     the quadtree's leaf quadrants.
 
+    Points outside the AOI (bounds inclusive) or with a null, NaN or
+    infinite coordinate match no polygon: they are filtered out before
+    the tile key, as in the nearest join.
+
     The refine follows from the semantics asked for:
 
-    - edge_exact=False (default): the ray cast runs as a JVM
-      higher-order expression over a broadcast-joined segment table —
-      no Python, no Arrow crossing.  A point lying exactly ON a polygon
-      edge gets parity-dependent membership.
-    - edge_exact=True: the Arrow-batched NumPy kernel, which keeps the
+    - edge_exact=False (default): ONE broadcast hash join of the points
+      with ``_polygon_tiles``' ``(tile, polygon_id, __segs)`` table,
+      then the ray cast as a JVM higher-order expression over the
+      joined edge list — no Python, no Arrow crossing.  Each list holds
+      only the polygon's edges that meet its tile row's y-band, which
+      gives the same rows as all of its edges (``_band_edges``); the
+      table copies each edge once per covered tile whose band it
+      meets.  A point lying exactly ON a polygon edge gets
+      parity-dependent membership.
+    - edge_exact=True: the Arrow-batched NumPy kernel over the
+      broadcast ``(tile, polygon index)`` cover, which keeps the
       reference's ULP on-edge exclusion (such a point is
       deterministically excluded).  Golden-parity claims set this.
 
@@ -232,30 +324,31 @@ def point_in_polygon_join(
     if scale is None:
         scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
     keep = keep_columns if keep_columns is not None else [c for c in points.columns]
+    need = list(dict.fromkeys(keep + [x, y]))
 
     spark = points.sparkSession
+    # narrow first: analysing the key's plan costs less over fewer columns
+    pts = assign_tiles(
+        points.where(inside_aoi(x, y, x_min, x_max, y_min, y_max)).select(*need),
+        x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level,
+    )
+
+    if not edge_exact:
+        table = spark.createDataFrame(
+            _polygon_tiles(polygons, x_min, y_min, scale, max_depth, tile_level),
+            schema=f"tile long, polygon_id long, __segs {SEGS_TYPE}",
+        )
+        return (
+            pts.join(F.broadcast(table), on="tile")
+            .where(_pip_jvm_hit_expr("__segs", x, y))
+            .select(*keep, "polygon_id")
+        )
+
     bbox_idx, tiles = tiles_covering_bboxes(
         *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
     )
     poly_tiles = spark.createDataFrame(pa.table({"tile": tiles, "__poly_idx": bbox_idx}))
-
-    pts = assign_tiles(
-        points, x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level
-    )
-    # project to only what the refine needs before the Arrow boundary
-    need = list(dict.fromkeys(keep + [x, y]))
-    candidates = pts.join(F.broadcast(poly_tiles), on="tile", how="inner").select(
-        *need, "__poly_idx"
-    )
-
-    if not edge_exact:
-        seg_df = _polygon_segments_df(spark, polygons)
-        hit = _pip_jvm_hit_expr(F.col("__segs"), F.col(x), F.col(y))
-        return (
-            candidates.join(F.broadcast(seg_df), on="__poly_idx")
-            .where(hit)
-            .select(*keep, "polygon_id")
-        )
+    candidates = pts.join(F.broadcast(poly_tiles), on="tile").select(*need, "__poly_idx")
 
     out_schema = StructType([points.schema[c] for c in keep] + PIP_JOIN_SCHEMA_SUFFIX)
     poly_offsets, ring_offsets = polygons.part_offsets, polygons.ring_offsets
@@ -431,10 +524,8 @@ def point_to_nearest_linestring_join(
             hit = np.flatnonzero(done)
             yield pdf[keep].iloc[hit].assign(linestring_id=best[hit], distance=dist[hit])
 
-    # the AOI test (inclusive, like morton_key_expr) also drops null,
-    # NaN and infinite coordinates: Spark orders NaN above +inf
-    inside = (
-        (F.col(x) >= x_min) & (F.col(x) <= x_max)
-        & (F.col(y) >= y_min) & (F.col(y) <= y_max)
+    return (
+        points.where(inside_aoi(x, y, x_min, x_max, y_min, y_max))
+        .select(*need)
+        .mapInPandas(nearest_fn, schema=out_schema)
     )
-    return points.where(inside).select(*need).mapInPandas(nearest_fn, schema=out_schema)

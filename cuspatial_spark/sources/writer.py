@@ -57,7 +57,7 @@ def write_tiled(
     ``tile``-only one."""
     if scale is None:
         scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
-    key = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
+    key = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     out = df.withColumn("morton_key", key).withColumn(
         "tile", tile_expr(F.col("morton_key"), max_depth, tile_level)
     )

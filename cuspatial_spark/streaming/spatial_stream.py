@@ -53,7 +53,7 @@ def streaming_tile_counts(
 ) -> DataFrame:
     """Events per (time window, tile): watermark bounds state, the
     groupBy is the only shuffle, partial aggregation is map-side."""
-    key = morton_key_expr(F.col(x), F.col(y), x_min, x_max, y_min, y_max, scale, max_depth)
+    key = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     tiled = stream.withColumn("tile", tile_expr(key, max_depth, tile_level))
     win = F.window(F.col(ts), window, slide) if slide else F.window(F.col(ts), window)
     return (

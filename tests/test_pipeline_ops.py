@@ -400,6 +400,62 @@ class TestShuffleJoin:
         _assert_paths_equal(got)
         assert got["broadcast"][1] == [(0, 0), (1, 2)]
 
+    def test_out_of_aoi_points_match_nothing(self, spark):
+        """Points outside the AOI, NaN, infinite or null get no row on
+        any path, even from a polygon that contains them and covers the
+        top-right tile, where the out-of-AOI sentinel key points; the
+        in-AOI points of the polygon, on the AOI's edge included, do."""
+        from cuspatial_spark.geometry import PolygonArrays
+
+        polys = PolygonArrays([0, 1], [0, 5], [6.0, 10, 10, 6, 6], [6.0, 6, 10, 10, 6])
+        nan, inf = float("nan"), float("inf")
+        pts = spark.createDataFrame(
+            [(0, 9.0, 9.0), (1, 7.0, 7.0), (2, 8.5, 7.0), (3, 7.0, 8.5), (4, nan, 7.0),
+             (5, 7.0, inf), (6, 8.0, 8.0), (7, None, 7.0), (8, 7.0, -inf)],
+            "point_id long, x double, y double",
+        )
+        kw = dict(x_min=0, x_max=8, y_min=0, y_max=8, max_depth=8, tile_level=3)
+        got = _pip_all_paths(spark, pts, polys, ["point_id"], **kw)
+        _assert_paths_equal(got)
+        assert got["broadcast"][1] == [(1, 0), (6, 0)]
+
+    def test_first_query_of_a_session(self, tmp_path):
+        """The salted shuffle join as the first query of a fresh
+        session, over a parquet scan: Catalyst once pushed the ray-cast
+        filter below the join onto the polygon side, where the point
+        columns do not exist (an internal error, not wrong rows).  Low
+        expression ids are what set it off, so it runs in a new
+        process."""
+        import os
+        import subprocess
+        import sys
+
+        pd.DataFrame({"event_id": np.arange(1000), "ts": np.arange(1000),
+                      "user_id": np.arange(1000) % 7, "event_type": ["a"] * 1000,
+                      "value": np.ones(1000), "props": ["{}"] * 1000}
+                     ).to_parquet(tmp_path / "ev.parquet")
+        script = f"""
+from pyspark.sql import SparkSession, functions as F
+from cuspatial_spark.geometry import PolygonArrays
+from cuspatial_spark.plans import point_in_polygon_join_shuffle
+spark = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+polys = PolygonArrays([0, 1], [0, 5], [1.0, 7.0, 7.0, 1.0, 1.0], [1.0, 1.0, 7.0, 7.0, 1.0])
+poly_df = spark.createDataFrame(polys.to_arrow())
+e = spark.read.parquet({str(tmp_path / "ev.parquet")!r}).repartition(8, "event_id")
+pts = e.select("event_id", (F.col("event_id") % 20 * 0.4).alias("x"),
+               (F.col("event_id") / 50 * 0.4).alias("y"))
+out = point_in_polygon_join_shuffle(pts, poly_df, x_min=0, x_max=8, y_min=0, y_max=8,
+                                    max_depth=8, tile_level=4, keep_columns=["event_id"], salt=4)
+print("ROWS", out.count())
+spark.stop()
+"""
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+            [root, os.environ.get("PYTHONPATH", "")]))
+        run = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True,
+                             timeout=300, env=env)
+        assert "ROWS 565" in run.stdout, run.stderr[-2000:]
+
     def test_arrow_rows_round_trip(self):
         """PolygonArrays -> shuffle-join rows -> PolygonArrays is the
         identity, with holes, a trailing empty ring, a polygon with no
@@ -423,6 +479,123 @@ class TestShuffleJoin:
         np.testing.assert_array_equal(part.part_offsets, [0, 2, 2, 3])
         np.testing.assert_array_equal(part.ring_offsets, [0, 4, 4, 7])
         np.testing.assert_array_equal(part.x, np.arange(7.0, 14.0))
+
+
+@st.composite
+def _band_case(draw):
+    """A grid (tile_level 1-3, max_depth == tile_level or deeper, the
+    joins' default scale) and a layer made to stress the band clip: a
+    200-gon, a staircase of horizontal edges with its vertices on and
+    next to the tile-row boundaries, a polygon spanning the bottom and
+    top rows past the AOI, and polygons with NaN and +-inf vertices;
+    points uniform in the AOI plus points on, next to and one cell
+    from each row boundary, and at y == y_max."""
+    from cuspatial_spark.geometry import PolygonArrays
+
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    tile_level = draw(st.integers(1, 3))
+    max_depth = tile_level + draw(st.sampled_from([0, 1, 3]))
+    y_min = draw(st.sampled_from([0.0, -1.3]))
+    grid = dict(x_min=0.0, x_max=8.0, y_min=y_min, y_max=y_min + 8.0,
+                max_depth=max_depth, tile_level=tile_level)
+    scale = 8.0 / ((1 << max_depth) + 2)
+    m = 1 << (max_depth - tile_level)
+    bounds = y_min + np.arange((1 << tile_level) + 1) * m * scale
+    near = np.r_[bounds, np.nextafter(bounds, np.inf), np.nextafter(bounds, -np.inf),
+                 bounds + scale, bounds - scale, y_min + 8.0]
+
+    rings = []
+    ang = np.sort(rng.uniform(0, 2 * np.pi, 200))
+    rad = rng.uniform(0.5, 5.0, 200)
+    c = rng.uniform(1, 7, 2) + [0, y_min]
+    rings.append((c[0] + rad * np.cos(ang), c[1] + rad * np.sin(ang)))
+    ys = np.sort(rng.choice(near, 4, replace=False))
+    x0, x1 = np.sort(rng.uniform(0, 8, 2))
+    xm = (x0 + x1) / 2
+    rings.append(([x0, x1, x1, xm, xm, x0], [ys[0], ys[0], ys[2], ys[2], ys[3], ys[3]]))
+    rings.append(([1.0, 7.0, 4.0], [y_min - 1.0, y_min + 2.0, y_min + 9.0]))
+    bad = draw(st.sampled_from([np.nan, np.inf, -np.inf]))
+    rings.append(([2.0, 6.0, 6.0, 2.0], [y_min + 1.0, y_min + 2.5, bad, y_min + 6.5]))
+    rings.append(([1.0, 7.0, 4.0], [bad, y_min + 3.0, y_min + 5.0]))
+    polys = PolygonArrays(
+        np.arange(len(rings) + 1), np.cumsum([0] + [len(r[0]) for r in rings]),
+        np.concatenate([r[0] for r in rings]), np.concatenate([r[1] for r in rings]),
+        ids=rng.permutation(50)[: len(rings)],
+    )
+    k = 300
+    py = np.r_[rng.uniform(y_min, y_min + 8.0, k), near[(near >= y_min) & (near <= y_min + 8)]]
+    px = rng.uniform(0, 8, len(py))
+    return polys, grid, pd.DataFrame({"pid": np.arange(len(py)), "x": px, "y": py})
+
+
+class TestBandClippedEdges:
+    def test_band_clip_is_exact(self, spark):
+        """The band-clipped (tile, polygon_id, __segs) rows give the
+        same containment pairs as unclipped lists holding all of the
+        polygon's edges: for the join's own cover, and for a cover of
+        every tile by every polygon, which reaches the polygons whose
+        non-finite bbox the join never covers."""
+        import pyarrow as pa
+
+        from cuspatial_spark.kernels.zorder import z_order
+        from cuspatial_spark.plans import assign_tiles, point_in_polygon_join
+        from cuspatial_spark.functions import inside_aoi
+        from cuspatial_spark.plans.tile_join import (
+            SEGS_TYPE,
+            _band_edges,
+            _cover_cells,
+            _pip_jvm_hit_expr,
+            _polygon_segments,
+        )
+
+        def pairs(keyed, polys, poly, cx, cy, grid, scale, clip):
+            segs = _polygon_segments(polys)
+            if clip:
+                offs, edge = _band_edges(segs, poly, cy, grid["y_min"], scale,
+                                         grid["max_depth"], grid["tile_level"])
+            else:
+                lists = [np.arange(segs[0][p], segs[0][p + 1]) for p in poly]
+                offs = np.cumsum([0] + [len(e) for e in lists])
+                edge = np.concatenate(lists + [np.zeros(0, np.int64)])
+            lists = pa.ListArray.from_arrays(
+                pa.array(offs, pa.int32()),
+                pa.StructArray.from_arrays([pa.array(c[edge]) for c in segs[1:]],
+                                           names=["ax", "ay", "bx", "by"]),
+            )
+            tiles = z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
+            table = spark.createDataFrame(
+                pa.table([tiles, polys.ids[poly], lists], names=["tile", "polygon_id", "__segs"]),
+                schema=f"tile long, polygon_id long, __segs {SEGS_TYPE}",
+            )
+            out = keyed.join(table, "tile").where(_pip_jvm_hit_expr("__segs", "x", "y"))
+            return sorted(tuple(r) for r in out.select("pid", "polygon_id").collect())
+
+        @given(_band_case())
+        @settings(max_examples=8, deadline=None)
+        def check(case):
+            polys, grid, pdf = case
+            scale = 8.0 / ((1 << grid["max_depth"]) + 2)
+            pts = spark.createDataFrame(pdf)
+            aoi = [grid[k] for k in ("x_min", "x_max", "y_min", "y_max")]
+            keyed = assign_tiles(
+                pts.where(inside_aoi("x", "y", *aoi)), "x", "y", *aoi, scale,
+                grid["max_depth"], grid["tile_level"],
+            ).cache()
+            join = point_in_polygon_join(pts, polys, keep_columns=["pid"], **grid)
+            got = sorted(tuple(r) for r in join.collect())
+            cover = _cover_cells(*polys.bounding_boxes(), grid["x_min"], grid["y_min"], scale,
+                                 grid["max_depth"], grid["tile_level"])
+            assert got == pairs(keyed, polys, *cover, grid, scale, clip=False)
+            assert len(got) > 0
+            n = 1 << grid["tile_level"]
+            cells = np.arange(n * n)
+            full = (np.repeat(np.arange(len(polys)), n * n), np.tile(cells % n, len(polys)),
+                    np.tile(cells // n, len(polys)))
+            assert (pairs(keyed, polys, *full, grid, scale, clip=True)
+                    == pairs(keyed, polys, *full, grid, scale, clip=False))
+            keyed.unpersist()
+
+        check()
 
 
 class TestStreaming:

@@ -226,9 +226,10 @@ class TestBruteForcePIP:
 
 class TestTileJoinPlanShape:
     def test_jvm_refine_plan_is_shuffle_free(self, spark, small_polygons):
-        """The 100-TB plan contract: scan -> codegen Morton keys ->
-        broadcast joins (tile filter + segment table) -> codegen
-        ray-cast filter.  No shuffle of the points side, no Python."""
+        """The 100-TB plan contract: scan -> codegen AOI filter and
+        Morton keys -> ONE broadcast hash join with the band-clipped
+        (tile, polygon_id, __segs) table -> ray-cast filter.  No
+        shuffle of the points side, no Python node."""
         pdf = pd.DataFrame(
             {
                 "point_id": np.arange(1000, dtype=np.int64),
@@ -242,11 +243,11 @@ class TestTileJoinPlanShape:
             max_depth=10, tile_level=4, keep_columns=["point_id"],
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("BroadcastHashJoin") == 2  # tile filter + segs
-        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-        # only broadcast exchanges; nothing repartitions the point side
-        assert "Exchange hashpartitioning" not in plan
-        assert "Exchange rangepartitioning" not in plan
+        assert plan.count("BroadcastHashJoin") == 1, plan
+        assert "Python" not in plan and "InPandas" not in plan and "InArrow" not in plan
+        # the one exchange is the table's broadcast; nothing
+        # repartitions the point side
+        assert plan.count("Exchange") == 1 and "BroadcastExchange" in plan, plan
 
 
 class TestDistributedTileJoin:
@@ -548,6 +549,36 @@ class TestExpressions:
         exp = point_keys(got["x"].to_numpy(), got["y"].to_numpy(), 0, 8, 0, 8, 1.0, 3)
         np.testing.assert_array_equal(got["morton_key"], exp.astype(np.int64))
         np.testing.assert_array_equal(got["tile"], exp.astype(np.int64) >> 2)
+
+    @pytest.mark.parametrize("max_depth", [3, 12])
+    def test_morton_key_expr_edge_points(self, spark, max_depth):
+        """Out-of-AOI, NaN, +-inf and boundary points: the sentinel for
+        anything Spark does not order inside the inclusive AOI (NaN is
+        above +inf), and the clamped grid cell for x == x_max or
+        y == y_max."""
+        from cuspatial_spark.functions import morton_key_expr
+        from cuspatial_spark.kernels.zorder import z_order
+
+        nan, inf = np.nan, np.inf
+        x = np.array([9.0, -1.0, 4.0, nan, 4.0, inf, -inf, 4.0, 4.0, 8.0, 0.0, 8.0, 3.0, -0.0])
+        y = np.array([4.0, 4.0, 9.0, 4.0, nan, 4.0, 4.0, inf, -inf, 8.0, 8.0, 0.0, 8.0, 0.0])
+        scale = 8.0 / ((1 << max_depth) + 2)
+        # from Python floats: a pandas NaN would arrive as null
+        df = spark.createDataFrame([(float(a), float(b)) for a, b in zip(x, y)], "x double, y double")
+        got = df.select(
+            morton_key_expr("x", "y", 0.0, 8.0, 0.0, 8.0, scale, max_depth).alias("k")
+        ).toPandas()["k"].to_numpy()
+        with np.errstate(invalid="ignore"):
+            inside = (x >= 0) & (x <= 8) & (y >= 0) & (y <= 8)
+            cmax = (1 << max_depth) - 1
+            cell = lambda v: np.minimum(np.floor(np.where(inside, v, 0) / scale), cmax)
+        exp = np.where(
+            inside,
+            z_order(cell(x).astype(np.uint16), cell(y).astype(np.uint16)).astype(np.int64),
+            (1 << (2 * max_depth)) - 1,
+        )
+        np.testing.assert_array_equal(got, exp)
+        assert (got[:9] == (1 << (2 * max_depth)) - 1).all()
 
 
 class TestTrajectory:
