@@ -1542,10 +1542,10 @@ def q_curve_keys(spark, sf_dir):
 
 def q_geo_knn(spark, sf_dir):
     """Exact geodesic kNN: 5 nearest of 30 globe-scattered POIs per
-    page via progressive chord-grid radius doubling
-    (plans/spherical_join.py geodesic_knn_join); the oracle is the
-    brute cross join + row_number, so every round's resolve-when-k
-    invariant is hash-checked."""
+    page (plans/spherical_join.py geodesic_knn_join).  30 POIs is
+    under the dense threshold, so this runs the dense path: one Arrow
+    crossing over the pages against the collected POIs.  The oracle is
+    the brute cross join + row_number."""
     from cuspatial_spark.plans import geodesic_knn_join
 
     pts = _points(spark, sf_dir)
@@ -1561,7 +1561,7 @@ def q_geo_knn(spark, sf_dir):
     )
     out = geodesic_knn_join(
         pois, pages, k=5, id_col="poi_id", query_id_col="query_id",
-        initial_radius_km="auto", dense_backend="arrow",
+        initial_radius_km="auto",
     )
     return out.select(
         "query_id", "neighbor_id",

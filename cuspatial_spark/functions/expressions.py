@@ -92,9 +92,11 @@ def _inside_aoi_sql(x: str, y: str, x_min, x_max, y_min, y_max) -> str:
 def inside_aoi(x: str, y: str, x_min, x_max, y_min, y_max) -> Column:
     """The inclusive AOI test of the columns named ``x`` and ``y``: the
     points ``morton_key_expr`` keys without the sentinel.  It is false
-    for null, NaN and infinite coordinates (Spark orders NaN above
-    +inf).  The tile joins filter points with it before keying them, so
-    no point reaches a join with the sentinel key."""
+    for NaN and infinite coordinates (Spark orders NaN above +inf) and
+    null, not false, for a null coordinate (unless the other one is
+    outside); a filter drops both.  The tile joins filter points with
+    it before keying them, so no point reaches a join with the
+    sentinel key."""
     return F.expr(_inside_aoi_sql(sql_name(x), sql_name(y), x_min, x_max, y_min, y_max))
 
 
@@ -113,7 +115,8 @@ def morton_key_expr(
 ) -> Column:
     """Full-depth Morton key (bigint column) of the point in columns
     named ``x`` and ``y``; out-of-AOI points get the sentinel max key,
-    matching detail/index/construction/phase_1.cuh:60-95.
+    matching detail/index/construction/phase_1.cuh:60-95, and so do
+    points with a null coordinate.
 
     Unlike the reference kernel, in-AOI cell coordinates are clamped to
     the 2^max_depth grid: the reference's minimum-scale rule
@@ -135,10 +138,12 @@ def morton_key_expr(
             f"AS BIGINT), {(1 << max_depth) - 1})"
         )
 
+    # a null AOI test (a null coordinate) falls to ELSE: the sentinel
     inside = _inside_aoi_sql(x, y, x_min, x_max, y_min, y_max)
     return F.expr(
-        f"CASE WHEN NOT ({inside}) THEN {(1 << (2 * max_depth)) - 1} ELSE "
-        f"(shiftleft({_dilate2_sql(cell(y, y_min))}, 1) | {_dilate2_sql(cell(x, x_min))}) END"
+        f"CASE WHEN {inside} THEN "
+        f"(shiftleft({_dilate2_sql(cell(y, y_min))}, 1) | {_dilate2_sql(cell(x, x_min))}) "
+        f"ELSE {(1 << (2 * max_depth)) - 1} END"
     )
 
 

@@ -21,7 +21,7 @@ round so the lineage stays flat (no exponential plan growth).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 def connected_components(
@@ -61,29 +61,28 @@ def connected_components(
             F.least(
                 F.col("component"), F.coalesce(F.col("n_comp"), F.col("component"))
             ).alias("component"),
+            F.col("component").alias("__old"),
         )
         # pointer doubling: follow my component's own component, so a
         # label travels 2^round hops instead of one per round
         parents = stepped.select(
             F.col("vertex").alias("component"), F.col("component").alias("__parent")
         )
-        new_labels = (
+        # the convergence test rides on the checkpoint's own job: an
+        # Observation counts the vertices whose label moved this round
+        changed = Observation()
+        labels = (
             stepped.join(parents, "component", "left")
             .select(
                 "vertex",
                 F.coalesce(F.col("__parent"), F.col("component")).alias("component"),
+                "__old",
             )
+            .observe(changed, F.count_if(F.col("component") != F.col("__old")).alias("n"))
             .localCheckpoint()
+            .drop("__old")
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "vertex")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if changed.get["n"] == 0:
             converged = True
             break
     if not converged:

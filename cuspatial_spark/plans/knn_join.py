@@ -6,7 +6,8 @@ the k nearest data points within a given radius.  The radius bounds
 the tile neighborhood each query must examine, turning the quadratic
 all-pairs problem into a neighborhood equi-join:
 
-  1. data points get their tile id (JVM Morton expr)
+  1. both sides keep only in-AOI points (``inside_aoi``, the tile
+     joins' test), then data points get their tile id (JVM Morton expr)
   2. each QUERY point explodes to the 3x3 block of tiles around its
      own tile at a tile level chosen so tile_size >= radius —
      guaranteeing every data point within `radius` shares one of those
@@ -26,8 +27,12 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import morton_key_expr, tile_expr
-from ..kernels.zorder import z_order
+from ..functions.expressions import (
+    _dilate2_expr,
+    inside_aoi,
+    morton_key_expr,
+    tile_expr,
+)
 
 
 def _undilate_expr(c):
@@ -37,15 +42,6 @@ def _undilate_expr(c):
     x = x.bitwiseOR(F.shiftright(x, 2)).bitwiseAND(F.lit(0x0F0F0F0F))
     x = x.bitwiseOR(F.shiftright(x, 4)).bitwiseAND(F.lit(0x00FF00FF))
     x = x.bitwiseOR(F.shiftright(x, 8)).bitwiseAND(F.lit(0x0000FFFF))
-    return x
-
-
-def _dilate_expr(c):
-    x = c.cast("bigint")
-    x = x.bitwiseOR(F.shiftleft(x, 8)).bitwiseAND(F.lit(0x00FF00FF))
-    x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F0F0F))
-    x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x33333333))
-    x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x55555555))
     return x
 
 
@@ -60,7 +56,7 @@ def _neighbor_tiles_expr(tx, ty, tile_level: int):
         for dy in (-1, 0, 1):
             cx = F.greatest(F.least(tx + dx, F.lit(n)), F.lit(0))
             cy = F.greatest(F.least(ty + dy, F.lit(n)), F.lit(0))
-            tiles.append(F.shiftleft(_dilate_expr(cy), 1).bitwiseOR(_dilate_expr(cx)))
+            tiles.append(F.shiftleft(_dilate2_expr(cy), 1).bitwiseOR(_dilate2_expr(cx)))
     return F.array_distinct(F.array(*tiles))
 
 
@@ -85,6 +81,8 @@ def knn_join(
     excluded when ids collide).  Completeness contract: neighbors
     beyond `radius` are not considered — choose radius from the data
     density (or run again with a larger radius for starved queries).
+    Points outside the AOI, or with a null or NaN coordinate, join
+    nothing on either side.
     """
     if radius is None:
         radius = max(x_max - x_min, y_max - y_min) / 64.0
@@ -93,20 +91,25 @@ def knn_join(
     # tile size >= radius so the 3x3 neighborhood covers the disk
     tile_level = max(0, min(max_depth, int(np.floor(np.log2(span / radius)))))
 
-    key_d = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
-    d = data.select(
+    # both sides keep only in-AOI points, so no point reaches the join
+    # with the sentinel key, which lands in the top-right tile
+    aoi = inside_aoi(x, y, x_min, x_max, y_min, y_max)
+    tile = tile_expr(
+        morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth),
+        max_depth, tile_level,
+    )
+    d = data.where(aoi).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(x).alias("__dx"), F.col(y).alias("__dy"),
-        tile_expr(key_d, max_depth, tile_level).alias("tile"),
+        tile.alias("tile"),
     )
-    key_q = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     # materialize the tile as a named column BEFORE building the 9-way
     # neighborhood — inlining would duplicate the whole Morton chain
     # into every branch and blow the expression tree up exponentially
-    q = queries.select(
+    q = queries.where(aoi).select(
         F.col(id_col).alias(query_id_col),
         F.col(x).alias("__qx"), F.col(y).alias("__qy"),
-        tile_expr(key_q, max_depth, tile_level).alias("__qtile"),
+        tile.alias("__qtile"),
     )
     q = q.select(
         query_id_col, "__qx", "__qy",

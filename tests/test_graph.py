@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from cuspatial_spark.operators.graph import (
@@ -89,3 +90,52 @@ def test_hausdorff_clusters(spark):
     # tighter threshold splits them
     got2 = {r.space: r.cluster for r in hausdorff_clusters(m, threshold=1.5).collect()}
     assert got2 == {0: 0, 1: 1, 2: 2}
+
+
+def test_cc_runs_no_job_beside_its_checkpoints(spark, monkeypatch):
+    """Each round's convergence test rides on the round's own
+    localCheckpoint job (an Observation), so every Spark job of
+    connected_components runs inside a localCheckpoint.  A 40-vertex
+    chain still takes 6 rounds (2 setup checkpoints + 1 per round)."""
+    import uuid
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    sc = spark.sparkContext
+    outer = f"cc-{uuid.uuid4().hex}"
+    inner = f"cc-checkpoint-{uuid.uuid4().hex}"
+    real = DataFrame.localCheckpoint
+    calls = []
+
+    def checkpoint(df, *args, **kwargs):
+        calls.append(1)
+        sc.setJobGroup(inner, "connected_components checkpoint")
+        try:
+            return real(df, *args, **kwargs)
+        finally:
+            sc.setJobGroup(outer, "connected_components")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", checkpoint)
+    n = 40
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": np.arange(n - 1), "dst": np.arange(1, n)})
+    )
+    sc.setJobGroup(outer, "connected_components")
+    try:
+        labels = connected_components(edges)
+    finally:
+        sc._jsc.clearJobGroup()
+    got = labels.collect()
+    assert {r.component for r in got} == {0} and len(got) == n
+    assert len(calls) == 2 + 6
+    assert list(sc.statusTracker().getJobIdsForGroup(outer)) == []
+    assert len(sc.statusTracker().getJobIdsForGroup(inner)) > 0
+
+
+def test_cc_raises_when_max_iter_runs_out(spark):
+    n = 200
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": np.arange(n - 1), "dst": np.arange(1, n)})
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges, max_iter=2)

@@ -170,3 +170,20 @@ class TestKnnJoin:
         got = knn_join(data, data, k=5, radius=0.5,
                        x_min=0, x_max=8, y_min=0, y_max=8).toPandas()
         assert len(got) == 0  # nothing within radius
+
+    def test_out_of_aoi_points_match_nothing(self, spark):
+        """Points outside the AOI join nothing, as in the tile joins:
+        two of them side by side beyond the top-right corner would
+        otherwise share the sentinel key's tile and match."""
+        from cuspatial_spark.plans.knn_join import knn_join
+
+        pdf = pd.DataFrame({
+            "point_id": [0, 1, 2, 3],
+            "x": [9.0, 9.1, 7.8, 7.9],
+            "y": [9.0, 9.1, 7.8, 7.9],
+        })
+        data = spark.createDataFrame(pdf)
+        got = knn_join(data, data, k=5, radius=0.5,
+                       x_min=0, x_max=8, y_min=0, y_max=8, max_depth=10)
+        pairs = sorted((r.query_id, r.neighbor_id) for r in got.collect())
+        assert pairs == [(2, 3), (3, 2)]

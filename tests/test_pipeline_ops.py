@@ -757,6 +757,23 @@ class TestTiledWriter:
         # round-trip preserves payload
         assert set(back.toPandas()["point_id"]) == set(range(2000))
 
+    def test_null_coordinates_filed_under_sentinel_tile(self, spark, tmp_path):
+        """A row with a null coordinate gets the sentinel key, so the
+        writer files it under the sentinel's tile, not a real cell's."""
+        from cuspatial_spark.sources.writer import read_tiled, write_tiled
+
+        df = spark.createDataFrame(
+            [(0, None, 4.0), (1, 4.0, None), (2, None, None), (3, 1.0, 1.0)],
+            "point_id long, x double, y double",
+        )
+        path = str(tmp_path / "tiled_nulls")
+        write_tiled(df, path, "x", "y", 0, 8, 0, 8, max_depth=10, tile_level=2)
+        got = {r.point_id: (r.morton_key, r.tile) for r in read_tiled(spark, path).collect()}
+        sentinel = (1 << 20) - 1
+        for pid in (0, 1, 2):
+            assert got[pid] == (sentinel, sentinel >> 16), (pid, got[pid])
+        assert got[3][1] == 0
+
     def test_hilbert_cluster_same_content(self, spark, tmp_path):
         """cluster='hilbert' changes only file layout: same rows, same
         tile directory keys, pruning intact, and a hilbert_key column

@@ -580,6 +580,22 @@ class TestExpressions:
         np.testing.assert_array_equal(got, exp)
         assert (got[:9] == (1 << (2 * max_depth)) - 1).all()
 
+    @pytest.mark.parametrize("max_depth", [3, 12])
+    def test_morton_key_expr_null_coordinates(self, spark, max_depth):
+        """A null x, a null y or both get the sentinel, whether or not
+        the other coordinate lies inside the AOI."""
+        from cuspatial_spark.functions import morton_key_expr
+
+        rows = [(None, 4.0), (4.0, None), (None, None), (None, 9.0), (9.0, None)]
+        df = spark.createDataFrame(rows, "x double, y double")
+        scale = 8.0 / ((1 << max_depth) + 2)
+        got = [
+            r.k for r in df.select(
+                morton_key_expr("x", "y", 0.0, 8.0, 0.0, 8.0, scale, max_depth).alias("k")
+            ).collect()
+        ]
+        assert got == [(1 << (2 * max_depth)) - 1] * len(rows)
+
 
 class TestTrajectory:
     def test_distances_and_speeds_fixture(self, spark):

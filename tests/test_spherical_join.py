@@ -152,34 +152,41 @@ class TestGeodesicKnn:
 
     def test_numeric_radius_runs_only_limited_counts(self, spark, monkeypatch):
         """With a numeric initial radius and a data side larger than
-        dense_threshold, choosing dense vs progressive counts at most
-        dense_threshold + 1 rows: every count() job is over a Limit, so
-        none reads the whole data side."""
+        dense_threshold, choosing dense vs progressive reads at most
+        dense_threshold + 1 rows: every action the gate and the rounds
+        run through count() or toPandas() is over a Limit, so none
+        reads the whole data side."""
         from cuspatial_spark.plans import geodesic_knn_join
 
         data = _frame(spark, np.arange(20) + 500, np.linspace(-170, 170, 20),
                       np.linspace(-80, 80, 20), "poi_id")
         queries = _frame(spark, [0, 1], [0.0, 90.0], [0.0, 45.0], "query_id")
-        counted = []
-        real_count = type(data).count
+        actions = []
+        cls = type(data)
+        for name in ("count", "toPandas"):
+            real = getattr(cls, name)
 
-        def count(df):
-            counted.append(df._jdf.queryExecution().logical().toString())
-            return real_count(df)
+            def action(df, *a, _real=real, **kw):
+                actions.append(df._jdf.queryExecution().logical().toString())
+                return _real(df, *a, **kw)
 
-        monkeypatch.setattr(type(data), "count", count)
+            monkeypatch.setattr(cls, name, action)
         geodesic_knn_join(
             data, queries, k=2, id_col="poi_id", query_id_col="query_id",
             initial_radius_km=500.0, dense_threshold=4,
         )
-        assert counted
-        for plan in counted:
+        assert actions
+        for plan in actions:
             assert "Limit" in plan.splitlines()[0], plan
 
     def test_dense_path_equals_progressive(self, spark):
-        """The small-data dense path (broadcast POI array + row-local
-        top-k) must produce byte-identical rows to the progressive
-        chord-grid rounds, ties and starved queries included."""
+        """The small-data dense path (one Arrow crossing against the
+        collected data side) returns the progressive chord-grid
+        rounds' rows and schema, ties and starved queries included:
+        the same (query_id, neighbor_id, rank), ids in the input id
+        type, distances equal up to libm rounding."""
+        import pandas as pd
+
         from cuspatial_spark.plans import geodesic_knn_join
 
         rng = np.random.default_rng(17)
@@ -188,29 +195,82 @@ class TestGeodesicKnn:
         q_lat = np.degrees(np.arcsin(rng.uniform(-1, 1, nq)))
         d_lon = rng.uniform(-180, 180, nd)
         d_lat = np.degrees(np.arcsin(rng.uniform(-1, 1, nd)))
-        # overlapping ids exercise the self-exclusion rule
+        for dtype in ("int64", "int32"):
+            # overlapping ids exercise the self-exclusion rule
+            queries = _frame(spark, np.arange(nq, dtype=dtype), q_lon, q_lat, "query_id")
+            data = _frame(spark, np.arange(nd, dtype=dtype), d_lon, d_lat, "poi_id")
+            kw = dict(
+                k=k, id_col="poi_id", query_id_col="query_id",
+                initial_radius_km="auto",
+            )
+            dense = geodesic_knn_join(data, queries, **kw)
+            prog = geodesic_knn_join(data, queries, dense_threshold=0, **kw)
+            assert dense.schema == prog.schema
+            assert dict(dense.dtypes)["neighbor_id"] == dict(data.dtypes)["poi_id"]
+            got = dense.orderBy("query_id", "rank").toPandas()
+            want = prog.orderBy("query_id", "rank").toPandas()
+            cols = ["query_id", "neighbor_id", "rank"]
+            pd.testing.assert_frame_equal(got[cols], want[cols])
+            np.testing.assert_allclose(got.distance_km, want.distance_km, rtol=1e-12)
+
+    def test_null_ids_join_nothing_on_either_path(self, spark):
+        """A query with a null id gets no rows and a data point with a
+        null id is nobody's neighbor, on the dense path as on the
+        progressive rounds."""
+        from cuspatial_spark.plans import geodesic_knn_join
+
+        queries = spark.createDataFrame(
+            [(1, 0.0, 0.0), (None, 0.0, 0.1)], "query_id long, lon double, lat double"
+        )
+        data = spark.createDataFrame(
+            [(10, 0.0, 0.2), (None, 0.0, 0.01), (11, 1.0, 1.0)],
+            "poi_id long, lon double, lat double",
+        )
+        for threshold in (1024, 0):
+            got = geodesic_knn_join(
+                data, queries, k=5, id_col="poi_id", query_id_col="query_id",
+                initial_radius_km=500.0, dense_threshold=threshold,
+            ).orderBy("rank").collect()
+            assert [(r.query_id, r.neighbor_id, r.rank) for r in got] == [
+                (1, 10, 1), (1, 11, 2)
+            ], threshold
+
+    def test_dense_path_in_query_blocks(self, spark):
+        """A data side of 9000 rows splits each Arrow batch into blocks
+        of 116 queries (about 2**20 distances each); rows still equal
+        the brute force across block edges."""
+        from cuspatial_spark.plans import geodesic_knn_join
+
+        rng = np.random.default_rng(31)
+        nq, nd, k = 300, 9000, 3
+        q_lon = rng.uniform(-180, 180, nq)
+        q_lat = np.degrees(np.arcsin(rng.uniform(-1, 1, nq)))
+        d_lon = rng.uniform(-180, 180, nd)
+        d_lat = np.degrees(np.arcsin(rng.uniform(-1, 1, nd)))
         queries = _frame(spark, np.arange(nq), q_lon, q_lat, "query_id")
         data = _frame(spark, np.arange(nd), d_lon, d_lat, "poi_id")
-        kw = dict(
-            k=k, id_col="poi_id", query_id_col="query_id",
-            initial_radius_km="auto",
+        got = (
+            geodesic_knn_join(
+                data, queries.coalesce(1), k=k, id_col="poi_id",
+                query_id_col="query_id", dense_threshold=nd,
+            )
+            .orderBy("query_id", "rank")
+            .toPandas()
         )
-        dense = (
-            geodesic_knn_join(data, queries, **kw)
-            .orderBy("query_id", "rank").toPandas()
+        d = _hav_np(d_lon[None, :], d_lat[None, :], q_lon[:, None], q_lat[:, None])
+        d[np.arange(nq), np.arange(nq)] = np.inf
+        expect = np.argsort(d, axis=1, kind="stable")[:, :k]
+        np.testing.assert_array_equal(got.neighbor_id.to_numpy().reshape(nq, k), expect)
+        np.testing.assert_allclose(
+            got.distance_km.to_numpy().reshape(nq, k),
+            np.take_along_axis(d, expect, axis=1),
+            rtol=1e-12,
         )
-        prog = (
-            geodesic_knn_join(data, queries, dense_threshold=0, **kw)
-            .orderBy("query_id", "rank").toPandas()
-        )
-        import pandas as pd
-
-        pd.testing.assert_frame_equal(dense, prog)
 
     def test_dense_path_plan_has_no_exchange(self, spark):
-        """The dense path's whole point: zero shuffles on the query
-        side — one broadcast nested-loop join with a single build row,
-        everything else row-local."""
+        """The dense path's whole point: the queries stream through
+        exactly one Arrow crossing; nothing shuffles and nothing is
+        windowed."""
         from cuspatial_spark.plans import geodesic_knn_join
 
         queries = _frame(spark, np.arange(50), np.linspace(-170, 170, 50),
@@ -221,10 +281,35 @@ class TestGeodesicKnn:
             data, queries, k=3, id_col="poi_id", query_id_col="query_id",
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
-        # the only exchange allowed is the single-row aggregate on the
-        # tiny data side; the query side must not shuffle or window
-        assert "Window" not in plan
-        assert "Python" not in plan and "MapInPandas" not in plan
+        # the crossing reads the query scan directly
+        top, child = plan.splitlines()[:2]
+        assert plan.count("MapInPandas") == 1 and "MapInPandas" in top, plan
+        assert "Scan" in child and "[query_id" in child, plan
+        assert "Window" not in plan and "Exchange" not in plan, plan
+        assert "Join" not in plan, plan
+
+    def test_progressive_result_runs_no_join_or_window(self, spark):
+        """Every progressive round checkpoints its own top-k, so the
+        returned frame is a union of checkpointed batches: writing it
+        runs no join and no window, however many rounds ran."""
+        from cuspatial_spark.plans import geodesic_knn_join
+
+        rng = np.random.default_rng(29)
+        nq, nd = 60, 40
+        queries = _frame(spark, np.arange(nq), rng.uniform(-180, 180, nq),
+                         np.degrees(np.arcsin(rng.uniform(-1, 1, nq))), "query_id")
+        data = _frame(spark, np.arange(nd) + 1000, rng.uniform(-180, 180, nd),
+                      np.degrees(np.arcsin(rng.uniform(-1, 1, nd))), "poi_id")
+        out = geodesic_knn_join(
+            data, queries, k=4, id_col="poi_id", query_id_col="query_id",
+            initial_radius_km=300.0, dense_threshold=0,
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        # several rounds ran: the union holds one batch per round
+        assert plan.count("Scan ExistingRDD") > 1, plan
+        assert "Window" not in plan and "Join" not in plan, plan
+        assert "Exchange" not in plan, plan
+        assert out.count() == nq * 4
 
     def test_arg_validation(self, spark):
         from cuspatial_spark.plans import geodesic_knn_join
@@ -267,28 +352,3 @@ class TestGeodesicKnn:
                 initial_radius_km="bogus",
             )
 
-
-class TestDenseKnnArrowBackend:
-    def test_arrow_backend_matches_jvm(self, spark):
-        """The vectorized Arrow dense backend must reproduce the JVM
-        dense path's neighbor sets, ranks, and distances (to well
-        beyond output rounding; raw doubles may differ in the last
-        ulp across libms, which is why arrow is opt-in)."""
-        from cuspatial_spark.plans import geodesic_knn_join
-
-        rng = np.random.default_rng(23)
-        nq, nd, k = 200, 30, 5
-        queries = _frame(spark, np.arange(nq), rng.uniform(-180, 180, nq),
-                         np.degrees(np.arcsin(rng.uniform(-1, 1, nq))), "query_id")
-        data = _frame(spark, np.arange(nd), rng.uniform(-180, 180, nd),
-                      np.degrees(np.arcsin(rng.uniform(-1, 1, nd))), "poi_id")
-        kw = dict(k=k, id_col="poi_id", query_id_col="query_id",
-                  initial_radius_km="auto")
-        jvm = (geodesic_knn_join(data, queries, **kw)
-               .orderBy("query_id", "rank").toPandas())
-        arrow = (geodesic_knn_join(data, queries, dense_backend="arrow", **kw)
-                 .orderBy("query_id", "rank").toPandas())
-        assert (jvm[["query_id", "neighbor_id", "rank"]].values
-                == arrow[["query_id", "neighbor_id", "rank"]].values).all()
-        np.testing.assert_allclose(jvm.distance_km, arrow.distance_km,
-                                   rtol=1e-12)
