@@ -1503,7 +1503,7 @@ def q_semdedup(spark, sf_dir):
 def q_s2_cells(spark, sf_dir):
     """True spherical cell ids: S2 cube-face projection + quadratic
     st transform + Morton in-face ordering, all pure codegen
-    (functions/expressions.py s2_cell_expr).  Events are mapped onto
+    (functions/expressions.py with_s2_cell).  Events are mapped onto
     globe-spanning lon/lat so all six cube faces are exercised."""
     from cuspatial_spark.functions import with_s2_cell
 
@@ -3532,7 +3532,7 @@ def oracle_sql() -> dict[str, str]:
                c1.pt_touches AS poly_pt_touches, c1.pt_covers AS poly_pt_covers
         FROM c0 JOIN c1 USING (event_id)
     """
-    # s2_cells: replay of functions/expressions.py s2_cell_expr — the
+    # s2_cells: replay of functions/expressions.py with_s2_cell — the
     # standard S2 cube-face projection (s2coords.h face/uv tables),
     # quadratic uv->st transform, level-12 quantization, and the
     # 16-bit Morton dilation chain, all as DuckDB arithmetic.  Every

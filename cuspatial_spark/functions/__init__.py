@@ -8,7 +8,6 @@ from .expressions import (  # noqa: F401
     haversine_expr,
     inside_aoi,
     morton_key_expr,
-    s2_cell_expr,
     sinusoidal_x_expr,
     sinusoidal_y_expr,
     spatial_window_predicate,

@@ -210,8 +210,11 @@ def with_hilbert_key(
     return out.drop(hx, hy, rx, ry, "__nx", "__ny")
 
 
-def s2_cell_expr(lon, lat, level: int) -> Column:
-    """S2-style spherical cell id for (lon, lat) degrees — pure
+def with_s2_cell(
+    df, lon_col: str, lat_col: str, level: int, out: str = "s2_cell"
+):
+    """Adds the S2-style cell id column for (lon, lat) degrees — the
+    spherical partitioning key for globe-spanning corpora, pure
     Catalyst codegen, no Python.
 
     The standard S2 construction (s2geometry s2coords.h): project the
@@ -229,78 +232,17 @@ def s2_cell_expr(lon, lat, level: int) -> Column:
     has no singular tiles at the poles and no date-line split: the
     cube-face projection is what lets a geo-tagged web corpus
     partition evenly at 100 TB when crawl density spans the globe.
-    Returns ``face * 4^level + morton(i, j)`` as bigint; ``level`` is
-    capped at 15 so the in-face coordinates fit the 16-bit dilation.
+    The column is ``face * 4^level + morton(i, j)`` as bigint;
+    ``level`` is capped at 15 so the in-face coordinates fit the
+    16-bit dilation.
 
-    NOTE: as a single nested expression the plan TEXT grows large
-    (every reference re-inlines the face CASE); results and runtime
-    are fine, but prefer ``with_s2_cell`` — identical math staged as
-    small chained projections the optimizer keeps separate — for
-    production plans.
-    """
-    if not 0 <= level <= 15:
-        raise ValueError(f"level must be in [0, 15], got {level}")
-    lam, phi = F.radians(lon), F.radians(lat)
-    x = F.cos(phi) * F.cos(lam)
-    y = F.cos(phi) * F.sin(lam)
-    z = F.sin(phi)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    face = (
-        F.when((az >= ax) & (az >= ay), F.when(z > 0, 2).otherwise(5))
-        .when(ay >= ax, F.when(y > 0, 1).otherwise(4))
-        .otherwise(F.when(x > 0, 0).otherwise(3))
-    )
-    u = (
-        F.when(face == 0, y / x)
-        .when(face == 1, -x / y)
-        .when(face == 2, -x / z)
-        .when(face == 3, z / x)
-        .when(face == 4, z / y)
-        .otherwise(-y / z)
-    )
-    v = (
-        F.when(face == 0, z / x)
-        .when(face == 1, z / y)
-        .when(face == 2, -y / z)
-        .when(face == 3, y / x)
-        .when(face == 4, -x / y)
-        .otherwise(-x / z)
-    )
-
-    def st(w: Column) -> Column:
-        return F.when(w >= 0, F.sqrt(1.0 + 3.0 * w) * 0.5).otherwise(
-            1.0 - F.sqrt(1.0 - 3.0 * w) * 0.5
-        )
-
-    n = 1 << level
-    cmax = F.lit(n - 1)
-    i = F.greatest(
-        F.lit(0).cast("bigint"),
-        F.least(F.floor(st(u) * float(n)).cast("bigint"), cmax),
-    )
-    j = F.greatest(
-        F.lit(0).cast("bigint"),
-        F.least(F.floor(st(v) * float(n)).cast("bigint"), cmax),
-    )
-    return (
-        face.cast("bigint") * F.lit(1 << (2 * level))
-        + F.shiftleft(_dilate2_expr(j), 1).bitwiseOR(_dilate2_expr(i))
-    )
-
-
-def with_s2_cell(
-    df, lon_col: str, lat_col: str, level: int, out: str = "s2_cell"
-):
-    """Adds the S2-style cell id column — the spherical partitioning
-    key for globe-spanning corpora.
-
-    Same math as ``s2_cell_expr`` but built as a chain of small
-    projections over named intermediates (unit vector, face, uv, ij,
-    dilation steps).  A single nested expression re-inlines the face
-    CASE under every reference and the plan text grows exponentially
-    (~300 KB at level 12); here each intermediate is referenced more
-    than once so CollapseProject keeps the stages separate and the
-    plan stays O(1) small.  Still zero shuffles, zero Python."""
+    Built as a chain of small projections over named intermediates
+    (unit vector, face, uv, ij, dilation steps): as one nested
+    expression the face CASE is re-inlined under every reference and
+    the plan text grows exponentially (~300 KB at level 12); here each
+    intermediate is referenced more than once so CollapseProject keeps
+    the stages separate and the plan stays O(1) small.  Still zero
+    shuffles, zero Python."""
     if not 0 <= level <= 15:
         raise ValueError(f"level must be in [0, 15], got {level}")
     lam, phi = F.radians(F.col(lon_col)), F.radians(F.col(lat_col))

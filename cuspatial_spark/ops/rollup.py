@@ -117,24 +117,16 @@ class ContinuousAggregate:
                 out.append(F.max(f"__max_{col}").alias(f"__max_{col}"))
         return out
 
-    def _delta_frames(self, spark: SparkSession, lo: int, hi: int):
-        """Append snapshots with lo < version <= hi that hold rows, or
-        None when the log can't serve the delta (an expired snapshot in
-        range — compaction folded it in; caller falls back to full
-        recompute)."""
-        frames = []
-        for m in self.base.history()[:hi]:
-            v = m["version"]
-            if v <= lo or m.get("compacted_through") is not None or m["rows"] == 0:
-                continue
-            if m.get("expired"):
-                return None
-            frames.append(
-                spark.read.option("basePath", m["snapshot_dir"]).parquet(
-                    m["snapshot_dir"]
-                )
-            )
-        return frames
+    def _delta_manifests(self, lo: int, hi: int):
+        """Manifests of the append snapshots with lo < version <= hi
+        that hold rows, or None when the log can't serve the delta (an
+        expired snapshot in range — compaction folded it in; caller
+        falls back to full recompute)."""
+        mans = [
+            m for m in self.base.history()[lo:hi]
+            if m.get("compacted_through") is None and m["rows"]
+        ]
+        return None if any(m.get("expired") for m in mans) else mans
 
     # ------------------------------------------------------------- api
     def refresh(self, spark: SparkSession) -> dict:
@@ -146,8 +138,8 @@ class ContinuousAggregate:
         lo, hi = ptr["processed_through"], self.base.current_version()
         if hi <= lo:
             return {"processed_through": lo, "refreshed": False, "mode": "noop"}
-        frames = self._delta_frames(spark, lo, hi)
-        if frames is not None and not frames:
+        mans = self._delta_manifests(lo, hi)
+        if mans is not None and not mans:
             # only compaction or empty snapshots in range: no new
             # rows — advance the watermark so later deltas stay
             # minimal, keep the data
@@ -157,16 +149,12 @@ class ContinuousAggregate:
                         "mode": "noop"}
             return {"processed_through": lo, "refreshed": False, "mode": "noop"}
         mode = "delta"
-        if frames is None:
+        if mans is None:
             new = self.base.read(spark, version=hi)
             prev = None  # full recompute — ignore prior state
             mode = "full"
         else:
-            new = None
-            for f in frames:
-                new = f if new is None else new.unionByName(
-                    f, allowMissingColumns=True
-                )
+            new = self.base._scan(spark, mans)
             prev = (
                 spark.read.parquet(ptr["data"]) if ptr["data"] is not None else None
             )

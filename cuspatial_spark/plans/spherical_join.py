@@ -35,25 +35,25 @@ from __future__ import annotations
 from functools import reduce
 from itertools import product
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import EARTH_RADIUS_KM, haversine_expr
+from ..functions.expressions import (
+    EARTH_RADIUS_KM,
+    _sql_double,
+    haversine_expr,
+    sql_name,
+)
 
 import math
 
 
-def _with_unit_vector(df: DataFrame, lon: str, lat: str, prefix: str) -> DataFrame:
-    lam, phi = F.radians(F.col(lon)), F.radians(F.col(lat))
-    return (
-        df.withColumn(f"{prefix}x", F.cos(phi) * F.cos(lam))
-        .withColumn(f"{prefix}y", F.cos(phi) * F.sin(lam))
-        .withColumn(f"{prefix}z", F.sin(phi))
-    )
-
-
-def _cell(c: Column, size: float) -> Column:
-    return F.floor(c / F.lit(size)).cast("long")
+def _cells_sql(lon: str, lat: str, chord: float) -> list[str]:
+    """SQL text of the chord-grid cell, per axis, of the unit vector of
+    the degree ``lon``/``lat`` columns: FLOOR(axis / chord)."""
+    lam, phi = f"radians({sql_name(lon)})", f"radians({sql_name(lat)})"
+    unit = (f"cos({phi}) * cos({lam})", f"cos({phi}) * sin({lam})", f"sin({phi})")
+    return [f"CAST(FLOOR(({u}) / {_sql_double(chord)}) AS BIGINT)" for u in unit]
 
 
 def haversine_radius_join(
@@ -87,39 +87,31 @@ def haversine_radius_join(
     rkeep = list(keep_right)
     rmap = {c: (f"r_{c}" if c in lkeep else c) for c in rkeep}
 
-    lhs = _with_unit_vector(left.select(*lkeep, lon, lat), lon, lat, "__l")
-    for ax in ("x", "y", "z"):
-        lhs = lhs.withColumn(f"__lc{ax}", _cell(F.col(f"__l{ax}"), chord))
-
-    rhs = _with_unit_vector(
-        right.select(*rkeep, right_lon, right_lat), right_lon, right_lat, "__r"
+    # each side is one select of SQL text: a Column tree of the same
+    # cells paid a Py4J round trip per node, and each withColumn a
+    # re-analysis of the plan
+    lx, ly, lz = _cells_sql(lon, lat, chord)
+    lhs = left.selectExpr(
+        *map(sql_name, lkeep), sql_name(lon), sql_name(lat),
+        f"{lx} AS __lcx", f"{ly} AS __lcy", f"{lz} AS __lcz",
     )
+    rx, ry, rz = _cells_sql(right_lon, right_lat, chord)
     # 27-neighbor fan-out on the (small) right side: a pair within the
     # chord differs by at most one cell per axis
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dz).alias("dz"))
-            for dx, dy, dz in product((-1, 0, 1), repeat=3)
-        ]
+    offsets = ", ".join(
+        f"named_struct('__rcx', __cx + {dx}, '__rcy', __cy + {dy}, '__rcz', __cz + {dz})"
+        for dx, dy, dz in product((-1, 0, 1), repeat=3)
     )
-    rhs = rhs.withColumn("__off", F.explode(offsets))
-    for ax, d in (("x", "dx"), ("y", "dy"), ("z", "dz")):
-        rhs = rhs.withColumn(
-            f"__rc{ax}", _cell(F.col(f"__r{ax}"), chord) + F.col("__off")[d]
-        )
-    rhs = rhs.select(
-        *[F.col(c).alias(rmap[c]) for c in rkeep],
-        F.col(right_lon).alias("__rlon"), F.col(right_lat).alias("__rlat"),
-        "__rcx", "__rcy", "__rcz",
-    )
+    rkept = ["`" + rmap[c].replace("`", "``") + "`" for c in rkeep]
+    rhs = right.selectExpr(
+        *[f"{sql_name(c)} AS {k}" for c, k in zip(rkeep, rkept)],
+        f"{sql_name(right_lon)} AS __rlon", f"{sql_name(right_lat)} AS __rlat",
+        f"{rx} AS __cx", f"{ry} AS __cy", f"{rz} AS __cz",
+    ).selectExpr(*rkept, "__rlon", "__rlat", f"inline(array({offsets}))")
     if broadcast_right:
         rhs = F.broadcast(rhs)
 
-    cond = (
-        (F.col("__lcx") == F.col("__rcx"))
-        & (F.col("__lcy") == F.col("__rcy"))
-        & (F.col("__lcz") == F.col("__rcz"))
-    )
+    cond = F.expr("__lcx = __rcx AND __lcy = __rcy AND __lcz = __rcz")
     dist = haversine_expr(
         F.col(lon), F.col(lat), F.col("__rlon"), F.col("__rlat"), earth_radius_km
     )

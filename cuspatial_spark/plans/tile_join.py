@@ -423,6 +423,13 @@ def point_to_nearest_linestring_join(
     is exactly the single-shot join at ``expansion_radius``.  Candidate
     pairs stay O(|points| * hit density) even for an AOI-wide radius.
 
+    The covers ride in the UDF closure, each of at most
+    ``n_lines * 4**tile_level`` entries.  They stop at the first full
+    cover (every line with a vertex on every tile), whose round is the
+    final one: a wider cover is the same, so are the rows.  With every
+    line inside the AOI a cover is full by twice the grid's width, so
+    there are at most ``tile_level + 2``, whatever the radius.
+
     This one form replaced four (a full-cover kernel, a dense per-tile
     JVM table, a segment-table JVM join with a groupBy min, and
     checkpointed progressive rounds of either) and returned the same
@@ -483,7 +490,13 @@ def point_to_nearest_linestring_join(
         radii.append(r)
         r *= 2.0
     radii.append(float(expansion_radius))
-    covers = [(r, *cover(r)) for r in radii]
+    # entries of a full cover: every line with a vertex on every tile
+    full = int(np.isfinite([minx, miny, maxx, maxy]).all(axis=0).sum()) << (2 * tile_level)
+    covers = []
+    for r in radii:
+        covers.append((r, *cover(r)))
+        if len(covers[-1][3]) == full:
+            break
 
     def nearest_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -14,14 +14,16 @@ to the table level):
   prefix of fully committed snapshots.
 - **Time travel** — ``read(spark, version=k)`` is the union of
   snapshots 1..k; default is the latest.
-- **Stats pruning** — each manifest records per-tile row counts and
-  the snapshot's x/y bounds, read off the written files' parquet
-  footers on the driver (a commit runs no Spark job besides the
-  write itself); ``read(window=...)`` skips whole
-  snapshots whose bounds miss the query window, then Spark's
-  directory-partition pruning on ``tile`` and parquet min/max skip the
-  rest.  At 10^12 documents this is the difference between listing
-  every file and touching only the files under the window.
+- **Stats pruning** — each manifest lists its parquet files, each
+  with its tile, row count and x/y bounds, plus the Spark schema, all
+  read off the written files' parquet footers on the driver (a commit
+  runs no Spark job besides the write itself).  ``read(window=...)``
+  plans from the manifests alone: it keeps the files whose bounds
+  meet the window and reads them with the recorded schema, so it
+  lists no snapshot directory and runs no schema-inference job;
+  parquet min/max then skip row groups inside the kept files.  At
+  10^12 documents this is the difference between listing every file
+  and touching only the files under the window.
 - **Lineage** — manifests carry the commit's row count, bounds,
   cluster curve, and a caller-supplied ``source`` tag; ``history()``
   returns the chain.
@@ -46,11 +48,40 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructType
 
 from .writer import write_tiled
+
+
+def _meets(bounds: dict | None, window) -> bool:
+    """Inclusive test of a file's x/y bounds against a window whose
+    reversed bounds are swapped, as points_in_spatial_window swaps
+    them; None (no stats) always meets, and so does a NaN bound."""
+    if bounds is None:
+        return True
+    x0, x1 = sorted(window[:2])
+    y0, y1 = sorted(window[2:])
+    return not (
+        bounds["x_lo"] > x1 or bounds["x_hi"] < x0
+        or bounds["y_lo"] > y1 or bounds["y_hi"] < y0
+    )
+
+
+def _fold(boxes: list) -> dict | None:
+    """The x/y bounds of row groups' or files' bounds; None when there
+    are none or one is None.  Parquet orders NaN above every double, as
+    Spark's min/max do: a NaN max wins, a NaN min only when every min
+    is NaN."""
+    if not boxes or None in boxes:
+        return None
+    return {
+        k: float((np.fmin if k.endswith("_lo") else np.maximum).reduce([b[k] for b in boxes]))
+        for k in ("x_lo", "x_hi", "y_lo", "y_hi")
+    }
 
 
 class TiledTable:
@@ -163,17 +194,18 @@ class TiledTable:
     def _build_manifest(
         self, version, snap_dir, x, y, layout, source, **extra
     ) -> dict:
-        """Per-tile row counts and x/y bounds of a written snapshot,
-        read off its parquet footers on the driver, with no Spark job:
-        the tile is the ``tile=K`` directory, rows are the row-group
-        row counts, bounds the min/max of the x and y column
-        statistics.  A non-empty row group without min/max for x or y
-        makes ``bounds`` None, which read() treats as "never prune"."""
+        """A written snapshot's manifest, read off its parquet footers
+        on the driver, with no Spark job.  ``files`` lists each
+        non-empty file with its root-relative path, its tile (the
+        ``tile=K`` directory), its rows (the row-group row counts) and
+        its ``bounds`` (the min/max of the x and y column statistics);
+        ``schema`` is the Spark schema JSON Spark writes into every
+        footer.  ``rows``, ``tiles`` and ``bounds`` sum and fold the
+        files.  A non-empty row group without min/max for x or y makes
+        its file's bounds, and the snapshot's, None: "never prune"."""
         import pyarrow.parquet as pq
 
-        tiles: dict[str, int] = {}
-        lo, hi = ([], []), ([], [])
-        bounded = True
+        files, tiles, schema = [], {}, None
         for part in sorted(os.listdir(snap_dir)):
             if not part.startswith("tile="):
                 continue
@@ -181,31 +213,35 @@ class TiledTable:
             for name in sorted(os.listdir(os.path.join(snap_dir, part))):
                 if not name.endswith(".parquet"):
                     continue
-                meta = pq.read_metadata(os.path.join(snap_dir, part, name))
+                path = os.path.join(snap_dir, part, name)
+                meta = pq.read_metadata(path)
+                if schema is None:
+                    # Spark writes the frame's schema into every footer
+                    schema = json.loads(
+                        meta.metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+                    )
                 cols = [meta.schema.column(j).path for j in range(meta.num_columns)]
                 xy = (cols.index(x), cols.index(y))
+                groups, rows = [], 0
                 for i in range(meta.num_row_groups):
                     group = meta.row_group(i)
                     if group.num_rows == 0:
                         continue
-                    tiles[tile] = tiles.get(tile, 0) + group.num_rows
-                    for k, j in enumerate(xy):
-                        stats = group.column(j).statistics
-                        if stats is None or not stats.has_min_max:
-                            bounded = False
-                        else:
-                            lo[k].append(stats.min)
-                            hi[k].append(stats.max)
-        bounds = None
-        if tiles and bounded:
-            # parquet orders NaN above every double, as Spark's min/max
-            # do: a NaN max wins, a NaN min only when every min is NaN
-            bounds = {
-                "x_lo": float(np.fmin.reduce(lo[0])),
-                "x_hi": float(np.maximum.reduce(hi[0])),
-                "y_lo": float(np.fmin.reduce(lo[1])),
-                "y_hi": float(np.maximum.reduce(hi[1])),
-            }
+                    rows += group.num_rows
+                    sx, sy = (group.column(j).statistics for j in xy)
+                    groups.append(
+                        {"x_lo": sx.min, "x_hi": sx.max, "y_lo": sy.min, "y_hi": sy.max}
+                        if all(s is not None and s.has_min_max for s in (sx, sy))
+                        else None
+                    )
+                if rows:
+                    files.append({
+                        "path": os.path.relpath(path, self.path),
+                        "tile": int(tile),
+                        "rows": rows,
+                        "bounds": _fold(groups),
+                    })
+                    tiles[tile] = tiles.get(tile, 0) + rows
         return {
             "version": version,
             "parent": version - 1 if version > 1 else None,
@@ -213,8 +249,10 @@ class TiledTable:
             # directory can be moved/cloned and manifests stay valid
             "snapshot_dir": os.path.relpath(snap_dir, self.path),
             "rows": sum(tiles.values()),
-            "bounds": bounds,
+            "bounds": _fold([f["bounds"] for f in files]),
             "tiles": tiles,
+            "files": files,
+            "schema": schema,
             "layout": layout,
             "source": source,
             **extra,
@@ -407,10 +445,18 @@ class TiledTable:
         """Effective view at ``version`` (default: latest): the newest
         compaction base at or below it plus later appends — or the
         plain union of snapshots 1..version when no compaction exists.
-        With ``window=(x0, x1, y0, y1)``, snapshots whose recorded
-        bounds miss the window are skipped entirely (manifest-level
-        pruning); the returned frame is NOT window-filtered — compose
-        with points_in_spatial_window for the row-level cut.  Empty
+
+        The plan comes from the manifests alone (see ``_scan``): no
+        directory is listed and no schema inferred, so with at most 32
+        files kept per snapshot the read runs no Spark job.  Above
+        that (Spark's ``parallelPartitionDiscovery.threshold``), Spark
+        stats the kept files in a listing job of its own.
+
+        With ``window=(x0, x1, y0, y1)``, files whose recorded bounds
+        miss the window are skipped (file-level pruning).  The returned
+        frame is NOT window-filtered: it holds every row in the window
+        plus the other rows of the kept files, so compose with
+        points_in_spatial_window for the row-level cut.  Empty
         snapshots (a commit of zero rows) hold no files and are always
         skipped; a view with no rows at all raises ValueError."""
         version = version or self.current_version()
@@ -418,18 +464,34 @@ class TiledTable:
             raise ValueError(f"table {self.path} has no committed snapshots")
         mans = self.history()[:version]
         base = self._compaction_base(mans)
-        if base is None:
-            parts = mans
-        else:
-            parts = [base] + [
+        if base is not None:
+            mans = [base] + [
                 m
                 for m in mans
                 if m["version"] > base["compacted_through"]
                 and m["version"] != base["version"]
                 and m.get("compacted_through") is None
             ]
-        out = None
-        for m in sorted(parts, key=lambda m: m["version"]):
+        if not any(m["rows"] for m in mans):
+            raise ValueError(f"table {self.path} has no rows at version {version}")
+        return self._scan(spark, mans, window)
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        manifests: list[dict],
+        window: tuple[float, float, float, float] | None = None,
+    ) -> DataFrame:
+        """The rows of ``manifests`` (history() entries, some with
+        rows), planned from their file lists alone.  Per snapshot, the
+        files whose bounds meet ``window`` (all when it is None) are
+        read with the manifest's schema.  One read cannot span
+        snapshots (Spark rejects leaf files under several partition
+        roots), so the reads are joined by name, null-filling a column
+        a snapshot lacks (``hilbert_key``).  With no file kept the
+        frame is empty, with the schema the reads would have had."""
+        reads, schemas = [], []
+        for m in sorted(manifests, key=lambda m: m["version"]):
             if m.get("expired"):
                 raise RuntimeError(
                     f"snapshot v{m['version']} was expired by "
@@ -438,30 +500,27 @@ class TiledTable:
                 )
             if m["rows"] == 0:
                 continue
-            if window is not None and m["bounds"] is not None:
-                x0, x1, y0, y1 = window
-                b = m["bounds"]
-                if b["x_lo"] > x1 or b["x_hi"] < x0 or b["y_lo"] > y1 or b["y_hi"] < y0:
-                    continue
-            part = spark.read.option("basePath", m["snapshot_dir"]).parquet(
-                m["snapshot_dir"]
-            )
-            # snapshots may differ in layout columns (e.g. hilbert_key
-            # only exists in hilbert-clustered commits) — null-fill
-            out = (
-                part
-                if out is None
-                else out.unionByName(part, allowMissingColumns=True)
-            )
-        if out is None:
-            # every snapshot pruned: empty frame with the right schema
-            m = next((m for m in parts if m["rows"] > 0), None)
-            if m is None:
+            if "files" not in m:
                 raise ValueError(
-                    f"table {self.path} has no rows at version {version}"
+                    f"manifest v{m['version']} of {self.path} has no file "
+                    "list: re-commit its rows with the current library"
                 )
-            base_df = spark.read.option("basePath", m["snapshot_dir"]).parquet(
-                m["snapshot_dir"]
-            )
-            return base_df.limit(0)
-        return out
+            schema = StructType.fromJson(m["schema"])
+            schemas.append(schema)
+            kept = [
+                self._resolve(f["path"])
+                for f in m["files"]
+                if window is None or _meets(f["bounds"], window)
+            ]
+            if kept:
+                reads.append(
+                    spark.read.schema(schema)
+                    .option("basePath", m["snapshot_dir"])
+                    .parquet(*kept)
+                )
+        if not reads:
+            # zero paths: an empty scan, listing nothing, of each
+            # snapshot's schema plus its ``tile`` partition column
+            reads = [spark.read.schema(s.add("tile", IntegerType())).parquet()
+                     for s in schemas]
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), reads)

@@ -904,6 +904,7 @@ class TestIvfTrainer:
 
 class TestTiledTable:
     def test_commit_time_travel_prune(self, spark, tmp_path):
+        from cuspatial_spark.operators import points_in_spatial_window
         from cuspatial_spark.sources.table import TiledTable
 
         t = TiledTable(str(tmp_path / "table"))
@@ -924,10 +925,13 @@ class TestTiledTable:
         ids = set(r.point_id for r in t.read(spark).select("point_id").collect())
         assert ids == set(range(900))
 
-        # manifest-level pruning: a window wholly inside batch-1's
-        # bounds must skip snapshot 2 (its plan reads one directory)
-        pruned = t.read(spark, window=(0.0, 3.0, 0.0, 3.0))
-        assert pruned.count() == 500
+        # file-level pruning: a window wholly inside batch-1's bounds
+        # keeps every row in the window and no file of snapshot 2
+        w = (0.0, 3.0, 0.0, 3.0)
+        pruned = set(r.point_id for r in t.read(spark, window=w).select("point_id").collect())
+        inside = points_in_spatial_window(t.read(spark), *w)
+        assert set(r.point_id for r in inside.select("point_id").collect()) <= pruned
+        assert pruned < set(range(500))
 
         # lineage chain
         h = t.history()

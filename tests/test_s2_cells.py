@@ -1,4 +1,4 @@
-"""S2-style spherical cell encoding (functions.s2_cell_expr): face
+"""S2-style spherical cell encoding (functions.with_s2_cell): face
 selection, st quantization, Morton packing, pole/date-line behavior,
 and the pure-codegen plan shape."""
 
@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cuspatial_spark.functions import s2_cell_expr, with_s2_cell
+from cuspatial_spark.functions import with_s2_cell
 
 
 def _cells(spark, rows, level):
@@ -107,11 +107,12 @@ def test_poles_are_regular_cells(spark):
     assert len(set(cells)) <= 4
 
 
-def test_level_bounds():
+def test_level_bounds(spark):
+    df = spark.range(1).select(F.lit(0.0).alias("lon"), F.lit(0.0).alias("lat"))
     with pytest.raises(ValueError):
-        s2_cell_expr(F.lit(0.0), F.lit(0.0), 16)
+        with_s2_cell(df, "lon", "lat", 16)
     with pytest.raises(ValueError):
-        s2_cell_expr(F.lit(0.0), F.lit(0.0), -1)
+        with_s2_cell(df, "lon", "lat", -1)
 
 
 def test_partition_balance_beats_planar(spark):
@@ -136,16 +137,3 @@ def test_plan_is_pure_codegen_and_bounded(spark):
     # staged projections keep the plan text O(1) — the single-expr
     # form re-inlines the face CASE exponentially (~300 KB at level 12)
     assert len(plan) < 60_000
-
-
-def test_expr_and_staged_forms_agree(spark):
-    rng = np.random.default_rng(3)
-    rows = list(zip(
-        rng.uniform(-180, 180, 64).tolist(), rng.uniform(-89, 89, 64).tolist()
-    ))
-    df = spark.createDataFrame(rows, "lon double, lat double")
-    a = df.select(
-        s2_cell_expr(F.col("lon"), F.col("lat"), 9).alias("cell")
-    ).toPandas()["cell"].to_numpy()
-    b = with_s2_cell(df, "lon", "lat", 9, out="cell").toPandas()["cell"].to_numpy()
-    np.testing.assert_array_equal(np.sort(a), np.sort(b))

@@ -398,6 +398,47 @@ class TestDistributedTileJoin:
         ).collect()
         assert [(r.a, r.linestring_id, r.distance) for r in got] == [(1, 1, 0.5)]
 
+    def test_nearest_join_stops_at_the_first_full_cover(self, spark, monkeypatch):
+        """At a radius far past the AOI, the driver stops building
+        covers at the first full one (at most tile_level + 2 covers for
+        lines inside the AOI, not one per doubling up to the radius),
+        and the rows still equal the brute force, for layers inside and
+        partly outside the AOI."""
+        from cuspatial_spark.plans import tile_join
+
+        aoi = dict(x_min=0.0, x_max=8.0, y_min=0.0, y_max=8.0, max_depth=8)
+        tile_level = 3
+        rng = np.random.default_rng(41)
+        counts = [2, 3, 1, 0, 4, 2]
+        offsets = np.r_[0, np.cumsum(counts)]
+        inside = LinestringArrays(offsets, rng.uniform(0, 8, 12), rng.uniform(0, 8, 12),
+                                  ids=np.array([7, 3, 9, 1, 5, 2]))
+        partly_outside = LinestringArrays(offsets, rng.uniform(-4, 12, 12),
+                                          rng.uniform(-4, 12, 12))
+        n = 150
+        pdf = pd.DataFrame({"a": np.arange(n, dtype=np.int64), "b": [f"p{i}" for i in range(n)],
+                            "x": rng.uniform(-1, 9, n), "y": rng.uniform(-1, 9, n)})
+        pts = spark.createDataFrame(pdf, "a long, b string, x double, y double")
+
+        built = []
+        real = tile_join.tiles_covering_bboxes
+        monkeypatch.setattr(tile_join, "tiles_covering_bboxes",
+                            lambda *a: built.append(a) or real(*a))
+        point_to_nearest_linestring_join(pts, inside, 1000.0, tile_level=tile_level, **aoi)
+        monkeypatch.undo()
+        # 11 radii lead up to 1000; the fourth (about 7.9) is full
+        assert len(built) <= tile_level + 2, len(built)
+
+        for lines in (inside, partly_outside):
+            for radius in (20.0, 1000.0, 1e6):
+                got = point_to_nearest_linestring_join(
+                    pts.repartition(2), lines, radius, tile_level=tile_level, **aoi
+                )
+                want = _nearest_oracle(pdf, lines, radius, tile_level, **aoi)
+                rows = [(r.a, r.b, r.x, r.y, r.linestring_id, r.distance)
+                        for r in want.itertuples()]
+                assert sorted(map(tuple, got.collect())) == sorted(rows), radius
+
     def test_nearest_join_matches_bruteforce_oracle(self, spark):
         """Differential test against a plain-NumPy oracle: candidates
         are the lines whose bbox grown by the radius covers the point's

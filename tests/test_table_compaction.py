@@ -182,6 +182,31 @@ def _spark_manifest_stats(spark, m):
     }
 
 
+def _spark_file_stats(spark, m):
+    """Oracle for a manifest's ``files``: the same aggregate per
+    ``input_file_name()``, keyed by absolute path."""
+    from urllib.parse import unquote, urlparse
+
+    from pyspark.sql import functions as F
+
+    x, y = m["layout"]["x_col"], m["layout"]["y_col"]
+    keys = ("x_lo", "x_hi", "y_lo", "y_hi")
+    per_file = spark.read.parquet(m["snapshot_dir"]).groupBy(
+        F.input_file_name().alias("file"), "tile"
+    ).agg(
+        F.count("*").alias("rows"),
+        F.min(x).alias("x_lo"), F.max(x).alias("x_hi"),
+        F.min(y).alias("y_lo"), F.max(y).alias("y_hi"),
+    ).collect()
+    return {
+        unquote(urlparse(r["file"]).path): _comparable({
+            "tile": r["tile"], "rows": r["rows"],
+            "bounds": None if any(r[k] is None for k in keys) else {k: r[k] for k in keys},
+        })
+        for r in per_file
+    }
+
+
 def _comparable(stats):
     """NaN != NaN, so compare NaN bounds by name."""
     b = stats["bounds"]
@@ -198,6 +223,12 @@ class TestManifestStats:
         for m in t.history():
             got = {k: m[k] for k in ("rows", "bounds", "tiles")}
             assert _comparable(got) == _comparable(_spark_manifest_stats(spark, m)), m["version"]
+            files = {
+                os.path.join(t.path, f["path"]): _comparable(
+                    {k: f[k] for k in ("tile", "rows", "bounds")})
+                for f in m["files"]
+            }
+            assert files == _spark_file_stats(spark, m), m["version"]
 
     def test_footer_stats_equal_spark_aggregate(self, spark, tmp_path):
         nan, inf = float("nan"), float("inf")
@@ -246,3 +277,132 @@ class TestManifestStats:
                   for f in _files(t.history()[0]["snapshot_dir"])]
         assert max(groups) > 1, groups
         self._check(spark, t)
+
+
+def _ids(df):
+    return sorted(r.point_id for r in df.select("point_id").collect())
+
+
+@pytest.fixture(scope="module")
+def mixed_table(spark, tmp_path_factory):
+    """Morton and Hilbert commits (so snapshot schemas differ), NaN,
+    +-inf, null and out-of-AOI coordinates, an empty commit, a commit
+    whose x has no statistics (bounds None), a compaction base and
+    appends after it.  tile_level=2 keeps every snapshot at <= 32
+    files."""
+    nan, inf = float("nan"), float("inf")
+    rng = np.random.default_rng(51)
+    schema = "point_id long, x double, y double"
+
+    def rows(lo, n, a=0.0, b=8.0):
+        return [(lo + i, float(u), float(v))
+                for i, (u, v) in enumerate(rng.uniform(a, b, (n, 2)))]
+
+    odd = [(900, nan, 2.0), (901, inf, 3.0), (902, -inf, 4.0), (903, None, 5.0),
+           (904, 1.0, None), (905, 2.0, nan), (906, 3.0, -inf), (907, 7.5, inf)]
+    t = TiledTable(str(tmp_path_factory.mktemp("mixed") / "t"))
+
+    def commit(data, cluster="morton"):
+        return t.commit(spark.createDataFrame(data, schema), "x", "y", 0, 8, 0, 8,
+                        tile_level=2, cluster=cluster)
+
+    commit(rows(0, 300) + odd)                           # v1
+    commit(rows(1000, 200, -3.0, 11.0), "hilbert")       # v2: many outside
+    commit([])                                           # v3: empty
+    commit(rows(2000, 150, 0.0, 3.0))                    # v4
+    t.compact(spark)                                     # v5 covers 1-4
+    commit(rows(3000, 100, 4.0, 8.0), "hilbert")         # v6
+    commit([(4000 + i, None, float(v))                   # v7: x all null
+            for i, v in enumerate(rng.uniform(0, 8, 40))])
+    assert t.history()[6]["bounds"] is None
+    return t
+
+
+class TestManifestScan:
+    """Reads plan from the manifests' file lists: no listing, no
+    schema inference, file-level window pruning."""
+
+    def test_read_runs_no_spark_job(self, spark, mixed_table):
+        import uuid
+
+        t = mixed_table
+        assert all(len(_files(m["snapshot_dir"])) <= 32 for m in t.history())
+        sc = spark.sparkContext
+        group = f"tiled-read-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "TiledTable reads")
+        try:
+            frames = [t.read(spark), t.read(spark, version=4),
+                      t.read(spark, window=(1.0, 2.0, 1.0, 2.0)),
+                      t.read(spark, version=2, window=(20.0, 21.0, 20.0, 21.0))]
+        finally:
+            sc._jsc.clearJobGroup()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert [f.count() for f in frames[:2]] == [
+            sum(m["rows"] for m in t.history()[4:]),
+            sum(m["rows"] for m in t.history()[:4]),
+        ]
+
+    @pytest.mark.parametrize("version", [2, 4, 7])
+    def test_schema_equals_inferred_read(self, spark, mixed_table, version):
+        """The recorded schema gives the schema Spark infers from the
+        files: names, order, types and nullability."""
+        from functools import reduce
+
+        t = mixed_table
+        view = {2: [1, 2], 4: [1, 2, 4], 7: [5, 6, 7]}[version]
+        inferred = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [spark.read.option("basePath", m["snapshot_dir"]).parquet(m["snapshot_dir"])
+             for m in t.history() if m["version"] in view],
+        ).schema
+        assert t.read(spark, version=version).schema == inferred
+
+    def test_window_keeping_no_file(self, spark, tmp_path):
+        """A window that keeps no file gives no rows and the schema of
+        the full read; a file without x statistics is always kept."""
+        t = TiledTable(str(tmp_path / "t"))
+        t.commit(_batch(spark, 0, 200, seed=52).where("x < 4 AND y < 4"),
+                 "x", "y", 0, 8, 0, 8, tile_level=2)
+        t.commit(_batch(spark, 200, 200, seed=53).where("x < 4 AND y < 4"),
+                 "x", "y", 0, 8, 0, 8, tile_level=2, cluster="hilbert")
+        far = t.read(spark, window=(6.0, 8.0, 6.0, 8.0))
+        assert far.schema == t.read(spark).schema and far.count() == 0
+        t.commit(spark.createDataFrame([(400, None, 7.0)], "point_id long, x double, y double"),
+                 "x", "y", 0, 8, 0, 8, tile_level=2)
+        assert _ids(t.read(spark, window=(6.0, 8.0, 6.0, 8.0))) == [400]
+
+    def test_window_read_equals_filtered_full_read(self, spark, mixed_table):
+        from hypothesis import given, settings, strategies as st
+
+        from cuspatial_spark.operators import points_in_spatial_window
+
+        t = mixed_table
+        full = {v: t.read(spark, version=v) for v in (2, 3, 4, 7)}
+        coord = st.floats(-4.0, 12.0, allow_nan=False)
+
+        @given(st.sampled_from(sorted(full)), coord, coord, coord, coord)
+        @settings(max_examples=30, deadline=None)
+        def check(version, x0, x1, y0, y1):
+            w = (x0, x1, y0, y1)
+            got = points_in_spatial_window(t.read(spark, version=version, window=w), *w)
+            want = points_in_spatial_window(full[version], *w)
+            assert _ids(got) == _ids(want)
+
+        check()
+
+    def test_manifest_without_files_raises(self, spark, mixed_table, tmp_path):
+        import json
+        import shutil
+
+        root = str(tmp_path / "old")
+        shutil.copytree(mixed_table.path, root)
+        t = TiledTable(root)
+        path = t._manifest_path(6)
+        with open(path) as f:
+            m = json.load(f)
+        del m["files"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+        with pytest.raises(ValueError, match="v6"):
+            t.read(spark)
+        assert len(_ids(t.read(spark, version=5))) == mixed_table.history()[4]["rows"]
