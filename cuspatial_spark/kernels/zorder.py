@@ -14,6 +14,13 @@ from __future__ import annotations
 import numpy as np
 
 
+def check_max_depth(max_depth: int) -> None:
+    """Keys hold 16 bits per coordinate: a deeper grid would drop the
+    high bits of a cell and give wrong keys silently, so raise."""
+    if not 1 <= max_depth <= 16:
+        raise ValueError(f"max_depth must be in 1..16, got {max_depth}")
+
+
 def dilate2(v: np.ndarray) -> np.ndarray:
     """Spread the low 16 bits of v so bit i moves to bit 2i (uint32 out)."""
     x = np.asarray(v).astype(np.uint32)
@@ -62,8 +69,9 @@ def point_keys(
 
     Matches /root/reference/cpp/include/cuspatial/detail/index/construction/
     phase_1.cuh:60-95 (bounds test inclusive of the max edge; truncating
-    cast of (coord - min) / scale).
+    cast of (coord - min) / scale).  ``max_depth`` must be in 1..16.
     """
+    check_max_depth(max_depth)
     x = np.asarray(x)
     y = np.asarray(y)
     outside = (x < x_min) | (x > x_max) | (y < y_min) | (y > y_max)

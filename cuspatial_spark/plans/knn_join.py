@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.expressions import (
-    _dilate2_expr,
+    _dilate2_sql,
     inside_aoi,
     morton_key_expr,
     tile_expr,
@@ -45,19 +45,21 @@ def _undilate_expr(c):
     return x
 
 
-def _neighbor_tiles_expr(tx, ty, tile_level: int):
-    """The 3x3 Morton-tile neighborhood from (tx, ty) cell-coordinate
-    COLUMNS (callers must materialize tx/ty as named columns first —
-    inlining long chains here duplicates them exponentially across the
-    9 branches)."""
+def _neighbor_tiles_expr(tx: str, ty: str, tile_level: int):
+    """The 3x3 Morton-tile neighborhood from the (tx, ty) cell-coordinate
+    columns NAMED ``tx`` and ``ty``, as one SQL text (callers must
+    materialize tx/ty as named columns first — inlining long chains
+    here duplicates them across the 9 branches)."""
     n = (1 << tile_level) - 1
-    tiles = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            cx = F.greatest(F.least(tx + dx, F.lit(n)), F.lit(0))
-            cy = F.greatest(F.least(ty + dy, F.lit(n)), F.lit(0))
-            tiles.append(F.shiftleft(_dilate2_expr(cy), 1).bitwiseOR(_dilate2_expr(cx)))
-    return F.array_distinct(F.array(*tiles))
+
+    def cell(c: str, d: int) -> str:
+        return f"greatest(least({c} + {d}, {n}), 0)"
+
+    tiles = [
+        f"(shiftleft({_dilate2_sql(cell(ty, dy))}, 1) | {_dilate2_sql(cell(tx, dx))})"
+        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+    ]
+    return F.expr(f"array_distinct(array({', '.join(tiles)}))")
 
 
 def knn_join(
@@ -119,7 +121,7 @@ def knn_join(
     q = q.select(
         query_id_col, "__qx", "__qy",
         F.explode(
-            _neighbor_tiles_expr(F.col("__tx"), F.col("__ty"), tile_level)
+            _neighbor_tiles_expr("__tx", "__ty", tile_level)
         ).alias("tile"),
     )
     if broadcast_queries:

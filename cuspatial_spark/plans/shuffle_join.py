@@ -14,8 +14,9 @@ broadcast:
   1. one mapInArrow over the polygon rows: each Arrow batch becomes a
      ``PolygonArrays`` (offset arithmetic on the list buffers) and
      leaves as the broadcast join's own table, ``_polygon_tiles``:
-     ``(tile, polygon_id, __segs)``, one row per covered tile holding
-     the polygon's edges that meet the tile row's y-band;
+     ``(tile, polygon_id, __inside, __edge, __segs)``, one row per
+     covered tile holding its sub-cell masks and the polygon's edges
+     that meet the tile row's y-band;
   2. optional SALTING of hot tiles: every point gets
      salt = pmod(hash(x, y), n_salt); hot-tile polygon rows are
      replicated n_salt times so the shuffle key (tile, salt) splits a
@@ -23,7 +24,8 @@ broadcast:
      cities — this is the expected case, AQE skew-join is the backstop)
   3. join the points inside the AOI (the broadcast join's filter)
      with the polygon-tiles on (tile[, salt]);
-  4. the broadcast default's refine: the JVM ray cast over ``__segs``.
+  4. the broadcast default's refine: the point's sub-cell masks, and
+     in an edge sub-cell the JVM ray cast over ``__segs``.
 
 Points never cross into Python, and the rows are the broadcast
 default's (``edge_exact=False``), including a point exactly on an edge,
@@ -42,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..geometry import PolygonArrays
 from ..functions.expressions import inside_aoi
-from .tile_join import SEGS_TYPE, _pip_jvm_hit_expr, _polygon_tiles, assign_tiles
+from .tile_join import _pip_jvm_hit_expr, _polygon_tiles, assign_tiles, _pip_table_schema
 
 
 def _shuffle_candidates(
@@ -66,7 +68,7 @@ def _shuffle_candidates(
 ) -> DataFrame:
     """The join before its refine: the ``need`` point columns of every
     (point, polygon) pair that shares a tile, with ``id_col`` and the
-    polygon's ``__segs``."""
+    polygon's ``__inside``, ``__edge`` and ``__segs``."""
 
     def polygon_tiles(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -75,9 +77,7 @@ def _shuffle_candidates(
                 polygons, x_min, y_min, scale, max_depth, tile_level, id_col
             ).to_batches()
 
-    ptiles = polygons_df.mapInArrow(
-        polygon_tiles, f"tile long, {id_col} long, __segs {SEGS_TYPE}"
-    )
+    ptiles = polygons_df.mapInArrow(polygon_tiles, _pip_table_schema(id_col))
     pts = assign_tiles(
         points.where(inside_aoi(x, y, x_min, x_max, y_min, y_max)).select(*need),
         x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level,
@@ -139,4 +139,5 @@ def point_in_polygon_join_shuffle(
         tile_level, list(dict.fromkeys(keep + [x, y])), salt, hot_tiles, id_col,
         ring_offsets_col, xy_col,
     )
-    return cand.where(_pip_jvm_hit_expr("__segs", x, y)).select(*keep, id_col)
+    hit = _pip_jvm_hit_expr("morton_key", x, y, max_depth, tile_level)
+    return cand.where(hit).select(*keep, id_col)

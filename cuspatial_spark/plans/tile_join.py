@@ -6,15 +6,19 @@ optimize end-to-end:
 
   points:   inclusive AOI filter, then the morton tile key (one SQL
             text, pure-JVM bit expressions, codegen)  ->  tile col
-  polygons: bbox -> covered tiles -> per (tile, polygon) the polygon's
-            edges whose y-range meets the tile row's y-band
+  polygons: bbox -> covered tiles -> per (tile, polygon) inside/edge
+            bit masks over the tile's 8 x 8 sub-cells and the
+            polygon's edges whose y-range meets the tile row's y-band
             (driver-side NumPy, built as one Arrow table)
-  filter:   points ⋈ that (tile, polygon_id, __segs) table
+  filter:   points ⋈ that (tile, polygon_id, __inside, __edge, __segs)
+            table
             - polygon side small  -> broadcast hash join (NO shuffle)
             - polygon side large  -> shuffle hash join on tile, with
               optional salting for hot tiles (shuffle_join.py)
-  refine:   the ray-cast crossing parity over the joined edge list, one
-            JVM higher-order expression (one SQL text); edge_exact=True
+  refine:   the point's sub-cell (bits of its Morton key) decides
+            inside or outside; in an edge sub-cell, the ray-cast
+            crossing parity over the joined edge list, one JVM
+            higher-order expression (one SQL text); edge_exact=True
             instead runs the NumPy kernel over Arrow batches of
             (point, polygon) candidate pairs
 
@@ -22,7 +26,10 @@ Each point carries exactly one tile, so a (point, polygon) pair is
 produced at most once — no post-join dedup is needed.  A polygon is
 replicated only to the tiles its bbox covers (the quadtree filter
 phase's job, done as an equi-join), and each copy carries only the
-edges that can change the crossing parity of a point in that tile.
+edges that can change the crossing parity of a point in that tile,
+plus which of the tile's sub-cells lie wholly inside or outside the
+polygon (the raster interior approximation of Zimbrao & de Souza,
+VLDB'98, one level below the tile).
 
 At 100 TB the only wide operation is the optional shuffle join; the
 broadcast path is shuffle-free and Python-free:
@@ -200,32 +207,201 @@ def _band_edges(
     return out, edges[np.repeat(start, lens) + _ragged_arange(lens)]
 
 
+# A tile's sub-cell grid has 2**_SUB_BITS cells per side: 8 x 8 is what
+# one 64-bit mask holds.  It has fewer when fewer levels are left.
+_SUB_BITS = 3
+# Rounding accepted relative to the largest coordinate in play: a
+# polygon whose coordinates (or grid) reach scale / _MASK_EPS gets every
+# sub-cell marked as edge, so its points all take the exact ray cast.
+_MASK_EPS = 2.0 ** -40
+
+
+def _sub_cell_masks(
+    segments, poly: np.ndarray, cx: np.ndarray, cy: np.ndarray,
+    x_min: float, y_min: float, scale: float, max_depth: int, tile_level: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(inside, edge)`` int64 bit masks per cover entry (polygon
+    ``poly[i]`` in tile ``(cx[i], cy[i])``) over the tile's sub-cells;
+    bit j is the sub-cell whose Morton code inside the tile is j, the
+    bits of a point's ``morton_key`` just below its tile bits.
+
+    A sub-cell is EDGE when any edge of the polygon (a layer's
+    ``_polygon_segments``), horizontal ones included, meets its
+    rectangle widened by one grid cell each way, open where the
+    sub-cell touches the grid's first or last cell (the key clamps
+    there), as ``_band_edges`` does for rows.  Every sub-cell of a
+    polygon with a non-finite coordinate, or whose coordinates or grid
+    reach ``scale / _MASK_EPS``, is edge.  A sub-cell is INSIDE when it
+    is not edge and the join's ray cast at its centre has odd parity.
+
+    Why a point needs no ray cast outside edge sub-cells: it lies
+    within one grid cell of its sub-cell (the key's rounding is far
+    below that), so no edge separates it from the centre and it is at
+    least one cell from every edge, far beyond the formula's rounding:
+    its parity is the centre's.  A point on an edge is always in an
+    edge sub-cell.
+
+    Output-sensitive, with no loop per entry, polygon, edge or
+    sub-cell: each polygon gets a raster of the sub-cells its entries
+    span.  Each edge marks the columns its x-range meets and, per
+    column, the sub-rows its y-range over that column meets
+    (conservative by ``_MASK_EPS``).  The parity is a scanline per
+    sub-row: each edge crossing the sub-row's centre line (``(ay > y)
+    != (by > y)``) toggles the centres left of its crossing, which is
+    where the formula holds away from the edge (a centre near an edge
+    is in an edge sub-cell, whose parity is not used)."""
+    offs, ax, ay, bx, by = segments
+    k = min(_SUB_BITS, max_depth - tile_level)
+    side, cells = 1 << k, 1 << (max_depth - tile_level - k)
+    n_sub, n_poly = side << tile_level, len(offs) - 1
+
+    def axis(origin: float):
+        g = np.arange(n_sub, dtype=np.float64)
+        lo = origin + (g * cells - 1) * scale
+        hi = origin + ((g + 1) * cells + 1) * scale
+        lo[0], hi[-1] = -np.inf, np.inf
+        return lo, hi, origin + (g + 0.5) * cells * scale
+
+    (xlo, xhi, xc), (ylo, yhi, yc) = axis(x_min), axis(y_min)
+    seg_poly = np.repeat(np.arange(n_poly, dtype=np.int64), np.diff(offs))
+    seg_mag = np.max(np.abs([ax, ay, bx, by]), axis=0, initial=0.0)  # NaN stays NaN
+    mag = np.zeros(n_poly)
+    with np.errstate(invalid="ignore"):
+        np.maximum.at(mag, seg_poly, seg_mag)
+    grid_end = (1 << max_depth) * scale
+    grid_mag = max(abs(x_min), abs(y_min), abs(x_min + grid_end), abs(y_min + grid_end))
+    safe = np.maximum(mag, grid_mag) * _MASK_EPS < scale  # False for NaN and inf
+
+    # each polygon's raster: the sub-cells its entries span, plus one
+    # column past the right end; cell (gx, gy) sits at at(p, gx, gy)
+    sx0, sy0 = np.full(n_poly, n_sub), np.full(n_poly, n_sub)
+    sx1, sy1 = np.full(n_poly, -1), np.full(n_poly, -1)
+    np.minimum.at(sx0, poly, cx * side)
+    np.minimum.at(sy0, poly, cy * side)
+    np.maximum.at(sx1, poly, cx * side + side - 1)
+    np.maximum.at(sy1, poly, cy * side + side - 1)
+    w, h = np.maximum(sx1 - sx0 + 2, 0), np.maximum(sy1 - sy0 + 1, 0)
+    base = np.concatenate(([0], np.cumsum(w * h)))
+
+    def at(p, gx, gy):
+        return base[p] + (gy - sy0[p]) * w[p] + (gx - sx0[p])
+
+    def spread(p, first, stop, lo, hi):
+        """(p, i) for i in [max(first, lo[p]), min(stop, hi[p] + 1))."""
+        first, stop = np.maximum(first, lo[p]), np.minimum(stop, hi[p] + 1)
+        cnt = np.maximum(stop - first, 0)
+        return np.repeat(np.arange(len(p)), cnt), np.repeat(first, cnt) + _ragged_arange(cnt)
+
+    # edge sub-cells: per edge, the columns its x-range meets, then per
+    # column the sub-rows its y-range over that column meets
+    e = np.flatnonzero(safe[seg_poly])
+    p = seg_poly[e]
+    ex0, ex1 = np.minimum(ax[e], bx[e]), np.maximum(ax[e], bx[e])
+    i, gx = spread(p, np.searchsorted(xhi, ex0), np.searchsorted(xlo, ex1, side="right"),
+                   sx0, sx1)
+    e, p = e[i], p[i]
+    dx, dy = bx[e] - ax[e], by[e] - ay[e]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        # y at the column's ends, through t in [0, 1]: rounding ~ eps * |coords|
+        ya = ay[e] + (np.maximum(xlo[gx], ex0[i]) - ax[e]) / dx * dy
+        yb = ay[e] + (np.minimum(xhi[gx], ex1[i]) - ax[e]) / dx * dy
+    tol = _MASK_EPS * seg_mag[e]
+    ey0, ey1 = np.minimum(ay[e], by[e]), np.maximum(ay[e], by[e])
+    lo = np.where(dx == 0, ey0, np.maximum(np.minimum(ya, yb) - tol, ey0))
+    hi = np.where(dx == 0, ey1, np.minimum(np.maximum(ya, yb) + tol, ey1))
+    i, gy = spread(p, np.searchsorted(yhi, lo), np.searchsorted(ylo, hi, side="right"),
+                   sy0, sy1)
+    edge_raster = np.zeros(base[-1], dtype=bool)
+    edge_raster[at(p[i], gx[i], gy)] = True
+
+    # centre parity: each edge crossing a sub-row's centre line toggles
+    # the centres left of its crossing (the ray cast's +x ray meets it);
+    # a centre sees the marks right of it in its raster row
+    e = np.flatnonzero(safe[seg_poly] & (ay != by))
+    p = seg_poly[e]
+    i, gy = spread(p, np.searchsorted(yc, np.minimum(ay[e], by[e])),
+                   np.searchsorted(yc, np.maximum(ay[e], by[e])), sy0, sy1)
+    e, p = e[i], p[i]
+    x_cross = ax[e] + (yc[gy] - ay[e]) * (bx[e] - ax[e]) / (by[e] - ay[e])
+    t = np.clip(np.searchsorted(xc, x_cross), sx0[p], sx1[p] + 1)
+    marks = np.cumsum(np.bincount(at(p, t, gy), minlength=base[-1]))
+
+    # each entry's side x side sub-cells, as bits in Morton order
+    sub = np.arange(side)
+    q_gx = (cx * side)[:, None, None] + sub[None, None, :]
+    q_gy = (cy * side)[:, None, None] + sub[None, :, None]
+    pp = poly[:, None, None]
+    q = at(pp, q_gx, q_gy)
+    row_end = at(pp, sx1[pp] + 1, q_gy)
+    edges = edge_raster[q] | ~safe[pp]
+    odd = ((marks[row_end] - marks[q]) & 1).astype(bool)
+    code = z_order(np.tile(sub, side), np.repeat(sub, side)).astype(np.int64)
+    edge_bits = np.zeros((len(poly), 64), dtype=bool)
+    inside_bits = np.zeros((len(poly), 64), dtype=bool)
+    edge_bits[:, code] = edges.reshape(len(poly), side * side)
+    inside_bits[:, code] = (odd & ~edges).reshape(len(poly), side * side)
+    return _pack_bits(inside_bits), _pack_bits(edge_bits)
+
+
+def _pack_bits(bits: np.ndarray) -> np.ndarray:
+    """An (n, 64) bool array as n int64 masks, column j as bit j."""
+    packed = np.packbits(bits, axis=1, bitorder="little")
+    return packed.view("<i8").ravel().astype(np.int64)
+
+
 def _polygon_tiles(
     polygons: PolygonArrays, x_min: float, y_min: float, scale: float,
     max_depth: int, tile_level: int, id_col: str = "polygon_id",
 ) -> pa.Table:
-    """The tile joins' polygon side: ``(tile, id_col, __segs)``, one row
-    per tile a polygon's bbox covers, holding the polygon's edges
-    ``(ax, ay, bx, by)`` that meet the tile row's y-band
-    (``_band_edges``), the ``SEGS_TYPE`` list the JVM ray cast reads.
-    A row whose list is empty can hold no point and is left out.
+    """The tile joins' polygon side (``_pip_table_schema``), one row per
+    tile a polygon's bbox covers: ``_cover_rows`` over the join's
+    cover."""
+    poly, cx, cy = _cover_cells(
+        *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
+    )
+    return _cover_rows(
+        polygons, poly, cx, cy, x_min, y_min, scale, max_depth, tile_level, id_col
+    )
 
-    Size: each edge is copied once per covered tile whose band it
-    meets, i.e. into (tile columns of its polygon's bbox) x (tile rows
-    its y-range spans, plus at most one row each side), never more
-    than the unclipped table's copy per covered tile.
+
+def _cover_rows(
+    polygons: PolygonArrays, poly: np.ndarray, cx: np.ndarray, cy: np.ndarray,
+    x_min: float, y_min: float, scale: float, max_depth: int, tile_level: int,
+    id_col: str = "polygon_id",
+) -> pa.Table:
+    """``(tile, id_col, __inside, __edge, __segs)`` for the cover
+    entries polygon ``poly[i]`` in tile ``(cx[i], cy[i])``: the
+    sub-cell masks (``_sub_cell_masks``) and, for an entry with an
+    edge sub-cell, the polygon's edges ``(ax, ay, bx, by)`` that meet
+    the tile row's y-band (``_band_edges``), the ``SEGS_TYPE`` list the
+    JVM ray cast reads; an entry with no edge sub-cell carries an empty
+    list.  An entry with no inside and no edge sub-cell, or with no
+    band edge, can hold no point and is left out.
+
+    Size: no more rows than the band table (one per covered tile with
+    a band edge), and each edge is copied once per such row that has
+    an edge sub-cell, i.e. at most into (tile columns of its polygon's
+    bbox) x (tile rows its y-range spans, plus at most one row each
+    side).  On a ``pip_broadcast`` layer (400 12-gons, levels 12/5,
+    seed 7) that is 2,532 rows and 16.0k edge copies, against 3,055
+    rows and 17.9k copies without the masks; of the rows' 162k
+    sub-cells, 29.6k are inside and 27.6k edge.
 
     Built from Arrow with no Spark job and no per-row Python.  As
     broadcast-join DATA the plan stays constant-size; a layer embedded
     as a literal Catalyst map cost super-linear driver plan-build time
     (BASELINE.md "Refine-path threshold validation")."""
-    poly, cx, cy = _cover_cells(
-        *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
-    )
     segments = _polygon_segments(polygons)
     offsets, edge = _band_edges(segments, poly, cy, y_min, scale, max_depth, tile_level)
-    keep = np.flatnonzero(offsets[1:] > offsets[:-1])
-    offsets = np.concatenate(([0], np.cumsum(np.diff(offsets)[keep])))
+    inside, edges = _sub_cell_masks(
+        segments, poly, cx, cy, x_min, y_min, scale, max_depth, tile_level
+    )
+    lens = np.diff(offsets)
+    keep = np.flatnonzero((lens > 0) & ((inside | edges) != 0))
+    # an entry with no edge sub-cell never runs the ray cast
+    lens = np.where(edges != 0, lens, 0)
+    edge = edge[np.repeat(lens > 0, np.diff(offsets))]
+    offsets = np.concatenate(([0], np.cumsum(lens[keep])))
     _, ax, ay, bx, by = segments
     segs = pa.StructArray.from_arrays(
         [pa.array(c[edge]) for c in (ax, ay, bx, by)], names=["ax", "ay", "bx", "by"]
@@ -234,38 +410,60 @@ def _polygon_tiles(
     return pa.table(
         [pa.array(tiles.astype(np.int64)),
          pa.array(np.asarray(polygons.ids, dtype=np.int64)[poly[keep]]),
+         pa.array(inside[keep]), pa.array(edges[keep]),
          pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), segs)],
-        names=["tile", id_col, "__segs"],
+        names=["tile", id_col, "__inside", "__edge", "__segs"],
     )
 
 
-# The zero names x and y outside the lambda.  With the point columns
-# only inside it, Catalyst pushed the filter below a join onto the
-# polygon side in the first query of a session (the shuffle join at
+def _pip_table_schema(id_col: str = "polygon_id") -> str:
+    """The Spark schema of ``_polygon_tiles``' table."""
+    return f"tile long, {id_col} long, __inside bigint, __edge bigint, __segs {SEGS_TYPE}"
+
+
+# The ray cast's zero names x and y outside the lambda.  With the point
+# columns only inside it, Catalyst pushed the filter below a join onto
+# the polygon side in the first query of a session (the shuffle join at
 # sf0.01: INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND for y); a null coordinate
 # gives a null zero, hence no row, as before.
 _PIP_HIT_SQL = (
-    "aggregate({segs}, IF({x} IS NULL OR {y} IS NULL, NULL, 0), "
+    "CASE WHEN (shiftright(__inside, {cell}) & 1) = 1 THEN true "
+    "WHEN (shiftright(__edge, {cell}) & 1) = 1 THEN "
+    "aggregate(__segs, IF({x} IS NULL OR {y} IS NULL, NULL, 0), "
     "(__n, __e) -> __n + CASE WHEN ((__e.ay > {y}) != (__e.by > {y})) AND "
     "((({x} - __e.ax) * (__e.by - __e.ay) < (__e.bx - __e.ax) * ({y} - __e.ay)) "
-    "!= (__e.ay > {y})) THEN 1 ELSE 0 END) % 2 = 1"
+    "!= (__e.ay > {y})) THEN 1 ELSE 0 END) % 2 = 1 "
+    "ELSE false END"
 )
 
 
-def _pip_jvm_hit_expr(segs: str, x: str, y: str) -> Column:
-    """Ray-cast crossings parity over the ``SEGS_TYPE`` column named
-    ``segs`` for the point in columns ``x``, ``y`` (same formula and
-    order as kernels/pip.py and the SQL oracle), as one SQL text, so
-    building it is one Py4J call.  Runs inside the JVM with zero
+def _pip_jvm_hit_expr(key: str, x: str, y: str, max_depth: int, tile_level: int) -> Column:
+    """Containment of the point in columns ``x``, ``y`` (Morton key in
+    column ``key``) in the joined ``_polygon_tiles`` row, as one SQL
+    text, so building it is one Py4J call: true in an inside sub-cell,
+    false outside edge sub-cells, and in an edge sub-cell the ray-cast
+    crossings parity over ``__segs`` (same formula and order as
+    kernels/pip.py and the SQL oracle).  Runs inside the JVM with zero
     Python — the fast path that sidesteps the serialized Arrow/Python
     boundary.
+
+    The ray cast is ``aggregate`` (Spark's ``ArrayAggregate``), which is
+    ``CodegenFallback``: Catalyst moves this filter into the broadcast
+    join's condition, so the join runs without whole-stage codegen and
+    the lambda is evaluated interpreted for every candidate it
+    reaches.  The masks keep it to the candidates in edge sub-cells.
 
     Difference vs the kernel: no ULP on-edge exclusion — a point lying
     exactly ON a polygon edge gets parity-dependent membership instead
     of a guaranteed False.  Measure-zero for real data; use
     edge_exact=True when exact edge semantics matter.
     """
-    return F.expr(_PIP_HIT_SQL.format(segs=sql_name(segs), x=sql_name(x), y=sql_name(y)))
+    k = min(_SUB_BITS, max_depth - tile_level)
+    cell = (
+        f"CAST(shiftright({sql_name(key)}, {2 * (max_depth - tile_level - k)}) "
+        f"& {(1 << (2 * k)) - 1} AS INT)"
+    )
+    return F.expr(_PIP_HIT_SQL.format(cell=cell, x=sql_name(x), y=sql_name(y)))
 
 
 def point_in_polygon_join(
@@ -300,13 +498,18 @@ def point_in_polygon_join(
     The refine follows from the semantics asked for:
 
     - edge_exact=False (default): ONE broadcast hash join of the points
-      with ``_polygon_tiles``' ``(tile, polygon_id, __segs)`` table,
-      then the ray cast as a JVM higher-order expression over the
-      joined edge list — no Python, no Arrow crossing.  Each list holds
-      only the polygon's edges that meet its tile row's y-band, which
-      gives the same rows as all of its edges (``_band_edges``); the
-      table copies each edge once per covered tile whose band it
-      meets.  A point lying exactly ON a polygon edge gets
+      with ``_polygon_tiles``' ``(tile, polygon_id, __inside, __edge,
+      __segs)`` table, then ``_pip_jvm_hit_expr`` — no Python, no Arrow
+      crossing.  A point in an inside sub-cell of its tile matches, one
+      outside the edge sub-cells does not, and one in an edge sub-cell
+      takes the ray cast, a JVM higher-order expression over the
+      joined edge list.  That ray cast (``ArrayAggregate``) is
+      ``CodegenFallback``, so the join runs without whole-stage codegen
+      and the lambda runs interpreted per candidate; the masks keep it
+      to the candidates in edge sub-cells (``_sub_cell_masks``).  Each
+      list holds only the polygon's edges that meet its tile row's
+      y-band, which gives the same rows as all of its edges
+      (``_band_edges``).  A point lying exactly ON a polygon edge gets
       parity-dependent membership.
     - edge_exact=True: the Arrow-batched NumPy kernel over the
       broadcast ``(tile, polygon index)`` cover, which keeps the
@@ -336,11 +539,11 @@ def point_in_polygon_join(
     if not edge_exact:
         table = spark.createDataFrame(
             _polygon_tiles(polygons, x_min, y_min, scale, max_depth, tile_level),
-            schema=f"tile long, polygon_id long, __segs {SEGS_TYPE}",
+            schema=_pip_table_schema(),
         )
         return (
             pts.join(F.broadcast(table), on="tile")
-            .where(_pip_jvm_hit_expr("__segs", x, y))
+            .where(_pip_jvm_hit_expr("morton_key", x, y, max_depth, tile_level))
             .select(*keep, "polygon_id")
         )
 

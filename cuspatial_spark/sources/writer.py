@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.expressions import morton_key_expr, tile_expr
+from ..functions.expressions import inside_aoi, morton_key_expr, tile_expr
 
 
 def write_tiled(
@@ -51,6 +51,11 @@ def write_tiled(
     window/kNN scans.  Either way the directory `tile` key is
     Morton-derived, so partition pruning is unchanged.
 
+    Rows outside the AOI, or with a null, NaN or infinite coordinate,
+    are filed under tile -1.  Their Morton key is the sentinel, whose
+    top bits are the real top-right tile: filed there, they would
+    widen that tile's file bounds to wherever they lie.
+
     The sort is on ``(tile, key)``: the partitioned writer needs its
     input ordered by ``tile``, and with ``tile`` as the leading sort
     key Spark keeps this sort instead of replacing it with its own
@@ -59,7 +64,9 @@ def write_tiled(
         scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
     key = morton_key_expr(x, y, x_min, x_max, y_min, y_max, scale, max_depth)
     out = df.withColumn("morton_key", key).withColumn(
-        "tile", tile_expr(F.col("morton_key"), max_depth, tile_level)
+        "tile",
+        F.when(inside_aoi(x, y, x_min, x_max, y_min, y_max),
+               tile_expr(F.col("morton_key"), max_depth, tile_level)).otherwise(F.lit(-1)),
     )
     if cluster == "hilbert":
         from ..functions.expressions import with_hilbert_key

@@ -482,96 +482,189 @@ spark.stop()
 
 
 @st.composite
-def _band_case(draw):
+def _mask_case(draw):
     """A grid (tile_level 1-3, max_depth == tile_level or deeper, the
-    joins' default scale) and a layer made to stress the band clip: a
-    200-gon, a staircase of horizontal edges with its vertices on and
-    next to the tile-row boundaries, a polygon spanning the bottom and
-    top rows past the AOI, and polygons with NaN and +-inf vertices;
-    points uniform in the AOI plus points on, next to and one cell
-    from each row boundary, and at y == y_max."""
+    joins' default scale, y_min picked so that the key rounds some
+    values above a sub-cell boundary into the sub-cell below) and a
+    layer made to stress the band clip and the sub-cell masks: a
+    200-gon; a staircase of horizontal edges with
+    its vertices on and next to tile-row and sub-cell boundaries; a box
+    (either orientation) whose sides sit just above sub-cell
+    boundaries, where the key files a point on them into the sub-cell
+    below; an integer-grid square with a square hole; a polygon
+    spanning the bottom and top rows past the AOI; boxes between the
+    grid's last cell and x_max / y_max, where the key clamps; a
+    triangle with a vertex at 1e15; polygons with NaN and +-inf
+    vertices.  Points: uniform in the AOI, on and next to each row and
+    sub-cell boundary, exactly on the box's sides, on the integer and
+    half-integer grid, and at x_max / y_max."""
     from cuspatial_spark.geometry import PolygonArrays
 
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
     tile_level = draw(st.integers(1, 3))
-    max_depth = tile_level + draw(st.sampled_from([0, 1, 3]))
-    y_min = draw(st.sampled_from([0.0, -1.3]))
-    grid = dict(x_min=0.0, x_max=8.0, y_min=y_min, y_max=y_min + 8.0,
-                max_depth=max_depth, tile_level=tile_level)
+    max_depth = tile_level + draw(st.sampled_from([3, 0, 5, 1]))
     scale = 8.0 / ((1 << max_depth) + 2)
     m = 1 << (max_depth - tile_level)
-    bounds = y_min + np.arange((1 << tile_level) + 1) * m * scale
-    near = np.r_[bounds, np.nextafter(bounds, np.inf), np.nextafter(bounds, -np.inf),
-                 bounds + scale, bounds - scale, y_min + 8.0]
+    cells = m >> min(3, max_depth - tile_level)
+
+    def rounded_down(origin):
+        """Values a few ulps above a sub-cell boundary that the key's
+        floor((v - origin) / scale) files into the sub-cell below."""
+        g = np.arange(1, m // cells << tile_level)
+        ups = [origin + (g * cells) * scale]
+        for _ in range(4):
+            ups.append(np.nextafter(ups[-1], np.inf))
+        up = np.concatenate(ups[1:])
+        return np.unique(up[np.floor((up - origin) / scale) < np.tile(g, 4) * cells])
+
+    # y_min: the first origin, from a drawn start, with such values
+    origins = np.roll(np.arange(-30, 31) / 10, draw(st.integers(0, 60)))
+    y_min = next((float(o) for o in origins if len(rounded_down(o))), 0.0)
+    grid = dict(x_min=0.0, x_max=8.0, y_min=y_min, y_max=y_min + 8.0,
+                max_depth=max_depth, tile_level=tile_level)
+
+    def near(origin, step, count):
+        b = origin + np.arange(count + 1) * step * scale
+        return np.r_[b, np.nextafter(b, np.inf), np.nextafter(b, -np.inf), b + scale, b - scale]
+
+    rows_y = np.r_[near(y_min, m, 1 << tile_level), y_min + 8.0]
+    sub_x = near(0.0, cells, m // cells << tile_level)
+    sub_y = near(y_min, cells, m // cells << tile_level)
+    end_x, end_y = (1 << max_depth) * scale, y_min + (1 << max_depth) * scale
 
     rings = []
     ang = np.sort(rng.uniform(0, 2 * np.pi, 200))
     rad = rng.uniform(0.5, 5.0, 200)
     c = rng.uniform(1, 7, 2) + [0, y_min]
-    rings.append((c[0] + rad * np.cos(ang), c[1] + rad * np.sin(ang)))
-    ys = np.sort(rng.choice(near, 4, replace=False))
+    rings.append(([c[0] + rad * np.cos(ang)], [c[1] + rad * np.sin(ang)]))
+    ys = np.sort(rng.choice(np.r_[rows_y, sub_y], 4, replace=False))
     x0, x1 = np.sort(rng.uniform(0, 8, 2))
     xm = (x0 + x1) / 2
-    rings.append(([x0, x1, x1, xm, xm, x0], [ys[0], ys[0], ys[2], ys[2], ys[3], ys[3]]))
-    rings.append(([1.0, 7.0, 4.0], [y_min - 1.0, y_min + 2.0, y_min + 9.0]))
+    rings.append(([[x0, x1, x1, xm, xm, x0]], [[ys[0], ys[0], ys[2], ys[2], ys[3], ys[3]]]))
+
+    def sides(origin, near_values):
+        """Two box sides, two sub-cells apart where the grid allows,
+        taken from ``rounded_down`` where it has values."""
+        low = rounded_down(origin)
+        near_values = near_values[(near_values > origin) & (near_values < origin + 8)]
+        first = rng.choice(low) if len(low) else rng.choice(near_values)
+        apart = lambda v: v[np.abs(v - first) >= 2 * cells * scale]
+        rest = next(v for v in (apart(low), apart(near_values), near_values[near_values != first])
+                    if len(v))
+        return np.sort([first, rng.choice(rest)])
+
+    bx, by = sides(0.0, sub_x), sides(y_min, sub_y)
+    box = ([bx[0], bx[1], bx[1], bx[0]], [by[0], by[0], by[1], by[1]])
+    if draw(st.booleans()):
+        box = (box[0][::-1], box[1][::-1])
+    rings.append(([box[0]], [box[1]]))
+    rings.append(([[1.0, 5.0, 5.0, 1.0], [2.0, 2.0, 4.0, 4.0]],
+                  [[y_min + 1, y_min + 1, y_min + 5, y_min + 5],
+                   [y_min + 2, y_min + 4, y_min + 4, y_min + 2]]))
+    rings.append(([[1.0, 7.0, 4.0]], [[y_min - 1.0, y_min + 2.0, y_min + 9.0]]))
+    ex, ey = end_x + 1.5 * scale, end_y + 1.5 * scale  # past the widened last cell
+    rings.append(([[ex, 9.0, 9.0, ex]], [[y_min + 1.0, y_min + 1.0, y_min + 3.0, y_min + 3.0]]))
+    rings.append(([[1.0, 3.0, 3.0, 1.0]], [[ey, ey, y_min + 9.0, y_min + 9.0]]))
+    rings.append(([[1.0, 1e15, 1.0]], [[y_min + 5.0, y_min + 6.0, y_min + 7.0]]))
     bad = draw(st.sampled_from([np.nan, np.inf, -np.inf]))
-    rings.append(([2.0, 6.0, 6.0, 2.0], [y_min + 1.0, y_min + 2.5, bad, y_min + 6.5]))
-    rings.append(([1.0, 7.0, 4.0], [bad, y_min + 3.0, y_min + 5.0]))
+    rings.append(([[2.0, 6.0, 6.0, 2.0]], [[y_min + 1.0, y_min + 2.5, bad, y_min + 6.5]]))
+    rings.append(([[1.0, 7.0, 4.0]], [[bad, y_min + 3.0, y_min + 5.0]]))
     polys = PolygonArrays(
-        np.arange(len(rings) + 1), np.cumsum([0] + [len(r[0]) for r in rings]),
-        np.concatenate([r[0] for r in rings]), np.concatenate([r[1] for r in rings]),
+        np.cumsum([0] + [len(r[0]) for r in rings]),
+        np.cumsum([0] + [len(ring) for r in rings for ring in r[0]]),
+        np.concatenate([np.asarray(ring, float) for r in rings for ring in r[0]]),
+        np.concatenate([np.asarray(ring, float) for r in rings for ring in r[1]]),
         ids=rng.permutation(50)[: len(rings)],
     )
+
     k = 300
-    py = np.r_[rng.uniform(y_min, y_min + 8.0, k), near[(near >= y_min) & (near <= y_min + 8)]]
-    px = rng.uniform(0, 8, len(py))
+    inside = lambda v, lo: v[(v >= lo) & (v <= lo + 8)]
+    on_box = np.linspace(0, 1, 7)
+    gx, gy = np.meshgrid(np.arange(17) / 2, np.arange(17) / 2 + y_min)
+    px = [rng.uniform(0, 8, k), rng.uniform(0, 8, len(inside(rows_y, y_min))),
+          inside(sub_x, 0.0), rng.uniform(0, 8, len(inside(sub_y, y_min))),
+          np.repeat(bx, 7), bx[0] + (bx[1] - bx[0]) * np.r_[on_box, on_box],
+          gx.ravel(), [8.0] * 5, rng.uniform(0, 8, 5)]
+    py = [rng.uniform(y_min, y_min + 8.0, k), inside(rows_y, y_min),
+          rng.uniform(y_min, y_min + 8, len(inside(sub_x, 0.0))), inside(sub_y, y_min),
+          np.tile(by[0] + (by[1] - by[0]) * on_box, 2), np.repeat(by, 7),
+          gy.ravel(), y_min + np.array([1.5, 2.0, 2.5, 8.0, 4.0]), [y_min + 8.0] * 5]
+    px, py = np.concatenate(px), np.concatenate(py)
     return polys, grid, pd.DataFrame({"pid": np.arange(len(py)), "x": px, "y": py})
 
 
-class TestBandClippedEdges:
-    def test_band_clip_is_exact(self, spark):
-        """The band-clipped (tile, polygon_id, __segs) rows give the
-        same containment pairs as unclipped lists holding all of the
-        polygon's edges: for the join's own cover, and for a cover of
-        every tile by every polygon, which reaches the polygons whose
-        non-finite bbox the join never covers."""
+# The ray cast over a (tile, polygon_id, __segs) table with no masks,
+# as the join ran it before the sub-cell masks: the reference.
+_PLAIN_RAY_CAST = (
+    "aggregate(__segs, IF(x IS NULL OR y IS NULL, NULL, 0), "
+    "(__n, __e) -> __n + CASE WHEN ((__e.ay > y) != (__e.by > y)) AND "
+    "(((x - __e.ax) * (__e.by - __e.ay) < (__e.bx - __e.ax) * (y - __e.ay)) "
+    "!= (__e.ay > y)) THEN 1 ELSE 0 END) % 2 = 1"
+)
+
+
+class TestSubCellMasks:
+    def test_masks_match_unmasked_band_table(self, spark):
+        """The masked (tile, polygon_id, __inside, __edge, __segs) rows
+        give the same containment pairs as the table without masks:
+        every covered tile with its band list (and with all of the
+        polygon's edges), no row dropped, the plain ray cast.  For the
+        broadcast and the shuffle join on the join's own cover, and
+        for a cover of every tile by every polygon, which reaches the
+        polygons whose non-finite bbox the join never covers."""
         import pyarrow as pa
 
-        from cuspatial_spark.kernels.zorder import z_order
-        from cuspatial_spark.plans import assign_tiles, point_in_polygon_join
         from cuspatial_spark.functions import inside_aoi
+        from cuspatial_spark.kernels.zorder import z_order
+        from cuspatial_spark.plans import (
+            assign_tiles,
+            point_in_polygon_join,
+            point_in_polygon_join_shuffle,
+        )
         from cuspatial_spark.plans.tile_join import (
             SEGS_TYPE,
             _band_edges,
             _cover_cells,
+            _cover_rows,
             _pip_jvm_hit_expr,
             _polygon_segments,
+            _pip_table_schema,
         )
 
-        def pairs(keyed, polys, poly, cx, cy, grid, scale, clip):
-            segs = _polygon_segments(polys)
-            if clip:
-                offs, edge = _band_edges(segs, poly, cy, grid["y_min"], scale,
-                                         grid["max_depth"], grid["tile_level"])
+        def pairs(keyed, polys, poly, cx, cy, grid, scale, lists):
+            depth, level = grid["max_depth"], grid["tile_level"]
+            if lists == "masked":
+                table = spark.createDataFrame(
+                    _cover_rows(polys, poly, cx, cy, grid["x_min"], grid["y_min"], scale,
+                                depth, level),
+                    schema=_pip_table_schema(),
+                )
+                hit = _pip_jvm_hit_expr("morton_key", "x", "y", depth, level)
             else:
-                lists = [np.arange(segs[0][p], segs[0][p + 1]) for p in poly]
-                offs = np.cumsum([0] + [len(e) for e in lists])
-                edge = np.concatenate(lists + [np.zeros(0, np.int64)])
-            lists = pa.ListArray.from_arrays(
-                pa.array(offs, pa.int32()),
-                pa.StructArray.from_arrays([pa.array(c[edge]) for c in segs[1:]],
-                                           names=["ax", "ay", "bx", "by"]),
-            )
-            tiles = z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
-            table = spark.createDataFrame(
-                pa.table([tiles, polys.ids[poly], lists], names=["tile", "polygon_id", "__segs"]),
-                schema=f"tile long, polygon_id long, __segs {SEGS_TYPE}",
-            )
-            out = keyed.join(table, "tile").where(_pip_jvm_hit_expr("__segs", "x", "y"))
+                segs = _polygon_segments(polys)
+                if lists == "band":
+                    offs, edge = _band_edges(segs, poly, cy, grid["y_min"], scale, depth, level)
+                else:
+                    edges = [np.arange(segs[0][p], segs[0][p + 1]) for p in poly]
+                    offs = np.cumsum([0] + [len(e) for e in edges])
+                    edge = np.concatenate(edges + [np.zeros(0, np.int64)])
+                lists_ = pa.ListArray.from_arrays(
+                    pa.array(offs, pa.int32()),
+                    pa.StructArray.from_arrays([pa.array(c[edge]) for c in segs[1:]],
+                                               names=["ax", "ay", "bx", "by"]),
+                )
+                tiles = z_order(cx.astype(np.uint16), cy.astype(np.uint16)).astype(np.int64)
+                table = spark.createDataFrame(
+                    pa.table([tiles, polys.ids[poly], lists_],
+                             names=["tile", "polygon_id", "__segs"]),
+                    schema=f"tile long, polygon_id long, __segs {SEGS_TYPE}",
+                )
+                hit = F.expr(_PLAIN_RAY_CAST)
+            out = keyed.join(table, "tile").where(hit)
             return sorted(tuple(r) for r in out.select("pid", "polygon_id").collect())
 
-        @given(_band_case())
-        @settings(max_examples=8, deadline=None)
+        @given(_mask_case())
+        @settings(max_examples=12, deadline=None)
         def check(case):
             polys, grid, pdf = case
             scale = 8.0 / ((1 << grid["max_depth"]) + 2)
@@ -581,18 +674,25 @@ class TestBandClippedEdges:
                 pts.where(inside_aoi("x", "y", *aoi)), "x", "y", *aoi, scale,
                 grid["max_depth"], grid["tile_level"],
             ).cache()
-            join = point_in_polygon_join(pts, polys, keep_columns=["pid"], **grid)
-            got = sorted(tuple(r) for r in join.collect())
             cover = _cover_cells(*polys.bounding_boxes(), grid["x_min"], grid["y_min"], scale,
                                  grid["max_depth"], grid["tile_level"])
-            assert got == pairs(keyed, polys, *cover, grid, scale, clip=False)
-            assert len(got) > 0
+            want = pairs(keyed, polys, *cover, grid, scale, "band")
+            assert len(want) > 0
+            assert want == pairs(keyed, polys, *cover, grid, scale, "all")
+            join = point_in_polygon_join(pts, polys, keep_columns=["pid"], **grid)
+            assert sorted(tuple(r) for r in join.collect()) == want
+            shuffle = point_in_polygon_join_shuffle(
+                pts, spark.createDataFrame(polys.to_arrow()), keep_columns=["pid"], salt=2,
+                **grid,
+            )
+            assert sorted(tuple(r) for r in shuffle.collect()) == want
             n = 1 << grid["tile_level"]
             cells = np.arange(n * n)
             full = (np.repeat(np.arange(len(polys)), n * n), np.tile(cells % n, len(polys)),
                     np.tile(cells // n, len(polys)))
-            assert (pairs(keyed, polys, *full, grid, scale, clip=True)
-                    == pairs(keyed, polys, *full, grid, scale, clip=False))
+            want = pairs(keyed, polys, *full, grid, scale, "band")
+            assert want == pairs(keyed, polys, *full, grid, scale, "all")
+            assert pairs(keyed, polys, *full, grid, scale, "masked") == want
             keyed.unpersist()
 
         check()
@@ -758,8 +858,9 @@ class TestTiledWriter:
         assert set(back.toPandas()["point_id"]) == set(range(2000))
 
     def test_null_coordinates_filed_under_sentinel_tile(self, spark, tmp_path):
-        """A row with a null coordinate gets the sentinel key, so the
-        writer files it under the sentinel's tile, not a real cell's."""
+        """A row with a null coordinate gets the sentinel key, and the
+        writer files it under tile -1, not a real cell's (the sentinel
+        key's top bits are the top-right tile's)."""
         from cuspatial_spark.sources.writer import read_tiled, write_tiled
 
         df = spark.createDataFrame(
@@ -771,7 +872,7 @@ class TestTiledWriter:
         got = {r.point_id: (r.morton_key, r.tile) for r in read_tiled(spark, path).collect()}
         sentinel = (1 << 20) - 1
         for pid in (0, 1, 2):
-            assert got[pid] == (sentinel, sentinel >> 16), (pid, got[pid])
+            assert got[pid] == (sentinel, -1), (pid, got[pid])
         assert got[3][1] == 0
 
     def test_hilbert_cluster_same_content(self, spark, tmp_path):

@@ -591,7 +591,21 @@ class TestExpressions:
         np.testing.assert_array_equal(got["morton_key"], exp.astype(np.int64))
         np.testing.assert_array_equal(got["tile"], exp.astype(np.int64) >> 2)
 
-    @pytest.mark.parametrize("max_depth", [3, 12])
+    @pytest.mark.parametrize("max_depth", [0, 17])
+    def test_morton_key_rejects_depth_outside_16_bits(self, spark, max_depth):
+        """Keys hold 16 bits per coordinate.  At max_depth 17 the high
+        bit of a cell was dropped ((0.9, 0.1) on a unit AOI got top
+        quadrant 0 instead of 1), so both key builders raise."""
+        from cuspatial_spark.functions import morton_key_expr
+        from cuspatial_spark.kernels.zorder import point_keys
+
+        scale = 1.0 / ((1 << max_depth) + 2)
+        with pytest.raises(ValueError, match="max_depth"):
+            morton_key_expr("x", "y", 0, 1, 0, 1, scale, max_depth)
+        with pytest.raises(ValueError, match="max_depth"):
+            point_keys(np.array([0.9]), np.array([0.1]), 0, 1, 0, 1, scale, max_depth)
+
+    @pytest.mark.parametrize("max_depth", [3, 12, 16])
     def test_morton_key_expr_edge_points(self, spark, max_depth):
         """Out-of-AOI, NaN, +-inf and boundary points: the sentinel for
         anything Spark does not order inside the inclusive AOI (NaN is

@@ -371,6 +371,25 @@ class TestManifestScan:
                  "x", "y", 0, 8, 0, 8, tile_level=2)
         assert _ids(t.read(spark, window=(6.0, 8.0, 6.0, 8.0))) == [400]
 
+    def test_out_of_aoi_rows_leave_the_top_right_file(self, spark, tmp_path):
+        """A NaN row is filed under tile -1, not with the top-right
+        tile's rows, whose key it shares: tile 15's file keeps its own
+        bounds, so a window outside that tile no longer keeps it, and
+        a full read still returns the NaN row."""
+        from cuspatial_spark.sources.table import _meets
+
+        t = TiledTable(str(tmp_path / "t"))
+        nan_row = spark.createDataFrame([(640, float("nan"), 1.0)],
+                                        "point_id long, x double, y double")
+        t.commit(_batch(spark, 0, 640, seed=54).unionByName(nan_row),
+                 "x", "y", 0, 8, 0, 8, tile_level=2)
+        files = t.history()[0]["files"]
+        window = (6.5, 8.0, 1.0, 4.4)
+        corner = [f for f in files if f["tile"] == 15]
+        assert corner and not any(_meets(f["bounds"], window) for f in corner), corner
+        assert [f["rows"] for f in files if f["tile"] == -1] == [1]
+        assert _ids(t.read(spark)) == list(range(641))
+
     def test_window_read_equals_filtered_full_read(self, spark, mixed_table):
         from hypothesis import given, settings, strategies as st
 
