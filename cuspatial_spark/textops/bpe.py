@@ -14,7 +14,12 @@ Lineage is cut with `localCheckpoint` every 16 merges.
 order, each exhaustively — merging pair k can only create tokens that
 participate in *later*-learned merges, so rank-ascending exhaustive
 application is equivalent to the classic "repeatedly merge the
-lowest-rank pair present" loop.  That makes encoding a chain of
+lowest-rank pair present" loop.  That needs two things of the table:
+each merge's parts are single characters or outputs of earlier
+merges, and no two merges produce the same token (a later merge that
+rebuilds an earlier token could enable an earlier-ranked merge after
+the chain has passed it); `check_merge_table` rejects a table that
+breaks either.  That makes encoding a chain of
 LITERAL `replace()` calls over a ``\\x01``-delimited character string:
 pure JVM codegen, zero Python, zero shuffles — one pass over the
 corpus at any scale.  The same chain runs verbatim in any SQL engine
@@ -60,6 +65,27 @@ DEFAULT_MERGES: list[tuple[str, str]] = [
 ]
 
 
+def check_merge_table(merges: list[tuple[str, str]]) -> None:
+    """Raise ValueError unless every merge's parts are single
+    characters or outputs of earlier merges and every output is new —
+    the conditions under which the rank-ordered replace chain equals
+    classic BPE (see module doc)."""
+    outputs: set[str] = set()
+    for rank, (a, b) in enumerate(merges):
+        for part in (a, b):
+            if len(part) != 1 and part not in outputs:
+                raise ValueError(
+                    f"merge {rank} {(a, b)}: {part!r} is neither a single "
+                    "character nor the output of an earlier merge"
+                )
+        if a + b in outputs:
+            raise ValueError(
+                f"merge {rank} {(a, b)}: {a + b!r} is already the output "
+                "of an earlier merge"
+            )
+        outputs.add(a + b)
+
+
 def _char_split(col: Column) -> Column:
     """'abc' -> '\\x01a\\x01b\\x01c' (one token per character)."""
     return F.regexp_replace(col, "(.)", SEP + "$1")
@@ -96,6 +122,7 @@ def bpe_tokenize(
     run the replace-chain per pre-token inside a ``transform`` lambda,
     count/flatten.  No Python stage, no shuffle.
     """
+    check_merge_table(merges)
     t = F.coalesce(F.col(text_col), F.lit(""))
     # guard: strip the separator if it ever appears in input
     t = F.replace(t, F.lit(SEP), F.lit(""))
@@ -134,6 +161,7 @@ def bpe_chain_sql(merges: list[tuple[str, str]], text_expr: str) -> str:
     """The SAME tokenizer as portable SQL: returns an expression
     computing the BPE token count of ``text_expr`` — used by the
     driver oracle so DuckDB replays the replace chain verbatim."""
+    check_merge_table(merges)
 
     def q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"

@@ -19,6 +19,7 @@ from cuspatial_spark.textops.bpe import (
     DEFAULT_MERGES,
     bpe_chain_sql,
     bpe_tokenize,
+    check_merge_table,
     train_bpe,
 )
 
@@ -124,8 +125,9 @@ class TestRankOrderTheorem:
     """Property-test the design theorem the codegen encoder relies on:
     for any merge table with the TRAINING-ORDER property (each merge's
     components are single chars or outputs of strictly earlier
-    merges), applying merges rank-ascending, each exhaustively
-    left-to-right, equals classic lowest-rank-first BPE."""
+    merges, and no two merges share an output), applying merges
+    rank-ascending, each exhaustively left-to-right, equals classic
+    lowest-rank-first BPE."""
 
     @staticmethod
     def chain_apply(pre_token: str, merges) -> list[str]:
@@ -157,7 +159,7 @@ class TestRankOrderTheorem:
             for _ in range(draw(st.integers(0, 12))):
                 a = draw(st.sampled_from(vocab))
                 b = draw(st.sampled_from(vocab))
-                if (a, b) in merges:
+                if a + b in vocab:
                     continue
                 merges.append((a, b))
                 vocab.append(a + b)
@@ -169,9 +171,34 @@ class TestRankOrderTheorem:
         def check(tw):
             merges, word = tw
             ranks = {p: i for i, p in enumerate(merges)}
+            check_merge_table(merges)
             assert self.chain_apply(word, merges) == classic_bpe(word, ranks)
 
         check()
+
+    # 'aaaa' is built at rank 2 and again at rank 4; rank 4 enables
+    # (b, aaaa) at rank 3 after the chain has passed it.
+    SHARED_OUTPUT = [
+        ("a", "a"), ("a", "aa"), ("aaa", "a"), ("b", "aaaa"), ("aa", "aa"),
+    ]
+
+    def test_shared_output_table_rejected(self, spark):
+        merges = self.SHARED_OUTPUT
+        ranks = {p: i for i, p in enumerate(merges)}
+        assert classic_bpe("baaaa", ranks) == ["baaaa"]
+        assert self.chain_apply("baaaa", merges) == ["b", "aaaa"]
+        with pytest.raises(ValueError, match="already the output"):
+            check_merge_table(merges)
+        with pytest.raises(ValueError, match="already the output"):
+            bpe_chain_sql(merges, "text")
+        df = spark.createDataFrame([("baaaa",)], ["text"])
+        with pytest.raises(ValueError, match="already the output"):
+            bpe_tokenize(df, merges)
+
+    def test_part_from_later_merge_rejected(self):
+        with pytest.raises(ValueError, match="neither a single"):
+            check_merge_table([("a", "bc"), ("b", "c")])
+        check_merge_table(DEFAULT_MERGES)
 
 
 class TestTraining:
