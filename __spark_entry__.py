@@ -389,9 +389,10 @@ def q_pip_shuffle(spark, sf_dir):
 
 
 def q_pip_edge_exact(spark, sf_dir):
-    """The flagship join forced onto the Arrow KERNEL refine
-    (edge_exact=True): the reference's ULP on-edge exclusion exactly
-    (is_point_in_polygon.cuh edge rule).  The ray-cast SQL oracle
+    """The flagship join with edge_exact=True: the default join and JVM
+    ray cast, then the Arrow KERNEL over the matched pairs, which
+    drops the points the reference's ULP on-edge exclusion puts
+    outside (is_point_in_polygon.cuh edge rule).  The ray-cast SQL oracle
     replicates the kernel's crossing formula operation-for-operation,
     so this path must hash-match it — the golden-parity plan now has
     its own hard driver signal alongside the default JVM path."""

@@ -8,7 +8,9 @@ Semantics match the reference kernel
   (first-vertex, last-vertex) is always considered; degenerate (zero
   length under 4-ULP equality) segments are skipped.
 - A point lying exactly ON an edge (4-ULP collinearity + x-range test)
-  is OUTSIDE (`contains_properly` semantics).
+  is OUTSIDE (`contains_properly` semantics).  The test has no y-range
+  check, so a point exactly on the line through a vertical edge, at
+  any y, is outside too.
 
 Everything is vectorized over a flat (pair, segment) expansion — no
 per-row Python loops — so it serves both the brute-force operator and

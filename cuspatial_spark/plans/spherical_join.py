@@ -230,7 +230,10 @@ def geodesic_knn_join(
     Measured on a 4-core VM (``local[4]``, 100k queries, k=5, "auto"
     radius, noop write): dense 2.3 s vs progressive 7.7 s at 300 data
     rows and 4.7 s vs 10.6 s at 1024, but 17.8 s vs 10.4 s at 4096,
-    so the default gate of 1024 sits below the crossover.
+    so the default gate of 1024 sits below the crossover.  With
+    ``initial_radius_km="auto"`` above the gate, the data side is read
+    twice before round 1: once by the gate's limited read and once by
+    the full ``count()`` that sizes the radius.
 
     Progressive round r joins the still-unresolved queries at
     ``initial_radius_km * 2**r``.  A query resolves in the round where

@@ -19,8 +19,8 @@ optimize end-to-end:
             inside or outside; in an edge sub-cell, the ray-cast
             crossing parity over the joined edge list, one JVM
             higher-order expression (one SQL text); edge_exact=True
-            instead runs the NumPy kernel over Arrow batches of
-            (point, polygon) candidate pairs
+            then drops the matched pairs the NumPy kernel puts on an
+            edge, in one Arrow crossing
 
 Each point carries exactly one tile, so a (point, polygon) pair is
 produced at most once — no post-join dedup is needed.  A polygon is
@@ -43,6 +43,7 @@ candidate lines and widens the radius inside the batch.
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Iterator
 
 import numpy as np
@@ -453,10 +454,8 @@ def _pip_jvm_hit_expr(key: str, x: str, y: str, max_depth: int, tile_level: int)
     the lambda is evaluated interpreted for every candidate it
     reaches.  The masks keep it to the candidates in edge sub-cells.
 
-    Difference vs the kernel: no ULP on-edge exclusion — a point lying
-    exactly ON a polygon edge gets parity-dependent membership instead
-    of a guaranteed False.  Measure-zero for real data; use
-    edge_exact=True when exact edge semantics matter.
+    Difference vs the kernel: no ULP on-edge exclusion, which
+    ``edge_exact=True`` adds as a filter on these rows.
     """
     k = min(_SUB_BITS, max_depth - tile_level)
     cell = (
@@ -495,26 +494,30 @@ def point_in_polygon_join(
     infinite coordinate match no polygon: they are filtered out before
     the tile key, as in the nearest join.
 
-    The refine follows from the semantics asked for:
+    Both forms are ONE broadcast hash join of the points with
+    ``_polygon_tiles``' ``(tile, polygon_id, __inside, __edge, __segs)``
+    table, then ``_pip_jvm_hit_expr``: a point in an inside sub-cell of
+    its tile matches, one outside the edge sub-cells does not, and one
+    in an edge sub-cell takes the JVM ray cast over the row's edges
+    that meet its tile row's y-band (``_sub_cell_masks``,
+    ``_band_edges``).
 
-    - edge_exact=False (default): ONE broadcast hash join of the points
-      with ``_polygon_tiles``' ``(tile, polygon_id, __inside, __edge,
-      __segs)`` table, then ``_pip_jvm_hit_expr`` — no Python, no Arrow
-      crossing.  A point in an inside sub-cell of its tile matches, one
-      outside the edge sub-cells does not, and one in an edge sub-cell
-      takes the ray cast, a JVM higher-order expression over the
-      joined edge list.  That ray cast (``ArrayAggregate``) is
-      ``CodegenFallback``, so the join runs without whole-stage codegen
-      and the lambda runs interpreted per candidate; the masks keep it
-      to the candidates in edge sub-cells (``_sub_cell_masks``).  Each
-      list holds only the polygon's edges that meet its tile row's
-      y-band, which gives the same rows as all of its edges
-      (``_band_edges``).  A point lying exactly ON a polygon edge gets
-      parity-dependent membership.
-    - edge_exact=True: the Arrow-batched NumPy kernel over the
-      broadcast ``(tile, polygon index)`` cover, which keeps the
-      reference's ULP on-edge exclusion (such a point is
-      deterministically excluded).  Golden-parity claims set this.
+    - edge_exact=False (default): that is all, with no Python.  A point
+      lying exactly ON a polygon edge gets parity-dependent membership.
+    - edge_exact=True: the table names each polygon by its index, and
+      ONE mapInPandas runs the kernel (``point_in_polygon_pairs``) on
+      the matched pairs only, against the whole polygon, then maps the
+      index back to the id.  The kernel is the ray cast's crossing
+      formula plus the reference's ULP on-edge exclusion, which has no
+      y-range check: a point on an edge, or on the line through a
+      vertical edge at any y, is outside.  So the rows are the
+      default's minus the pairs the kernel rejects; the row's band
+      list would not do, as it lacks the vertical edges of other rows.
+      They differ from the kernel over every bbox candidate in two
+      cases: a segment whose run and rise are both nonzero but at most
+      4 ULPs from 0 (subnormal), which the kernel skips and the ray
+      cast counts; and FloatType x / y, where the kernel casts the
+      polygon to float32 and the ray cast works in double.
 
     Layer size does not pick the refine: the JVM ray cast was faster
     than the kernel at every measured size, up to 250k segments
@@ -536,41 +539,31 @@ def point_in_polygon_join(
         x, y, x_min, x_max, y_min, y_max, scale, max_depth, tile_level,
     )
 
-    if not edge_exact:
-        table = spark.createDataFrame(
-            _polygon_tiles(polygons, x_min, y_min, scale, max_depth, tile_level),
-            schema=_pip_table_schema(),
-        )
-        return (
-            pts.join(F.broadcast(table), on="tile")
-            .where(_pip_jvm_hit_expr("morton_key", x, y, max_depth, tile_level))
-            .select(*keep, "polygon_id")
-        )
-
-    bbox_idx, tiles = tiles_covering_bboxes(
-        *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
+    # the exact path's table carries each polygon's index, which the
+    # kernel needs to find its rings (ids may repeat)
+    layer = dataclasses.replace(polygons, ids=None) if edge_exact else polygons
+    table = spark.createDataFrame(
+        _polygon_tiles(layer, x_min, y_min, scale, max_depth, tile_level),
+        schema=_pip_table_schema(),
     )
-    poly_tiles = spark.createDataFrame(pa.table({"tile": tiles, "__poly_idx": bbox_idx}))
-    candidates = pts.join(F.broadcast(poly_tiles), on="tile").select(*need, "__poly_idx")
+    joined = pts.join(F.broadcast(table), on="tile").where(
+        _pip_jvm_hit_expr("morton_key", x, y, max_depth, tile_level)
+    )
+    if not edge_exact:
+        return joined.select(*keep, "polygon_id")
 
     out_schema = StructType([points.schema[c] for c in keep] + PIP_JOIN_SCHEMA_SUFFIX)
-    poly_offsets, ring_offsets = polygons.part_offsets, polygons.ring_offsets
-    px, py, pids = polygons.x, polygons.y, polygons.ids
 
     def refine_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
+            idx = pdf["polygon_id"].to_numpy()
             hits = point_in_polygon_pairs(
-                pdf[x].to_numpy(), pdf[y].to_numpy(),
-                pdf["__poly_idx"].to_numpy(),
-                poly_offsets, ring_offsets, px, py,
+                pdf[x].to_numpy(), pdf[y].to_numpy(), idx,
+                polygons.part_offsets, polygons.ring_offsets, polygons.x, polygons.y,
             )
-            out = pdf.loc[hits, keep].copy()
-            out["polygon_id"] = pids[pdf["__poly_idx"].to_numpy()[hits]]
-            yield out
+            yield pdf.loc[hits, keep].assign(polygon_id=polygons.ids[idx[hits]])
 
-    return candidates.mapInPandas(refine_fn, schema=out_schema)
+    return joined.select(*need, "polygon_id").mapInPandas(refine_fn, schema=out_schema)
 
 
 NEAREST_JOIN_SCHEMA_SUFFIX = [

@@ -320,8 +320,9 @@ class TestShuffleJoin:
     def test_matches_broadcast_path(self, spark):
         """Differential test: every point-in-polygon join path returns
         the same collected rows, in the same column order, on the golden
-        fixture and on random layers with holes, a trailing empty ring
-        and reordered keep_columns."""
+        fixture, on one polygon listed twice under one id, and on random
+        layers with holes, a trailing empty ring and reordered
+        keep_columns."""
         from tests import golden_fixtures as G
         from cuspatial_spark.geometry import PolygonArrays
 
@@ -342,6 +343,14 @@ class TestShuffleJoin:
         golden = _pip_all_paths(spark, pts, polys, ["point_id"], **kw)
         _assert_paths_equal(golden)
         assert len(golden["broadcast"][1]) > 0
+
+        # a duplicate id: each copy of the polygon gives its own rows
+        sx, sy = [1.0, 6, 6, 1, 1], [1.0, 1, 6, 6, 1]
+        twice = PolygonArrays([0, 1, 2], [0, 5, 10], sx * 2, sy * 2, ids=[7, 7])
+        dup = _pip_all_paths(spark, pts, twice, ["point_id"], **kw)
+        _assert_paths_equal(dup)
+        rows = dup["broadcast"][1]
+        assert len(rows) == 58 and rows[::2] == rows[1::2]
 
         @given(_pip_case())
         @settings(max_examples=6, deadline=None)
@@ -696,6 +705,179 @@ class TestSubCellMasks:
             keyed.unpersist()
 
         check()
+
+
+def _cover_path_reference(spark, points, polygons, keep, x_min, x_max, y_min, y_max,
+                          max_depth, tile_level):
+    """``point_in_polygon_join(edge_exact=True)`` as it was built before
+    it joined the default table, the reference: a broadcast (tile,
+    __poly_idx) cover of every polygon's bbox, and every candidate pair
+    refined by the kernel in one mapInPandas."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from cuspatial_spark.functions import inside_aoi
+    from cuspatial_spark.kernels.pip import point_in_polygon_pairs
+    from cuspatial_spark.plans import assign_tiles, tiles_covering_bboxes
+    from cuspatial_spark.plans.tile_join import PIP_JOIN_SCHEMA_SUFFIX
+
+    scale = max(x_max - x_min, y_max - y_min) / ((1 << max_depth) + 2)
+    need = list(dict.fromkeys(keep + ["x", "y"]))
+    pts = assign_tiles(
+        points.where(inside_aoi("x", "y", x_min, x_max, y_min, y_max)).select(*need),
+        "x", "y", x_min, x_max, y_min, y_max, scale, max_depth, tile_level,
+    )
+    bbox_idx, tiles = tiles_covering_bboxes(
+        *polygons.bounding_boxes(), x_min, y_min, scale, max_depth, tile_level
+    )
+    poly_tiles = spark.createDataFrame(pa.table({"tile": tiles, "__poly_idx": bbox_idx}))
+    candidates = pts.join(F.broadcast(poly_tiles), on="tile").select(*need, "__poly_idx")
+    out_schema = StructType([points.schema[c] for c in keep] + PIP_JOIN_SCHEMA_SUFFIX)
+
+    def refine_fn(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            hits = point_in_polygon_pairs(
+                pdf["x"].to_numpy(), pdf["y"].to_numpy(), pdf["__poly_idx"].to_numpy(),
+                polygons.part_offsets, polygons.ring_offsets, polygons.x, polygons.y,
+            )
+            out = pdf.loc[hits, keep].copy()
+            out["polygon_id"] = polygons.ids[pdf["__poly_idx"].to_numpy()[hits]]
+            yield out
+
+    return candidates.mapInPandas(refine_fn, schema=out_schema)
+
+
+# The tall L: its vertical edge (2, 5)-(2, 7.5) puts every point with
+# x == 2 outside under the kernel's on-edge rule, also in the lower arm,
+# whose tile rows' band lists do not hold that edge.
+_TALL_L = ([0.5, 7.5, 7.5, 2.0, 2.0, 0.5], [0.5, 0.5, 5.0, 5.0, 7.5, 7.5])
+
+
+@st.composite
+def _edge_exact_case(draw):
+    """``_mask_case``'s grid and layer (integer grid, a hole, unclosed
+    rings, NaN and +-inf vertices, a vertex at 1e15, points on and next
+    to edges, vertices and the grid's boundaries, and at x_max / y_max,
+    tile_level == max_depth among the grids) plus the tall L, a copy of
+    it under the same id, a polygon with no ring and one with an empty
+    ring; ids permuted.  Extra points lie on the line through every
+    vertical edge, on every vertex and at x == 2 along the L."""
+    from cuspatial_spark.geometry import PolygonArrays
+
+    polys, grid, pdf = draw(_mask_case())
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    y_min = grid["y_min"]
+    lx, ly = np.asarray(_TALL_L[0]), np.asarray(_TALL_L[1]) + y_min
+    n, v = len(polys), len(polys.x)
+    layer = PolygonArrays(
+        np.r_[polys.part_offsets, n + np.array([1, 2, 2, 3])],
+        np.r_[polys.ring_offsets, v + 6, v + 12, v + 12],
+        np.r_[polys.x, lx, lx], np.r_[polys.y, ly, ly],
+    )
+    ids = rng.permutation(2 * len(layer))[: len(layer)]
+    ids[n + 1] = ids[n]  # the L's copy
+    layer.ids = ids
+
+    seg_x, seg_y = layer.x, layer.y
+    prev = np.roll(np.arange(len(seg_x)), 1)  # cross-ring pairs only add points
+    vertical = np.unique(seg_x[(seg_x == seg_x[prev]) & np.isfinite(seg_x)])
+    vertical = vertical[(vertical >= 0) & (vertical <= 8)]
+    k = 8
+    px = [np.repeat(vertical, k), layer.x, np.full(40, 2.0)]
+    py = [rng.uniform(y_min, y_min + 8, k * len(vertical)), layer.y,
+          y_min + np.linspace(0, 8, 40)]
+    extra = pd.DataFrame({"x": np.concatenate(px), "y": np.concatenate(py)})
+    extra = extra[np.isfinite(extra["x"]) & np.isfinite(extra["y"])]
+    pdf = pd.concat([pdf[["x", "y"]], extra], ignore_index=True)
+    pdf.insert(0, "pid", np.arange(len(pdf)))
+    return layer, grid, pdf
+
+
+class TestEdgeExact:
+    def test_matches_cover_path(self, spark):
+        """``edge_exact=True`` (the default join, then the kernel over
+        its matched pairs) returns the reference cover path's rows."""
+        from cuspatial_spark.plans import point_in_polygon_join
+
+        @given(_edge_exact_case())
+        @settings(max_examples=8, deadline=None)
+        def check(case):
+            polys, grid, pdf = case
+            pts = spark.createDataFrame(pdf).repartition(3)
+            got = point_in_polygon_join(
+                pts, polys, keep_columns=["pid"], edge_exact=True, **grid
+            )
+            want = _cover_path_reference(spark, pts, polys, ["pid"], **grid)
+            want = sorted(tuple(r) for r in want.collect())
+            assert len(want) > 0
+            assert sorted(tuple(r) for r in got.collect()) == want
+
+        check()
+
+    def test_vertical_edge_line_is_outside(self, spark):
+        """A point exactly on the line through a vertical edge, away
+        from the edge, is outside for the kernel and ``edge_exact=True``
+        and inside for the default ray cast."""
+        from cuspatial_spark.geometry import PolygonArrays
+        from cuspatial_spark.kernels.pip import point_in_polygon_pairs
+        from cuspatial_spark.plans import point_in_polygon_join
+
+        lx = np.array([0.0, 8, 8, 2, 2, 0])
+        ly = np.array([0.0, 0, 1, 1, 30, 30])
+        assert not point_in_polygon_pairs([2.0], [0.5], [0], [0, 1], [0, 6], lx, ly)[0]
+        layer = PolygonArrays([0, 1], [0, 6], lx, ly, ids=[9])
+        pts = spark.createDataFrame(pd.DataFrame(
+            {"pid": [0, 1], "x": [2.0, 3.0], "y": [0.5, 0.5]}
+        ))
+        kw = dict(x_min=0, x_max=32, y_min=0, y_max=32, max_depth=10, tile_level=3)
+        exact = point_in_polygon_join(pts, layer, keep_columns=["pid"], edge_exact=True, **kw)
+        default = point_in_polygon_join(pts, layer, keep_columns=["pid"], **kw)
+        assert sorted(tuple(r) for r in exact.collect()) == [(1, 9)]
+        assert sorted(tuple(r) for r in default.collect()) == [(0, 9), (1, 9)]
+
+    def test_subnormal_segment_follows_the_ray_cast(self, spark):
+        """A segment whose run and rise are both subnormal: the join's
+        ray cast counts it, the kernel skips it as zero-length.  At y = 0
+        left of the square it closes the ring, so the default and exact
+        paths leave (-1, 0) out, where the cover path keeps it."""
+        from cuspatial_spark.geometry import PolygonArrays
+        from cuspatial_spark.plans import point_in_polygon_join
+
+        d = 1e-323
+        layer = PolygonArrays([0, 1], [0, 5], [0.0, 4, 4, 0, d], [0.0, 0, 4, 4, d])
+        pts = spark.createDataFrame(pd.DataFrame(
+            {"pid": [0, 1], "x": [-1.0, 2.0], "y": [0.0, 2.0]}
+        ))
+        kw = dict(x_min=-2, x_max=6, y_min=-2, y_max=6, max_depth=8, tile_level=1)
+        rows = lambda df: sorted(tuple(r) for r in df.collect())
+        assert rows(_cover_path_reference(spark, pts, layer, ["pid"], **kw)) == [(0, 0), (1, 0)]
+        for exact in (False, True):
+            got = point_in_polygon_join(pts, layer, keep_columns=["pid"], edge_exact=exact, **kw)
+            assert rows(got) == [(1, 0)]
+
+    def test_float_columns_keep_the_double_prefilter(self, spark):
+        """FloatType x / y: the kernel casts the polygon to float32, the
+        join's ray cast works in double.  A point the float32 kernel
+        puts inside and the double ray cast outside gets no row on the
+        exact path, where the cover path kept it."""
+        from cuspatial_spark.geometry import PolygonArrays
+        from cuspatial_spark.kernels.pip import point_in_polygon_pairs
+        from cuspatial_spark.plans import point_in_polygon_join
+
+        tx = [100.75784706327335, 100.67276055061573, 100.20590988238547]
+        ty = [100.53599195821668, 100.7086717127055, 100.92661650641331]
+        layer = PolygonArrays([0, 1], [0, 3], tx, ty)
+        px, py = np.float32([100.72998809814453, 100.5]), np.float32([100.59253692626953, 100.75])
+        assert point_in_polygon_pairs(px, py, [0, 0], [0, 1], [0, 3], tx, ty).all()
+        pts = spark.createDataFrame(pd.DataFrame({"pid": [0, 1], "x": px, "y": py}),
+                                    "pid long, x float, y float")
+        kw = dict(x_min=100, x_max=101, y_min=100, y_max=101, max_depth=10, tile_level=2)
+        rows = lambda df: sorted(tuple(r) for r in df.collect())
+        assert rows(_cover_path_reference(spark, pts, layer, ["pid"], **kw)) == [(0, 0), (1, 0)]
+        exact = point_in_polygon_join(pts, layer, keep_columns=["pid"], edge_exact=True, **kw)
+        assert rows(exact) == [(1, 0)]
 
 
 class TestStreaming:

@@ -159,18 +159,28 @@ class TestFlagshipJoinPlan:
         assert [n[1] for n in below if not n[2]] == [poly_df.columns]
 
     def test_kernel_refine_single_arrow_stage(self, spark, pts, polys):
-        """The exact-edge kernel path: same broadcast filter, exactly
-        one Arrow (MapInPandas) refine stage, still no point shuffle."""
+        """The exact-edge path is the default plan plus one filter: the
+        broadcast side is the default's (tile, polygon_id, __inside,
+        __edge, __segs) table, and exactly one Arrow (MapInPandas)
+        stage sits above the join and its JVM ray cast; no second
+        (tile, __poly_idx) cover, still no point shuffle."""
         from cuspatial_spark.plans import point_in_polygon_join
 
         out = point_in_polygon_join(
             pts, polys, x_min=0, x_max=8, y_min=0, y_max=8,
             max_depth=12, tile_level=4, edge_exact=True,
         )
+        optimized = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation [tile#" in optimized and "__inside" in optimized, optimized
         plan = _plan(out)
         assert plan.count("MapInPandas") == 1
         assert "BroadcastHashJoin" in plan
         assert "Exchange hashpartitioning" not in plan
+        assert "__poly_idx" not in plan and "__poly_idx" not in optimized
+        lines = plan.splitlines()
+        top = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+        below = "\n".join(lines[top + 1:])
+        assert "BroadcastHashJoin" in below and "aggregate(" in below, plan
 
     def test_assign_tiles_pure_codegen(self, spark, pts):
         """Morton/tile keys are Catalyst bit expressions: a single

@@ -5,12 +5,14 @@ compare row count, schema width, and order-insensitive values."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
@@ -53,9 +55,11 @@ def main():
     qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
+        checked += 1
         try:
             got = fn(spark, SF_DIR).toPandas()
         except Exception as e:
@@ -100,7 +104,7 @@ def main():
         else:
             print(f"[OK        ] {name}: {len(g)} rows")
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} queries match")
+    print(f"\n{checked - len(failures)}/{checked} queries match")
     spark.stop()
     sys.exit(1 if failures else 0)
 

@@ -2,7 +2,7 @@
 
 Usage (north_rule launch shape):
 
-    cd /root/repo && zip -qr /tmp/cuspatial_spark.zip cuspatial_spark
+    cd <repo root> && zip -qr /tmp/cuspatial_spark.zip cuspatial_spark
     spark-submit --master local[32] \
         --py-files /tmp/cuspatial_spark.zip \
         tools/run_flagship.py \
@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -41,7 +42,7 @@ def main() -> None:
     from cuspatial_spark.plans import point_in_polygon_join
     from cuspatial_spark.sources import geotag_points, synth_webpages
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as E
 
     polygons = PolygonArrays(E.POLY_OFFSETS, E.RING_OFFSETS, E.POLY_X, E.POLY_Y)
